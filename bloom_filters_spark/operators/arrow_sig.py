@@ -368,8 +368,10 @@ def fused_band_rows(
     signature matrix exists only as a transient numpy array inside the
     kernel, so nothing wide is persisted, cached, or shuffled — the band
     table is 12-byte rows at the default width.  The verify stage
-    recomputes signatures just for the (rare) docs that appear in a
-    candidate pair; determinism of the kernel guarantees they match the
+    recomputes signatures just for the docs that appear in a candidate
+    pair — on crawl batches most of them (4,398 of 4,930 docs on the
+    benchmark's small-batches corpus), since 30-50% of fetches are
+    exact copies; determinism of the kernel guarantees they match the
     ones banded here.
 
     ``hash_bits=32`` (the default, adopted round 5 after the paired

@@ -29,10 +29,14 @@ def connected_components(
     Adaptive execution: the verified-pair edge set is usually tiny
     relative to the corpus, so when it fits (<= driver_edge_threshold
     rows) we collect it and run union-find on the driver — O(E α(E))
-    with zero shuffles — and broadcast the label map back.  Beyond the
-    threshold we fall back to distributed hash-min label propagation
-    (O(diameter) shuffled iterations).  Set the threshold to 0 to force
-    the distributed path.
+    with zero shuffles — and broadcast the label map back.  The size
+    check and the collect are one round trip: up to
+    ``driver_edge_threshold + 1`` edges arrive in a single Arrow
+    collect, and one edge too many means the fallback, distributed
+    hash-min label propagation (O(diameter) shuffled iterations).  A
+    caller that already knows the edge count passes ``n_edges`` to skip
+    the collect when it is above the threshold.  Set the threshold to 0
+    to force the distributed path.
     """
     # the Arrow driver solve assumes int64-castable ids; any other id
     # type (string urls, decimals) takes the type-agnostic labelprop
@@ -41,18 +45,24 @@ def connected_components(
         t in ("bigint", "int", "smallint", "tinyint")
         for c, t in edges.select("id1", "id2").dtypes
     )
-    if integral and driver_edge_threshold > 0:
-        if n_edges is None:
-            # cheap upper-bound probe: count() on the edge set (it is
-            # about to be materialized for iteration anyway); callers
-            # that already materialized the edges pass n_edges to skip
-            n_edges = edges.limit(driver_edge_threshold + 1).count()
-        if n_edges <= driver_edge_threshold:
-            return _components_driver(edges, vertices, id_col)
+    if (
+        integral
+        and driver_edge_threshold > 0
+        and (n_edges is None or n_edges <= driver_edge_threshold)
+    ):
+        tbl = (
+            edges.select("id1", "id2")
+            .limit(driver_edge_threshold + 1)
+            .toArrow()
+        )
+        if tbl.num_rows <= driver_edge_threshold:
+            return _components_driver(
+                tbl, edges.sparkSession, vertices, id_col
+            )
     return _components_labelprop(edges, vertices, max_iter, id_col)
 
 
-def _components_driver(edges: DataFrame, vertices: DataFrame | None,
+def _components_driver(tbl, spark, vertices: DataFrame | None,
                        id_col: str) -> DataFrame:
     """Driver-side solve, Arrow end to end: the edge list arrives as two
     int64 Arrow columns (16 bytes/edge — 32 MB at the 2M-edge threshold,
@@ -62,7 +72,6 @@ def _components_driver(edges: DataFrame, vertices: DataFrame | None,
     import numpy as np
     import pandas as pd
 
-    tbl = edges.select("id1", "id2").toArrow()
     # a null id would arrive as float64 NaN and astype(int64) turns it
     # into an arbitrary value (typically INT64_MIN), which np.unique
     # then treats as a real node that can win min-label for a whole
@@ -90,7 +99,6 @@ def _components_driver(edges: DataFrame, vertices: DataFrame | None,
         lab = np.minimum(lab, lab[lab])
         if np.array_equal(lab, prev):
             break
-    spark = edges.sparkSession
     pdf = pd.DataFrame({id_col: nodes, "cluster_id": nodes[lab]})
     if len(pdf):
         lbl_df = spark.createDataFrame(pdf)

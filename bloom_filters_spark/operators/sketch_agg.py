@@ -67,10 +67,12 @@ def _partition_sketches(df: DataFrame, col: str, make, add_batch,
     """mapInPandas: one sketch per partition → rows of sketch JSON bytes.
 
     ``integral_str``: the column is integral but the sketch's element
-    domain is str (CMS point queries arrive as strings) — normalize
-    through int() first, because a batch containing nulls arrives as
-    float64 and ``str(5.0)`` would silently hash a different element
-    than the query-side ``str(5)``."""
+    domain is str (CMS point queries arrive as strings).  A batch
+    containing nulls arrives as float64, where ``str(5.0)`` would hash
+    a different element than the query-side ``str(5)`` and ids above
+    2^53 are already rounded — so the values ride the same exact
+    uint32-halves transport as ``as_u64`` and are stringified from the
+    rebuilt int64."""
 
     def build(batches):
         sketch = None
@@ -78,7 +80,8 @@ def _partition_sketches(df: DataFrame, col: str, make, add_batch,
             if as_u64:
                 _, vals = _u64_from_split(pdf[_U64_HI], pdf[_U64_LO])
             elif integral_str:
-                vals = [str(int(v)) for v in pdf[col].dropna().tolist()]
+                _, exact = _u64_from_split(pdf[_U64_HI], pdf[_U64_LO])
+                vals = [str(v) for v in exact.tolist()]
             else:
                 vals = [str(v) for v in pdf[col].dropna().tolist()]
             if len(vals) == 0:
@@ -89,7 +92,11 @@ def _partition_sketches(df: DataFrame, col: str, make, add_batch,
         if sketch is not None:
             yield pd.DataFrame({"sketch": [sketch.to_bytes()]})
 
-    projected = df.select(*_u64_split_cols(col)) if as_u64 else df.select(col)
+    projected = (
+        df.select(*_u64_split_cols(col))
+        if as_u64 or integral_str
+        else df.select(col)
+    )
     return projected.mapInPandas(build, "sketch binary")
 
 

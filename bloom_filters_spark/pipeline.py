@@ -270,14 +270,20 @@ def verified_pairs(
     """Candidate pairs → pairs with jaccard column(s), filtered at
     cfg.threshold on the decision column.
 
-    Join strategy: the set of docs participating in any candidate pair
-    is usually tiny relative to the corpus (dups are rare), so we first
-    semi-join the signature table down to participants, then join pairs
-    to that reduced side.  With AQE the reduced side typically falls
-    under the broadcast threshold → two broadcast joins instead of two
-    full shuffles of the (wide) signature table.  At adversarial pair
-    volumes AQE falls back to a shuffle join on the reduced table —
-    still strictly less data than joining the full signature table.
+    Join strategy: the signature table is first semi-joined down to
+    the docs participating in a candidate pair, then joined to the
+    pairs twice (once per endpoint).  On crawl batches that is most of
+    the batch, not a rare few: 4,398 of 4,930 docs on the benchmark's
+    ``small-batches`` corpus (seed 31), where 30-50% of fetches are
+    exact copies.  Both endpoint joins read ONE ``side`` plan — the renames happen on
+    the pairs side — so Spark plans a single broadcast of it and reuses
+    it (``ReusedExchange``) for the second join: the participant
+    signatures are computed once, not once per endpoint.  AQE reuses an
+    exchange only when no cached relation sits under it, so callers
+    materialize the candidates with a local checkpoint, not a cache.
+    At adversarial pair volumes AQE falls back to a shuffle join on the
+    reduced table — still strictly less data than joining the full
+    signature table, and its shuffle of the side is reused the same way.
     """
     need_shingles = cfg.verify in ("exact", "both")
     if sigs_restricted:
@@ -292,17 +298,25 @@ def verified_pairs(
             .distinct()
         )
         side = sigs.join(ids, id_col, "left_semi")
-    s1 = side.select(
-        F.col(id_col).alias("id1"),
-        F.col("signature").alias("sig1"),
-        *([F.col("shingles").alias("sh1")] if need_shingles else []),
+    side = side.select(
+        id_col, "signature", *(["shingles"] if need_shingles else [])
     )
-    s2 = side.select(
-        F.col(id_col).alias("id2"),
-        F.col("signature").alias("sig2"),
-        *([F.col("shingles").alias("sh2")] if need_shingles else []),
-    )
-    joined = pairs.join(s1, "id1").join(s2, "id2")
+
+    def endpoint(df, n):
+        # key endpoint idn by id_col, join, then name the side columns
+        # sign / shn on the joined frame: the side plan is never renamed.
+        # A left join, so only the side can be the broadcast build side
+        # (an inner join would broadcast the smaller pairs table into
+        # the first join and the side into the second); a pair whose
+        # endpoint has no signature gets a NULL decision below and is
+        # dropped by the threshold filter exactly as the inner join did
+        return df.withColumnRenamed(f"id{n}", id_col).join(
+            side, id_col, "left"
+        ).withColumnsRenamed(
+            {id_col: f"id{n}", "signature": f"sig{n}", "shingles": f"sh{n}"}
+        )
+
+    joined = endpoint(endpoint(pairs, 1), 2)
 
     out_cols = [F.col("id1"), F.col("id2")]
     est = estimated_jaccard_expr(F.col("sig1"), F.col("sig2"), cfg.num_hashes)
@@ -496,6 +510,17 @@ def pages_near_dup(
     return labeled.join(canon, "cluster_id").select(url_col, "cluster_url")
 
 
+def _exchange_free_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df`` when its physical plan holds no
+    exchange (a scan plus narrow operators), else None.  Only such a
+    plan answers without running anything: asking an exchange-bearing
+    plan for its RDD runs its shuffles under AQE."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in plan or "AdaptiveSparkPlan" in plan:
+        return None
+    return df.rdd.getNumPartitions()
+
+
 def near_dup_pipeline(
     df: DataFrame,
     cfg: NearDupConfig | None = None,
@@ -509,18 +534,21 @@ def near_dup_pipeline(
     for testing/metrics.
     """
     cfg = cfg or NearDupConfig()
+    # decided on the caller's plan, before the pre-dedup join below adds
+    # an exchange to it
+    n_in = _exchange_free_partitions(df)
 
     # one memoized corpus count shared by the pair-mode probe and hot-
     # shingle detection: cheap (footer stats) on a raw parquet scan, but
     # a full plan execution once df is a derived frame (canonical-url
-    # collapse, prededup) — never pay it twice.  Late-bound `df` on
-    # purpose: both consumers run after the final rebinding of df in
-    # their path, so they see the same frame.
+    # collapse, prededup) — never pay it twice.  Late-bound `vertices`
+    # on purpose: both consumers run after it is bound below, so they
+    # count the deduplicated frame, without the spreading shuffle.
     _n_docs: list = [None]
 
     def _count():
         if _n_docs[0] is None:
-            _n_docs[0] = df.count()
+            _n_docs[0] = vertices.count()
         return _n_docs[0]
 
     def _pair_mode():
@@ -564,13 +592,23 @@ def near_dup_pipeline(
             rep = fps.filter(F.col("_fp").isNotNull()).groupBy("_fp").agg(
                 F.min(id_col).alias("_rep")
             )
+            # checkpointed, not cached, for the same reason as the
+            # candidates below: it sits under the verify side's plan
             doc_rep = fps.join(rep, "_fp", "left").select(
                 id_col, F.coalesce("_rep", F.col(id_col)).alias("_rep")
-            ).persist()
+            ).localCheckpoint(eager=False)
             rep_ids = doc_rep.filter(F.col(id_col) == F.col("_rep")).select(
                 id_col
             )
             df = df.join(rep_ids, id_col, "left_semi")
+    vertices = df.select(id_col)
+    # a small batch is often one file with one row group, so one scan
+    # partition: spread it round-robin over every task slot, or the
+    # text kernels run as one task while the other slots idle.  A no-op
+    # at corpus scale, where the scan already has enough partitions.
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if n_in is not None and n_in < parallelism:
+        df = df.repartition(parallelism)
     sigs = None
     sigs_restricted = False
     if cfg.shingle_impl == "arrow" and cfg.fuse_bands:
@@ -579,8 +617,10 @@ def near_dup_pipeline(
         # persisting/caching wide array<int> columns was measured to
         # dominate the whole pipeline on bandwidth-bound hosts (the
         # columnar cache serializes arrays per row).  Signatures are
-        # recomputed ONLY for docs that appear in a candidate pair
-        # (dups are rare, so this is ~1% of the corpus).
+        # recomputed ONLY for docs that appear in a candidate pair.  On
+        # crawl batches that is most docs (4,398 of 4,930 on the
+        # benchmark's small-batches corpus), so the verify join computes
+        # them once for both endpoints (see verified_pairs).
         from bloom_filters_spark.operators.arrow_sig import (
             detect_hot_shingles,
             fused_band_rows,
@@ -598,9 +638,14 @@ def near_dup_pipeline(
             cfg.shingle_size, cfg.max_value, id_col, text_col,
             hot_shingles=hot, hash_bits=cfg.resolved_band_hash_bits,
         )
+        # a local checkpoint, not a cache, materialized by the count:
+        # AQE reuses an exchange only over plain scans, and a cached
+        # relation under the participant side would keep verify's two
+        # joins from sharing one broadcast of it (blocks are GC-cleaned
+        # with the frame, as in substring_dup_pairs)
         candidates = candidate_pairs(
             bands, cfg.max_band_group, id_col, mode=_pair_mode()
-        ).persist()
+        ).localCheckpoint(eager=False)
         n_cands = candidates.count()
         ids = (
             candidates.select(F.col("id1").alias(id_col))
@@ -615,14 +660,15 @@ def near_dup_pipeline(
             ids = F.broadcast(ids)
         participants = df.join(ids, id_col, "left_semi")
         # participants' signatures must prune with the SAME hot set the
-        # band kernel used, or verify-side estimates drift from banding
+        # band kernel used, or verify-side estimates drift from banding.
+        # Not cached: verify reads them once, through one reused broadcast
         sigs = signatures_arrow(
             participants, cfg.factory(),
             shingle_size=cfg.shingle_size, max_value=cfg.max_value,
             id_col=id_col, text_col=text_col,
             need_shingles=cfg.verify in ("exact", "both"),
             hot_shingles=hot,
-        ).persist()
+        )
         sigs_restricted = True
     else:
         sigs = signatures(df, cfg, id_col, text_col)
@@ -637,17 +683,14 @@ def near_dup_pipeline(
         candidates = candidate_pairs(
             bands, cfg.max_band_group, id_col, mode=_pair_mode()
         ).persist()
+    # the (tiny) verified edge set is cached so the label-propagation
+    # fallback can iterate over it; the driver solve collects it in
+    # the same pass that fills the cache.  At cluster scale this
+    # boundary is the pairs checkpoint table (checkpoint.py).
     pairs = verified_pairs(
         candidates, sigs, cfg, id_col, sigs_restricted=sigs_restricted
     ).persist()
-    # materialize the (tiny) verified edge set once; everything upstream
-    # (signatures, band shuffle) is then releasable before the iterative /
-    # driver-side components stage.  At cluster scale this boundary is
-    # the pairs checkpoint table (checkpoint.py).
-    n_pairs = pairs.count()
-    clusters = connected_components(
-        pairs, vertices=df.select(id_col), id_col=id_col, n_edges=n_pairs
-    )
+    clusters = connected_components(pairs, vertices=vertices, id_col=id_col)
     if doc_rep is not None:
         # re-expand collapsed exact duplicates: every doc inherits its
         # representative's cluster (rep ids are per-group minima, so
@@ -671,8 +714,6 @@ def near_dup_pipeline(
     # union-find collects the edges; labelprop localCheckpoints), so the
     # cached edge set can be released too
     pairs.unpersist()
-    if doc_rep is not None:
-        doc_rep.unpersist()
     return clusters
 
 
@@ -802,15 +843,17 @@ def near_dup_against(
             corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
             cfg.shingle_size, cfg.max_value, id_col, text_col,
         )
-    # persist + count: the candidate set is consumed by the id union
-    # (twice), the semi-join, and the pair join inside verified_pairs —
-    # without a materializing action the persist is a no-op and the
-    # band join would re-execute for each of them.  The count also
-    # gates the broadcast exactly like near_dup_pipeline does.
+    # local checkpoint + count: the candidate set is consumed by the id
+    # union (twice), the semi-join, and the pair join inside
+    # verified_pairs — materialized once so the band join does not
+    # re-execute for each of them, and not cached, so the two verify
+    # joins share one broadcast of the participant signatures (see
+    # near_dup_pipeline).  The count also gates the broadcast exactly
+    # like near_dup_pipeline does.
     cands = incremental_candidates(
         new_docs, corpus_docs, cfg, id_col, text_col, corpus_bands,
         hot_shingles,
-    ).persist()
+    ).localCheckpoint(eager=False)
     n_cands = cands.count()
     participants = new_docs.select(id_col, text_col).unionByName(
         corpus_docs.select(id_col, text_col)
@@ -830,12 +873,10 @@ def near_dup_against(
         need_shingles=cfg.verify in ("exact", "both"),
         hot_shingles=hot_shingles,
     )
-    # materialize the (tiny) verified edge set so the candidate cache —
-    # the big intermediate — is released here instead of lingering
-    # until LRU eviction in a long-lived session
+    # materialize the (tiny) verified edge set once: later actions read
+    # it, not the candidate checkpoint and the signature kernel
     out = verified_pairs(
         cands, sigs, cfg, id_col, sigs_restricted=True
     ).persist()
     out.count()
-    cands.unpersist()
     return out

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -93,20 +94,22 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    active = SparkSession.getActiveSession()
+    existing = SparkContext._active_spark_context
     spark = builder.getOrCreate()
-    if active is not None and spark.sparkContext.master != master:
+    if existing is not None:
         # getOrCreate returned the pre-existing session: static confs
         # (master, cores, shuffle buffers, driver JVM flags) from THIS
-        # call were silently ignored — an A/B harness that relies on
-        # them would measure the old config twice with no error
+        # call were silently ignored, even when the master matches — an
+        # A/B harness that relies on them would measure the old config
+        # twice with no error
         import warnings
 
         warnings.warn(
-            f"get_spark: an active session with master="
-            f"{spark.sparkContext.master!r} already exists; requested "
-            f"master {master!r} and other static confs were IGNORED — "
-            "stop the old session first for a fresh-config JVM",
+            f"get_spark: a session with master="
+            f"{spark.sparkContext.master!r} already exists (requested "
+            f"{master!r}); its static confs stay and those of this call "
+            "were IGNORED — stop the old session first for a "
+            "fresh-config JVM",
             RuntimeWarning,
         )
     spark.sparkContext.setLogLevel("WARN")

@@ -196,6 +196,25 @@ def test_membership_exact_above_2_53_with_nulls(spark):
         assert len(kept & set(near_misses)) <= 1
 
 
+def test_cms_bigint_exact_above_2_53_with_nulls(spark):
+    """CMS builds stringify integral keys (point queries arrive as
+    strings).  A build batch holding a NULL arrives as float64, where
+    2^53 + 1 is already rounded to 2^53 — the build must count the
+    exact string the query side asks for, not the rounded one."""
+    from bloom_filters_spark.operators.sketch_agg import build_cms
+
+    big = [2**53 + 1, 2**62 + 5, -(2**61) - 7]
+    df = spark.createDataFrame(
+        [(v,) for v in big] + [(None,), (7,)], "k long"
+    ).repartition(1)
+    cms = build_cms(df, "k")
+    for v in big + [7]:
+        assert cms.count(str(v)) == 1, v
+    # the float64-rounded neighbours were never inserted
+    for v in (2**53, 2**62, -(2**61)):
+        assert cms.count(str(v)) == 0, v
+
+
 def test_simhash_arrow_matches_python_oracle(spark):
     """The production mapInArrow SimHash kernel must be bit-equal to the
     scalar first-principles oracle (simhash_py) on messy inputs —

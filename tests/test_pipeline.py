@@ -551,6 +551,102 @@ def test_near_dup_against_increment(spark):
     assert got2 == got
 
 
+def _executed_nodes(df):
+    """(node name, description) of every node in ``df``'s executed
+    physical plan: AQE's current plan, through its query stages and into
+    the cached plan when ``df`` was persisted."""
+    nodes = []
+
+    def walk(p):
+        name = p.nodeName()
+        nodes.append((name, p.simpleString(100)))
+        if name == "AdaptiveSparkPlan":
+            kids = [p.executedPlan()]
+        elif name.endswith("QueryStage"):
+            kids = [p.plan()]
+        elif name == "InMemoryTableScan":
+            kids = [p.relation().cachedPlan()]
+        else:
+            ch = p.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return nodes
+
+
+def test_near_dup_against_signs_participants_once(spark):
+    """Both verify joins read one exchange of the participant
+    signatures (a broadcast, or a shuffle where AQE keeps a sort-merge
+    join): the signature kernel appears once in the executed plan and
+    the second join reuses the side's exchange."""
+    from bloom_filters_spark.pipeline import near_dup_against
+
+    base = " ".join(f"tok{i}" for i in range(30))
+    corpus = spark.createDataFrame(
+        [(1, base), (2, "completely different words entirely here today"),
+         (3, base + " extra")],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [(10, " ".join(f"tok{i}" for i in range(29)) + " tokX")],
+        "doc_id long, text string",
+    )
+    for verify in ("estimate", "exact"):
+        cfg = NearDupConfig(threshold=0.7, num_hashes=128, bands=64,
+                            verify=verify)
+        out = near_dup_against(new, corpus, cfg)
+        assert {(r["id1"], r["id2"]) for r in out.collect()} == {
+            (10, 1), (10, 3)
+        }
+        nodes = _executed_nodes(out)
+        sig_kernels = [d for n, d in nodes
+                       if n == "MapInArrow" and "signature" in d]
+        assert len(sig_kernels) == 1, sig_kernels
+        # the side's columns, not the participant-id broadcast's
+        # (column pruning drops the signature in exact mode)
+        assert any(
+            n == "ReusedExchange" and ("signature" in d or "shingles" in d)
+            for n, d in nodes
+        )
+
+
+def test_pipeline_clusters_independent_of_input_partitioning(
+    spark, documents_texts
+):
+    """One input partition and seven give the same clusters, and the
+    one-partition input still runs the band kernel on every task slot."""
+    cfg = NearDupConfig(threshold=0.7)
+    df = spark.createDataFrame(
+        list(documents_texts.items()), "doc_id long, text string"
+    )
+    one = df.coalesce(1)
+
+    def labels(clusters):
+        return {r["doc_id"]: r["cluster_id"] for r in clusters.collect()}
+
+    clusters, stages = near_dup_pipeline(one, cfg, return_stages=True)
+    got = labels(clusters)
+    assert got == labels(near_dup_pipeline(df.repartition(7), cfg))
+    assert len(set(got.values())) < len(got)     # some cluster merged
+
+    sc = spark.sparkContext
+    group = "test-band-kernel-spread"
+    sc.setJobGroup(group, group)
+    try:
+        stages["bands"].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(tasks) >= sc.defaultParallelism, tasks
+
+
 def test_incremental_boilerplate_pruning_consistent(spark):
     """cfg.boilerplate_max_df on the incremental path: hot shingles are
     detected on the corpus and applied to BOTH sides, so a corpus doc
