@@ -2181,9 +2181,10 @@ def oracle_sql() -> dict[str, str]:
         # the SAME Python constants (Java-regex/RE2-shared syntax), so
         # replace-all ('g' flag on the RE2 side) and counts agree
         "pii_scrub": _pii_scrub_sql(),
-        # mirrors functions/url.py canonicalize_url_expr + the synthetic
-        # URL construction in q_url_canonical_dups; RE2 spells the
-        # backref '\\1' and needs the 'g' flag where Spark replaces all
+        # mirrors functions/url.py canonicalize_url_expr (control
+        # characters stripped first) + the synthetic URL construction in
+        # q_url_canonical_dups; RE2 spells the backref '\\1' and needs
+        # the 'g' flag where Spark replaces all
         "url_canonical_dups": r"""
           WITH u AS (
             SELECT doc_id,
@@ -2197,11 +2198,12 @@ def oracle_sql() -> dict[str, str]:
                     ELSE '/a/' || (doc_id % 5)::VARCHAR END) AS url
             FROM documents
           ), p AS (
-            SELECT doc_id, url,
-              lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-              regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '') AS hostraw,
-              regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest0
-            FROM u
+            SELECT doc_id, url, curl,
+              lower(regexp_extract(curl, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+              regexp_replace(lower(regexp_extract(curl, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '') AS hostraw,
+              regexp_extract(curl, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest0
+            FROM (SELECT *, regexp_replace(url, '[\x00-\x1f\x7f]', '', 'g') AS curl
+                  FROM u) u
           ), hp AS (
             SELECT *, CASE WHEN scheme = 'http'
                            THEN regexp_replace(regexp_replace(hostraw, '^www\.', ''), ':80$', '')
@@ -2234,7 +2236,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id,
               CASE WHEN scheme <> ''
                    THEN scheme || '://' || host || (CASE WHEN rc = '' THEN '/' ELSE rc END)
-                   ELSE regexp_replace(url, '#.*$', '') END AS canon_url
+                   ELSE regexp_replace(curl, '#.*$', '') END AS canon_url
             FROM r3
           )
           SELECT canon_url, count(*) AS n_docs, min(doc_id) AS min_doc
@@ -2261,11 +2263,12 @@ def oracle_sql() -> dict[str, str]:
               || '#d' || doc_id::VARCHAR AS url
             FROM documents
           ), p AS (
-            SELECT doc_id, text, url,
-              lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-              regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '') AS hostraw,
-              regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest0
-            FROM u
+            SELECT doc_id, text, url, curl,
+              lower(regexp_extract(curl, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+              regexp_replace(lower(regexp_extract(curl, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '') AS hostraw,
+              regexp_extract(curl, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest0
+            FROM (SELECT *, regexp_replace(url, '[\x00-\x1f\x7f]', '', 'g') AS curl
+                  FROM u) u
           ), hp AS (
             SELECT *, CASE WHEN scheme = 'http'
                            THEN regexp_replace(regexp_replace(hostraw, '^www\.', ''), ':80$', '')
@@ -2298,7 +2301,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, text, url,
               CASE WHEN scheme <> ''
                    THEN scheme || '://' || host || (CASE WHEN rc = '' THEN '/' ELSE rc END)
-                   ELSE regexp_replace(url, '#.*$', '') END AS canon_url
+                   ELSE regexp_replace(curl, '#.*$', '') END AS canon_url
             FROM r3
           ), rep AS (
             SELECT canon_url, min_by(text, url) AS rtext
@@ -2650,7 +2653,8 @@ def oracle_sql() -> dict[str, str]:
         # mirrors operators/dsir.py at bucket_hash='md5': same grams
         # (unigrams + adjacent bigrams of lower/trim/whitespace-split),
         # same md5-hex-prefix buckets, same add-one smoothing, same
-        # 6dp round, same (log_ratio desc, doc_id) top-50
+        # per-bucket 6dp fixed point and exact integer sum, same
+        # (log_ratio desc, doc_id) top-50
         "dsir_scores": r"""
           WITH toks AS (
             SELECT doc_id,
@@ -2679,12 +2683,14 @@ def oracle_sql() -> dict[str, str]:
                    (SELECT COALESCE(SUM(ct), 0) FROM tgt) AS t_total
           ), ratio AS (
             SELECT src.b,
-                   ln((COALESCE(ct, 0) + 1)::DOUBLE / (t_total + 256))
-                     - ln((cs + 1)::DOUBLE / (s_total + 256)) AS lr
+                   CAST(ROUND(
+                     (ln((COALESCE(ct, 0) + 1)::DOUBLE / (t_total + 256))
+                      - ln((cs + 1)::DOUBLE / (s_total + 256))) * 1e6
+                   ) AS BIGINT) AS lr_micro
             FROM src LEFT JOIN tgt USING (b) CROSS JOIN tot
           ), w AS (
             SELECT doc_id, SUM(c) AS n_grams,
-                   ROUND(SUM(c * lr), 6) AS log_ratio
+                   SUM(c * lr_micro) / 1e6 AS log_ratio
             FROM db JOIN ratio USING (b) GROUP BY 1
           ), sel AS (
             SELECT doc_id FROM w ORDER BY log_ratio DESC, doc_id LIMIT 50
@@ -2848,11 +2854,12 @@ def oracle_sql() -> dict[str, str]:
                     ELSE '/a/' || (doc_id % 5)::VARCHAR END) AS url
             FROM documents
           ), p AS (
-            SELECT doc_id, crawl_ts, url,
-              lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-              regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '') AS hostraw,
-              regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest0
-            FROM u
+            SELECT doc_id, crawl_ts, url, curl,
+              lower(regexp_extract(curl, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+              regexp_replace(lower(regexp_extract(curl, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '') AS hostraw,
+              regexp_extract(curl, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest0
+            FROM (SELECT *, regexp_replace(url, '[\x00-\x1f\x7f]', '', 'g') AS curl
+                  FROM u) u
           ), hp AS (
             SELECT *, CASE WHEN scheme = 'http'
                            THEN regexp_replace(regexp_replace(hostraw, '^www\.', ''), ':80$', '')
@@ -2885,7 +2892,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, crawl_ts,
               CASE WHEN scheme <> ''
                    THEN scheme || '://' || host || (CASE WHEN rc = '' THEN '/' ELSE rc END)
-                   ELSE regexp_replace(url, '#.*$', '') END AS canon_url
+                   ELSE regexp_replace(curl, '#.*$', '') END AS canon_url
             FROM r3
           ), rk AS (
             SELECT canon_url, doc_id, crawl_ts,

@@ -2,7 +2,8 @@
 (regexp extract/replace chains, codegen'd, no Python) so the column
 composes with scans and the DuckDB oracle can mirror it.
 
-Canonical form (the common CC-pipeline normalization):
+Canonical form (the common CC-pipeline normalization), after control
+characters (ASCII 0-31 and 127) are stripped:
 
 1. drop the ``#fragment``;
 2. lowercase scheme and host (path/query case preserved);
@@ -29,6 +30,7 @@ SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
 HOST_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
 REST_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)"
 TRACKING_RE = r"([?&])(utm_[A-Za-z0-9_]+|gclid|fbclid|ref)=[^&#]*"
+CONTROL_RE = r"[\x00-\x1f\x7f]"
 
 
 def host_expr(url: Column) -> Column:
@@ -59,6 +61,11 @@ def host_blocked_expr(url: Column, blocked_hosts) -> Column:
 
 
 def canonicalize_url_expr(url: Column) -> Column:
+    # control characters are not legal in a URL, and the chain below
+    # uses \x01/\x02 as sentinels: strip them once, up front, so a
+    # stray \x01 in the input can neither collide with a sentinel nor
+    # split one key into two
+    url = F.regexp_replace(url, CONTROL_RE, "")
     scheme = F.lower(F.regexp_extract(url, SCHEME_RE, 1))
     host = F.lower(F.regexp_extract(url, HOST_RE, 1))
     # drop userinfo@ (dedup keys identify the resource, not the
@@ -82,8 +89,8 @@ def canonicalize_url_expr(url: Column) -> Column:
     # the whole upstream chain once per reference and the generated
     # code re-evaluates every regexp several times per row — measured
     # ~1.6x slower on the canonical-clusters query.  \x01 marks the
-    # path/query boundary and \x02 the string start (control chars
-    # cannot appear in a legal URL); no RE2-unsupported lookarounds, so
+    # path/query boundary and \x02 the string start (control chars were
+    # stripped above); no RE2-unsupported lookarounds, so
     # the DuckDB oracle stays mirrorable.
     path = F.regexp_extract(rest, r"^([^?]*)", 1)
     query = F.regexp_replace(rest, r"^[^?]*\??", "")  # '' when no '?'

@@ -17,17 +17,17 @@ This module instead runs ``mapInArrow`` over the raw Arrow buffers:
   text bytes (zero-copy) → ASCII-lowercase → flat whitespace
   tokenization → per-token Horner byte hash (vectorized over the whole
   batch via a length-sorted ragged loop) → w-token rolling shingle
-  combine (``ROLL_PRIME`` Horner, same recurrence as
-  ``shingles.combine_token_hashes``) → MinHash affine-permutation fold
-  with a Mersenne-2^31-1 reduction → flat int32 signature buffer →
-  Arrow ListArray.
+  combine (``ROLL_PRIME`` Horner: ``acc = acc*ROLL_PRIME + t``) →
+  MinHash affine-permutation fold with a Mersenne-2^31-1 reduction →
+  flat int32 signature buffer → Arrow ListArray.
 
 The MinHash semantics are the reference's ``sig[i] = min((a_i*x + b_i)
 mod c)`` (``/root/reference/src/sketch/min-hash.ts:34-36,94-110``);
-only the *shingle → integer* map differs from the ``token_hash`` /
-``string`` impls (any deterministic uniform map into [0, max_value)
-preserves the MinHash/Jaccard statistics; ``arrow_shingle_set_py`` below
-is the bit-exact Python oracle for this one).
+only the *shingle → integer* map differs from the string-shingle oracle
+path (``shingles.shingles_expr``: any deterministic uniform map into
+[0, max_value) preserves the MinHash/Jaccard statistics;
+``arrow_shingle_set_py`` below is the bit-exact Python oracle for this
+one).
 
 Why the Mersenne fold: ``np.remainder`` on int64 uses the scalar divide
 unit and only scales ~0.74 from 8→32 procs on this box, while pure ALU
@@ -138,10 +138,9 @@ def _shingle_hashes(tok_hashes: np.ndarray, tok_doc: np.ndarray,
                     n_docs: int, w: int, max_value: int):
     """Flat w-token rolling combine → shingle hashes in [0, max_value).
 
-    Same Horner recurrence as ``shingles.combine_token_hashes``
-    (``acc = acc*ROLL_PRIME + t``) over each doc's consecutive token
-    hashes; docs with 0 < n_tokens < w yield ONE shingle over all their
-    tokens.  Duplicates are NOT removed — elementwise min is invariant
+    Horner recurrence ``acc = acc*ROLL_PRIME + t`` over each doc's
+    consecutive token hashes; docs with 0 < n_tokens < w yield ONE
+    shingle over all their tokens.  Duplicates are NOT removed — elementwise min is invariant
     under multiset repeats, so the MinHash signature is unchanged (use
     ``np.unique`` per doc only when the caller needs shingle SETs).
 

@@ -21,8 +21,9 @@ Spark-first shape (no per-row Python anywhere):
 
 Determinism: bucket ids come from a hash of the gram (xxhash64 for
 production, an md5 hex prefix when cross-engine oracle parity is
-needed); add-one smoothing keeps every bucket finite; weights round to
-6dp with doc-id tiebreaks.
+needed); add-one smoothing keeps every bucket finite; per-bucket log
+ratios round to 6dp before an exact integer sum, and selection breaks
+ties by doc id.
 """
 
 from __future__ import annotations
@@ -87,7 +88,8 @@ def dsir_importance_weights(
     Returns ``(id, n_grams, log_ratio)`` where ``log_ratio =
     Σ_b c_doc[b]·(ln((c_tgt[b]+1)/(T+B)) − ln((c_src[b]+1)/(S+B)))``
     (bag-of-buckets multinomial log-likelihood ratio, add-one
-    smoothed), rounded to 6dp.
+    smoothed), with each bucket's log ratio rounded to 6dp first so the
+    sum is exact and independent of partitioning.
     """
     doc_bucket = (
         _grams(df, id_col, text_col)
@@ -106,28 +108,25 @@ def dsir_importance_weights(
         tgt.agg(F.coalesce(F.sum("_ct"), F.lit(0)).alias("_T"))
     )
     b = float(n_buckets)
+    lr = F.log(
+        (F.coalesce(F.col("_ct"), F.lit(0)) + 1).cast("double")
+        / (F.col("_T") + b)
+    ) - F.log((F.col("_cs") + 1).cast("double") / (F.col("_S") + b))
+    # fixed-point micro-units: a float SUM adds the products in an order
+    # that depends on partitioning, so its last bits (and the 6dp
+    # rounding) would vary with parallelism; an integer SUM is exact
     ratio = (
         src.join(tgt, "_b", "left")
         .crossJoin(F.broadcast(totals))
-        .select(
-            "_b",
-            (
-                F.log(
-                    (F.coalesce(F.col("_ct"), F.lit(0)) + 1).cast("double")
-                    / (F.col("_T") + b)
-                )
-                - F.log(
-                    (F.col("_cs") + 1).cast("double") / (F.col("_S") + b)
-                )
-            ).alias("_lr"),
-        )
+        .select("_b", F.round(lr * 1e6).cast("bigint").alias("_lr_micro"))
     )
     return (
         doc_bucket.join(F.broadcast(ratio), "_b")
         .groupBy(id_col)
         .agg(
             F.sum("_c").alias("n_grams"),
-            F.round(F.sum(F.col("_c") * F.col("_lr")), 6).alias("log_ratio"),
+            (F.sum(F.col("_c") * F.col("_lr_micro")) / F.lit(1e6))
+            .alias("log_ratio"),
         )
     )
 

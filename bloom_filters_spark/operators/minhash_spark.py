@@ -1,10 +1,10 @@
-"""MinHash signatures and LSH banding as Spark columns.
+"""Verify-stage Jaccard expressions over signature and shingle-set
+columns, as JVM built-ins (no Python crossing).
 
-Signature semantics replicate the reference kernel
-(``/root/reference/src/sketch/min-hash.ts:34-36,94-110``):
-``sig[i] = min over shingles x of (a_i*x + b_i) mod c`` — computed as
-one flattened numpy kernel per Arrow batch (``np.minimum.reduceat``
-segment-min), no per-row Python.
+Signatures and LSH bands come from the Arrow kernels in
+``operators/arrow_sig.py``; their semantics replicate the reference
+kernel (its ``src/sketch/min-hash.ts:34-36,94-110``):
+``sig[i] = min over shingles x of (a_i*x + b_i) mod c``.
 
 LSH banding is NOT in the reference (it does all-pairs ``compareWith``);
 we band to generate candidate pairs at scale and keep ``compareWith``
@@ -14,163 +14,8 @@ the reference at the same signature config (SURVEY.md §2.2).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from bloom_filters_spark.sketches.minhash import MinHashFactory
-
-
-def make_signature_udf(factory: MinHashFactory):
-    """pandas UDF: array<long> shingles → array<long> signature (k,).
-
-    The (a, b, c) params ride the closure → broadcast once per task.
-    Empty shingle arrays yield null (the reference's empty-MinHash
-    sentinel; filter with ``F.size(col) > 0`` upstream).
-    """
-    a = factory.a.copy()
-    b = factory.b.copy()
-    c = factory.c
-    k = factory.nb_hashes
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_signature(shingles: pd.Series) -> pd.Series:
-        # per-doc (n_shingles, k) kernel with a reused buffer.  A single
-        # flattened (total_shingles, k) matrix is asymptotically nicer but
-        # measured 36x SLOWER: the multi-GB allocation thrashes page
-        # faults, while per-doc temporaries stay in malloc's reused pools.
-        buf = np.empty((4096, k), dtype=np.int64)
-        out = np.empty(len(shingles), dtype=object)
-        for i, doc in enumerate(shingles):
-            n = len(doc) if doc is not None else 0
-            if n == 0:
-                out[i] = None
-                continue
-            x = np.asarray(doc, dtype=np.int64)
-            m = buf[:n] if n <= buf.shape[0] else np.empty((n, k), dtype=np.int64)
-            np.multiply(x[:, None], a[None, :], out=m)
-            np.add(m, b[None, :], out=m)
-            np.remainder(m, c, out=m)
-            out[i] = m.min(axis=0).tolist()
-        return pd.Series(out)
-
-    return minhash_signature
-
-
-def make_token_signature_udf(factory: MinHashFactory, w: int = 3,
-                             max_value: int | None = None):
-    """Fused pandas UDF: array<long> token hashes → struct(shingles,
-    signature).  Combines the rolling-hash shingle derivation
-    (``combine_token_hashes``) with the MinHash kernel in one Arrow
-    stage — the pipeline's scale path (one Python stage, no
-    array<string> shingles ever materialized)."""
-    from bloom_filters_spark.operators.shingles import (
-        DEFAULT_MAX_VALUE,
-        combine_token_hashes,
-    )
-
-    a = factory.a.copy()
-    b = factory.b.copy()
-    c = factory.c
-    k = factory.nb_hashes
-    mv = max_value if max_value is not None else DEFAULT_MAX_VALUE
-
-    schema = T.StructType(
-        [
-            T.StructField("shingles", T.ArrayType(T.LongType())),
-            T.StructField("signature", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def token_signature(token_hashes: pd.Series) -> pd.DataFrame:
-        buf = np.empty((4096, k), dtype=np.int64)
-        sh_out = np.empty(len(token_hashes), dtype=object)
-        sig_out = np.empty(len(token_hashes), dtype=object)
-        for i, toks in enumerate(token_hashes):
-            if toks is None or len(toks) == 0:
-                sh_out[i] = None
-                sig_out[i] = None
-                continue
-            sh = combine_token_hashes(toks, w, mv).astype(np.int64)
-            n = len(sh)
-            m = buf[:n] if n <= buf.shape[0] else np.empty((n, k), dtype=np.int64)
-            np.multiply(sh[:, None], a[None, :], out=m)
-            np.add(m, b[None, :], out=m)
-            np.remainder(m, c, out=m)
-            sh_out[i] = sh.tolist()
-            sig_out[i] = m.min(axis=0).tolist()
-        return pd.DataFrame({"shingles": sh_out, "signature": sig_out})
-
-    return token_signature
-
-
-def signature_expr(shingles: Column, factory: MinHashFactory) -> Column:
-    """Pure-JVM MinHash signature: same semantics as the pandas UDF but
-    computed by whole-stage-codegen'd built-ins — no Python workers.
-
-    ``sig[i] = array_min(transform(shingles, x -> (a_i*x + b_i) % c))``
-    with the (a, b) params embedded as literal arrays.  ``a_i*x`` stays
-    below 2^62 (both <= 2^31), exact in JVM long arithmetic — identical
-    to the int64 numpy kernel and the reference's float53 arithmetic.
-
-    Wins at scale: the signature stage fuses with shingling into one
-    codegen'd map stage; no Arrow transfer, no Python worker startup.
-    """
-    a_lit = F.array(*[F.lit(int(v)) for v in factory.a])
-    b_lit = F.array(*[F.lit(int(v)) for v in factory.b])
-    c = int(factory.c)
-    k = factory.nb_hashes
-    return F.when(
-        F.size(shingles) > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: F.array_min(
-                F.transform(
-                    shingles,
-                    lambda x: (F.element_at(a_lit, i + 1) * x
-                               + F.element_at(b_lit, i + 1)) % F.lit(c),
-                )
-            ),
-        ),
-    )
-
-
-def bands_unrolled_expr(sig: Column, bands: int, rows: int) -> Column:
-    """Band structs as a LITERALLY UNROLLED array expression — unlike
-    ``bands_expr`` (transform/sequence higher-order functions, which
-    Spark evaluates interpreted), every slice/xxhash64 here is a plain
-    expression eligible for whole-stage codegen, and nothing crosses to
-    Python.  Semantics identical to ``bands_expr``.
-    """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("int").alias("band_id"),
-                F.xxhash64(F.lit(i), F.slice(sig, i * rows + 1, rows)).alias(
-                    "band_hash"
-                ),
-            )
-            for i in range(bands)
-        ]
-    )
-
-
-def bands_expr(sig: Column, bands: int, rows: int) -> Column:
-    """signature → array of (band_id, band_hash) structs, JVM-side.
-
-    band_hash = xxhash64 over the length-r signature slice (plus the
-    band id, so identical slices in different bands don't collide).
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda i: F.struct(
-            i.cast("int").alias("band_id"),
-            F.xxhash64(i, F.slice(sig, i * rows + 1, rows)).alias("band_hash"),
-        ),
-    )
 
 
 def estimated_jaccard_expr(sig1: Column, sig2: Column, k: int) -> Column:

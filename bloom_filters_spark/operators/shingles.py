@@ -110,47 +110,9 @@ def string_shingle_sets_udf(w: int, strict: bool = False):
     return shingle_sets
 
 
-def token_hashes_expr(text: Column, lowercase: bool = True) -> Column:
-    """text → array<long> of per-token xxhash64 values (one JVM hash per
-    token, no shingle-string materialization — the scale path).
-
-    Shingle identities are then derived from CONSECUTIVE TOKEN HASHES by
-    a vectorized rolling combine inside the signature UDF
-    (``combine_token_hashes``), avoiding the O(n_tokens * w) string
-    slicing/concat of ``shingles_expr`` (measured 11-186s per 50k docs —
-    higher-order string ops are interpreted, not codegen'd).
-    """
-    return F.transform(tokens_expr(text, lowercase), lambda t: F.xxhash64(t))
-
-
-ROLL_PRIME = 0x9E3779B97F4A7C15  # 64-bit golden-ratio odd constant
-
-
-def combine_token_hashes(
-    token_hashes, w: int = 3, max_value: int = DEFAULT_MAX_VALUE
-):
-    """(n,) int64 token hashes → distinct shingle hashes in [0, max_value).
-
-    shingle[i] = (sum_j roll(t[i+j], w-1-j)) mod 2^64 mod max_value with
-    roll(x, d) = x * PRIME^d — a positional polynomial combine, exact in
-    uint64 wraparound, fully vectorized.  Docs with fewer than w tokens
-    produce one shingle over all tokens (same contract as shingles_expr).
-    Pure function — bit-reproducible anywhere numpy runs.
-    """
-    import numpy as np
-
-    t = np.asarray(token_hashes, dtype=np.int64).astype(np.uint64)
-    n = len(t)
-    if n == 0:
-        return t
-    eff_w = min(w, n)
-    m = n - eff_w + 1
-    with np.errstate(over="ignore"):
-        acc = np.zeros(m, dtype=np.uint64)
-        p = np.uint64(ROLL_PRIME)
-        for j in range(eff_w):
-            acc = acc * p + t[j : j + m]
-        return np.unique(acc % np.uint64(max_value))
+# 64-bit golden-ratio odd constant: the w-token rolling-hash multiplier
+# of the Arrow shingle combine (arrow_sig), dedup and substring
+ROLL_PRIME = 0x9E3779B97F4A7C15
 
 
 def shingle_hash_py(shingle: str, max_value: int = DEFAULT_MAX_VALUE) -> int:
@@ -164,34 +126,6 @@ def shingle_hash_py(shingle: str, max_value: int = DEFAULT_MAX_VALUE) -> int:
     h = xxh64(shingle.encode("utf-8"), 42)
     signed = h - (1 << 64) if h >= (1 << 63) else h
     return signed % max_value
-
-
-def token_shingle_set_py(
-    text: str,
-    w: int = 3,
-    max_value: int = DEFAULT_MAX_VALUE,
-    lowercase: bool = True,
-):
-    """Python oracle for the token_hash shingle path: bit-equal to
-    token_hashes_expr + combine_token_hashes."""
-    import re
-
-    import numpy as np
-
-    from bloom_filters_spark.hashing import xxh64
-
-    # match the JVM column EXACTLY: F.lower is Unicode (like Python
-    # str.lower()) but Java \s is ASCII-only — so split on the ASCII
-    # whitespace class (Python's \s would split NBSP/U+2028 where the
-    # JVM keeps them inside a token)
-    t = text.lower() if lowercase else text
-    toks = [x for x in re.split("[ \t\n\x0b\x0c\r]+", t) if x != ""]
-    if not toks:
-        return np.zeros(0, dtype=np.uint64)
-    th = np.array(
-        [xxh64(tok.encode("utf-8"), 42) for tok in toks], dtype=np.uint64
-    ).astype(np.int64)
-    return combine_token_hashes(th, w, max_value)
 
 
 def shingle_set_py(

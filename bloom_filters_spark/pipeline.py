@@ -4,8 +4,10 @@
     candidate pairs → Jaccard verify → connected components → clusters
 
 Stage boundaries (= shuffles): band grouping, pair dedup, verify join,
-label propagation.  Everything before banding is one map-only stage
-(JVM shingling + one Arrow-batched pandas UDF for signatures).
+label propagation.  Everything before banding is one map-only stage:
+one ``mapInArrow`` kernel turns text straight into band rows
+(``operators/arrow_sig.py``), and signatures are recomputed by the same
+kernel only for the docs that appear in a candidate pair.
 
 Verification semantics: ``verify="estimate"`` applies the reference's
 ``compareWith`` decision — (# equal signature positions)/k >= threshold
@@ -17,7 +19,7 @@ Jaccard over shingle sets (the reference's own test oracle,
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,14 +27,11 @@ from pyspark.sql import functions as F
 from bloom_filters_spark.hashing import DEFAULT_SEED
 from bloom_filters_spark.operators.components import connected_components
 from bloom_filters_spark.operators.minhash_spark import (
-    bands_expr,
     estimated_jaccard_expr,
     exact_jaccard_expr,
-    make_signature_udf,
-    signature_expr,
 )
 from bloom_filters_spark.operators.pairs import candidate_pairs
-from bloom_filters_spark.operators.shingles import DEFAULT_MAX_VALUE, shingles_expr
+from bloom_filters_spark.operators.shingles import DEFAULT_MAX_VALUE
 from bloom_filters_spark.sketches.minhash import MinHashFactory
 
 
@@ -46,64 +45,27 @@ class NearDupConfig:
     threshold: float = 0.8           # Jaccard accept threshold
     verify: str = "estimate"         # estimate | exact | both
     max_band_group: int = 64         # all-pairs cap per LSH band group
-    lowercase: bool = True
-    # signature kernel: "pandas" (Arrow-batched numpy, ~8k docs/s/32cores)
-    # or "jvm" (built-in transform/array_min — higher-order functions are
-    # interpreted, not codegen'd: measured 11x slower at 50k docs)
-    signature_impl: str = "pandas"
-    # shingle derivation:
-    # * "arrow" (default, the scale path): ONE mapInArrow stage doing
-    #   tokenize + token hash + shingle combine + MinHash entirely on
-    #   flat numpy buffers — zero per-row Python objects, no JVM
-    #   higher-order functions (which are interpreted, allocation-heavy,
-    #   and measured to ANTI-scale 8→32 cores on bandwidth-bound boxes);
-    #   emits int32 signatures and skips shingle materialization unless
-    #   verify needs exact Jaccard
-    # * "token_hash": JVM xxhash64 per token + fused pandas-UDF shingle
-    #   combine/MinHash — kept for parity with the xxhash64 token domain
-    # * "string": materializes w-gram strings, xxhash64 each —
-    #   SQL-oracle-checkable (DuckDB can recompute), 10x slower
-    shingle_impl: str = "arrow"
-    # LSH band hashing: "arrow" (default — vectorized mapInArrow over
-    # flat signature buffers; the JVM alternatives allocate a slice +
-    # struct per band per row, and that allocation rate is what caps the
-    # stage on bandwidth-bound hosts: measured flat 4.5s at 8 AND 32
-    # cores for "jvm_unrolled" vs 2.5s→1.0s scaling for "arrow"),
-    # "jvm_unrolled" (literally unrolled slice/xxhash64 expressions,
-    # codegen'd, no Python crossing), or "jvm_hof" (transform/sequence
-    # higher-order functions — interpreted, worst of both)
-    band_impl: str = "arrow"
-    # fuse banding into the signature kernel (arrow impl only): the full
-    # pipeline never materializes a per-doc signature column — bands
-    # stream out of the text kernel as 16-byte rows, and signatures are
-    # recomputed only for candidate-pair participants in the verify
-    # stage.  Biggest single win on bandwidth-bound hosts.
-    fuse_bands: bool = True
-    # band-hash width on the arrow band impls (fused or two-stage):
-    # 32 xor-
-    # folds the hash, cutting the widest shuffle's rows 16 → 12 bytes at
-    # the price of ~n_rows²/2³³ colliding candidate groups.  Merged
-    # groups usually only ADD verify work; to keep a collision from
-    # pushing a small genuine group past max_band_group (star-linking
-    # through a foreign anchor = recall loss), candidate_pairs groups
-    # 32-bit bands by (band_id, band_hash) instead of the hash alone
-    # (operators/pairs.py _band_key).  Adopted as the default after the
-    # round-5 paired ABBA measurement (BENCH/scaling_8_32.json
-    # "hash32_paired_r5": 0.871x wall at 32 pinned cores, 0.993x at 8 —
-    # the band exchange is bandwidth-bound, so 25% fewer bytes in the
-    # widest shuffle shows up directly).  Pin 64 to read band tables
-    # checkpointed before the switch (checkpoint.py and the incremental
-    # path raise on a width mismatch rather than mis-join).  None (the
-    # default) means impl-appropriate: 32 on the arrow kernels, 64 on
-    # the JVM expression impls (which only emit the full 64-bit hash —
-    # an EXPLICIT 32 with a JVM impl raises rather than lie about the
-    # emitted width).
-    band_hash_bits: int | None = None
+    # band-hash width: 32 xor-folds the hash, cutting the widest
+    # shuffle's rows 16 → 12 bytes at the price of ~n_rows²/2³³
+    # colliding candidate groups.  Merged groups usually only ADD verify
+    # work; to keep a collision from pushing a small genuine group past
+    # max_band_group (star-linking through a foreign anchor = recall
+    # loss), candidate_pairs groups 32-bit bands by (band_id, band_hash)
+    # instead of the hash alone (operators/pairs.py _band_key).  Adopted
+    # as the default after the round-5 paired ABBA measurement
+    # (BENCH/scaling_8_32.json "hash32_paired_r5": 0.871x wall at 32
+    # pinned cores, 0.993x at 8 — the band exchange is bandwidth-bound,
+    # so 25% fewer bytes in the widest shuffle shows up directly).  Pin
+    # 64 to read band tables checkpointed before the switch
+    # (checkpoint.py and the incremental and streaming paths raise on a
+    # width mismatch rather than mis-join).
+    band_hash_bits: int = 32
     # CMS frequent-shingle (boilerplate) pruning: shingles appearing in
     # more than this fraction of documents are dropped before MinHash —
     # navigation chrome / legal footers otherwise dominate signatures
-    # and create hot LSH bands.  None disables.  Scale (arrow fused)
-    # path only; the detection pass emits a few hundred candidate rows,
+    # and create hot LSH bands.  None disables.  near_dup_pipeline and
+    # the incremental paths only (checkpoint.py and streaming do not
+    # prune); the detection pass emits a few hundred candidate rows,
     # not the shingle universe (see detect_hot_shingles).
     boilerplate_max_df: float | None = None
     # HLL-gated exact pre-dedup: estimate distinct text fingerprints
@@ -134,130 +96,71 @@ class NearDupConfig:
     # large enough to dominate).
     pair_mode: str = "auto"
     pair_mode_threshold: int = 2_000_000
-    cache_signatures: bool = True    # sigs feed banding AND both verify joins
 
     def __post_init__(self):
         if self.num_hashes % self.bands != 0:
             raise ValueError("num_hashes must be divisible by bands")
-        if self.band_hash_bits not in (None, 32, 64):
-            raise ValueError("band_hash_bits must be 32, 64, or None")
+        if self.band_hash_bits not in (32, 64):
+            raise ValueError("band_hash_bits must be 32 or 64")
 
     @property
     def rows_per_band(self) -> int:
         return self.num_hashes // self.bands
 
-    @property
-    def resolved_band_hash_bits(self) -> int:
-        """``band_hash_bits`` with the ``None`` default resolved to the
-        impl that will actually band: 32 on the arrow kernels (the
-        shipped default path), 64 when only the JVM expression impls
-        run (they always emit the full 64-bit Horner hash)."""
-        if self.band_hash_bits is not None:
-            return self.band_hash_bits
-        return 32 if (self.fuse_bands or self.band_impl == "arrow") else 64
-
     def factory(self) -> MinHashFactory:
         return MinHashFactory(self.num_hashes, self.max_value, self.seed)
 
 
-def with_shingles(df: DataFrame, cfg: NearDupConfig, text_col: str = "text") -> DataFrame:
-    # token gate: shingle_strings_expr pads token-less docs to ONE
-    # shingle (greatest(n-w+1, 1)), so without this filter every
-    # empty/whitespace/null-text doc would share one sentinel shingle
-    # and cluster together at jaccard 1.0 — the arrow and token_hash
-    # impls drop such docs, so the string path must too
-    toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")
-    )
-    return df.filter(F.size(toks) > 0).withColumn(
-        "shingles",
-        shingles_expr(F.col(text_col), cfg.shingle_size, cfg.max_value, cfg.lowercase),
-    )
-
-
-def with_signature(df: DataFrame, cfg: NearDupConfig) -> DataFrame:
-    """Adds ``signature``; drops docs with empty shingle sets (the
-    reference's empty-MinHash guard, min-hash.ts:75-77).
-
-    Both impls compute the identical signature; "jvm" keeps the whole
-    map stage in codegen (no Python workers), "pandas" is the
-    Arrow-batched kernel (useful where the params array would bloat the
-    plan, or k is very large).
-    """
-    df = df.filter(F.size("shingles") > 0)
-    if cfg.signature_impl == "pandas":
-        sig_udf = make_signature_udf(cfg.factory())
-        return df.withColumn("signature", sig_udf("shingles"))
-    return df.withColumn("signature", signature_expr(F.col("shingles"), cfg.factory()))
-
-
 def signatures(df: DataFrame, cfg: NearDupConfig, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """(id, text) → (id[, shingles], signature) — the map-only front half.
+               text_col: str = "text", hot_shingles=None) -> DataFrame:
+    """(id, text) → (id[, shingles], signature): the Arrow signature
+    kernel at ``cfg``'s parameters.
 
-    The "arrow" impl only materializes shingle sets when the verify mode
-    needs exact Jaccard — in estimate mode the signature alone feeds
-    banding and verification, and shingle arrays are pure Arrow/persist
-    overhead (measured ~16s of 28s stage time at 200k docs × 32 cores).
+    Shingle sets are only materialized when the verify mode needs exact
+    Jaccard — in estimate mode the signature alone feeds banding and
+    verification, and shingle arrays are pure Arrow/persist overhead
+    (measured ~16s of 28s stage time at 200k docs × 32 cores).
+    ``hot_shingles`` must be the set the bands were pruned with.
     """
-    if cfg.shingle_impl == "arrow":
-        from bloom_filters_spark.operators.arrow_sig import signatures_arrow
+    from bloom_filters_spark.operators.arrow_sig import signatures_arrow
 
-        return signatures_arrow(
-            df,
-            cfg.factory(),
-            shingle_size=cfg.shingle_size,
-            max_value=cfg.max_value,
-            id_col=id_col,
-            text_col=text_col,
-            need_shingles=cfg.verify in ("exact", "both"),
-        )
-    if cfg.shingle_impl == "token_hash":
-        from bloom_filters_spark.operators.minhash_spark import (
-            make_token_signature_udf,
-        )
-        from bloom_filters_spark.operators.shingles import token_hashes_expr
-
-        udf = make_token_signature_udf(
-            cfg.factory(), cfg.shingle_size, cfg.max_value
-        )
-        return (
-            df.select(
-                id_col,
-                udf(token_hashes_expr(F.col(text_col), cfg.lowercase)).alias("ss"),
-            )
-            .filter(F.col("ss.signature").isNotNull())
-            .select(id_col, "ss.shingles", "ss.signature")
-        )
-    return with_signature(
-        with_shingles(df.select(id_col, text_col), cfg, text_col), cfg
-    ).select(id_col, "shingles", "signature")
+    return signatures_arrow(
+        df, cfg.factory(),
+        shingle_size=cfg.shingle_size, max_value=cfg.max_value,
+        id_col=id_col, text_col=text_col,
+        need_shingles=cfg.verify in ("exact", "both"),
+        hot_shingles=hot_shingles,
+    )
 
 
 def lsh_bands(sigs: DataFrame, cfg: NearDupConfig, id_col: str = "doc_id") -> DataFrame:
     """signatures → exploded (band_id, band_hash, doc_id)."""
-    if cfg.band_impl == "arrow":
-        from bloom_filters_spark.operators.arrow_sig import bands_arrow
+    from bloom_filters_spark.operators.arrow_sig import bands_arrow
 
-        return bands_arrow(sigs, cfg.bands, cfg.rows_per_band, id_col,
-                           hash_bits=cfg.resolved_band_hash_bits)
-    if cfg.band_hash_bits == 32:
-        # the JVM expression impls always emit the full 64-bit Horner
-        # hash; refuse an EXPLICIT 32 rather than emit a width the
-        # config disclaims (the None default resolves to 64 here)
-        raise ValueError(
-            f"band_impl={cfg.band_impl!r} only emits 64-bit band hashes; "
-            "set band_hash_bits=64 (the arrow impls support 32)"
-        )
-    from bloom_filters_spark.operators.minhash_spark import bands_unrolled_expr
+    return bands_arrow(sigs, cfg.bands, cfg.rows_per_band, id_col,
+                       hash_bits=cfg.band_hash_bits)
 
-    expr = bands_unrolled_expr if cfg.band_impl == "jvm_unrolled" else bands_expr
-    return sigs.select(
-        id_col,
-        F.explode(expr(F.col("signature"), cfg.bands, cfg.rows_per_band)).alias(
-            "band"
-        ),
-    ).select(id_col, "band.band_id", "band.band_hash")
+
+def _participant_signatures(docs: DataFrame, cands: DataFrame, n_cands: int,
+                            cfg: NearDupConfig, id_col: str, text_col: str,
+                            hot_shingles) -> DataFrame:
+    """Signatures of only the docs in a candidate pair (id1, id2),
+    pruned with the SAME hot set the bands were built with, or
+    verify-side estimates drift from banding.
+
+    A plain semi-join would shuffle the full corpus INCLUDING the text
+    column by id (measured 1.2GB at 800k docs); the id set is bounded
+    by 2x the candidate count, so it is broadcast when small and the
+    text column streams map-side."""
+    ids = (
+        cands.select(F.col("id1").alias(id_col))
+        .unionByName(cands.select(F.col("id2").alias(id_col)))
+        .distinct()
+    )
+    if n_cands < 25_000_000:
+        ids = F.broadcast(ids)
+    return signatures(docs.join(ids, id_col, "left_semi"), cfg, id_col,
+                      text_col, hot_shingles=hot_shingles)
 
 
 def verified_pairs(
@@ -609,86 +512,49 @@ def near_dup_pipeline(
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if n_in is not None and n_in < parallelism:
         df = df.repartition(parallelism)
-    sigs = None
-    sigs_restricted = False
-    if cfg.shingle_impl == "arrow" and cfg.fuse_bands:
-        # scale path: text → (doc_id, band_hash) in one Arrow stage.
-        # The full-corpus signature matrix never leaves the kernel —
-        # persisting/caching wide array<int> columns was measured to
-        # dominate the whole pipeline on bandwidth-bound hosts (the
-        # columnar cache serializes arrays per row).  Signatures are
-        # recomputed ONLY for docs that appear in a candidate pair.  On
-        # crawl batches that is most docs (4,398 of 4,930 on the
-        # benchmark's small-batches corpus), so the verify join computes
-        # them once for both endpoints (see verified_pairs).
-        from bloom_filters_spark.operators.arrow_sig import (
-            detect_hot_shingles,
-            fused_band_rows,
-            signatures_arrow,
-        )
+    # text → (doc_id, band_hash) in one Arrow stage.  The full-corpus
+    # signature matrix never leaves the kernel — persisting/caching wide
+    # array<int> columns was measured to dominate the whole pipeline on
+    # bandwidth-bound hosts (the columnar cache serializes arrays per
+    # row).  Signatures are recomputed ONLY for docs that appear in a
+    # candidate pair.  On crawl batches that is most docs (4,398 of
+    # 4,930 on the benchmark's small-batches corpus), so the verify join
+    # computes them once for both endpoints (see verified_pairs).
+    from bloom_filters_spark.operators.arrow_sig import (
+        detect_hot_shingles,
+        fused_band_rows,
+    )
 
-        hot = None
-        if cfg.boilerplate_max_df is not None:
-            hot = detect_hot_shingles(
-                df, _count(), cfg.boilerplate_max_df,
-                cfg.shingle_size, cfg.max_value, id_col, text_col,
-            )
-        bands = fused_band_rows(
-            df, cfg.factory(), cfg.bands, cfg.rows_per_band,
+    hot = None
+    if cfg.boilerplate_max_df is not None:
+        hot = detect_hot_shingles(
+            df, _count(), cfg.boilerplate_max_df,
             cfg.shingle_size, cfg.max_value, id_col, text_col,
-            hot_shingles=hot, hash_bits=cfg.resolved_band_hash_bits,
         )
-        # a local checkpoint, not a cache, materialized by the count:
-        # AQE reuses an exchange only over plain scans, and a cached
-        # relation under the participant side would keep verify's two
-        # joins from sharing one broadcast of it (blocks are GC-cleaned
-        # with the frame, as in substring_dup_pairs)
-        candidates = candidate_pairs(
-            bands, cfg.max_band_group, id_col, mode=_pair_mode()
-        ).localCheckpoint(eager=False)
-        n_cands = candidates.count()
-        ids = (
-            candidates.select(F.col("id1").alias(id_col))
-            .unionByName(candidates.select(F.col("id2").alias(id_col)))
-            .distinct()
-        )
-        # a plain semi-join would shuffle the full corpus INCLUDING the
-        # text column by id (measured 1.2GB at 800k docs); the id set is
-        # bounded by 2x the candidate count, so broadcast it when small
-        # and let the text column stream map-side
-        if n_cands < 25_000_000:
-            ids = F.broadcast(ids)
-        participants = df.join(ids, id_col, "left_semi")
-        # participants' signatures must prune with the SAME hot set the
-        # band kernel used, or verify-side estimates drift from banding.
-        # Not cached: verify reads them once, through one reused broadcast
-        sigs = signatures_arrow(
-            participants, cfg.factory(),
-            shingle_size=cfg.shingle_size, max_value=cfg.max_value,
-            id_col=id_col, text_col=text_col,
-            need_shingles=cfg.verify in ("exact", "both"),
-            hot_shingles=hot,
-        )
-        sigs_restricted = True
-    else:
-        sigs = signatures(df, cfg, id_col, text_col)
-        if cfg.cache_signatures:
-            # sigs are consumed by banding and twice by the verify join;
-            # at cluster scale this boundary is a checkpoint table
-            sigs = sigs.persist()
-        bands = lsh_bands(sigs, cfg, id_col)
-        # candidates feed THREE consumers inside the verify stage (the
-        # two id projections and the pair join) — without a persist the
-        # whole band shuffle + pair-emit recomputes three times
-        candidates = candidate_pairs(
-            bands, cfg.max_band_group, id_col, mode=_pair_mode()
-        ).persist()
+    bands = fused_band_rows(
+        df, cfg.factory(), cfg.bands, cfg.rows_per_band,
+        cfg.shingle_size, cfg.max_value, id_col, text_col,
+        hot_shingles=hot, hash_bits=cfg.band_hash_bits,
+    )
+    # a local checkpoint, not a cache, materialized by the count: AQE
+    # reuses an exchange only over plain scans, and a cached relation
+    # under the participant side would keep verify's two joins from
+    # sharing one broadcast of it (blocks are GC-cleaned with the frame,
+    # as in substring_dup_pairs)
+    candidates = candidate_pairs(
+        bands, cfg.max_band_group, id_col, mode=_pair_mode()
+    ).localCheckpoint(eager=False)
+    n_cands = candidates.count()
+    # not cached: verify reads them once, through one reused broadcast
+    sigs = _participant_signatures(
+        df, candidates, n_cands, cfg, id_col, text_col, hot
+    )
     # the (tiny) verified edge set is cached so the label-propagation
     # fallback can iterate over it; the driver solve collects it in
     # the same pass that fills the cache.  At cluster scale this
     # boundary is the pairs checkpoint table (checkpoint.py).
     pairs = verified_pairs(
-        candidates, sigs, cfg, id_col, sigs_restricted=sigs_restricted
+        candidates, sigs, cfg, id_col, sigs_restricted=True
     ).persist()
     clusters = connected_components(pairs, vertices=vertices, id_col=id_col)
     if doc_rep is not None:
@@ -708,8 +574,6 @@ def near_dup_pipeline(
             "candidates": candidates,
             "pairs": pairs,
         }
-    candidates.unpersist()
-    sigs.unpersist()
     # the components stage has already materialized its labels (driver
     # union-find collects the edges; labelprop localCheckpoints), so the
     # cached edge set can be released too
@@ -765,7 +629,7 @@ def incremental_candidates(
         corpus_bands = fused_band_rows(
             corpus_docs, cfg.factory(), cfg.bands, cfg.rows_per_band,
             cfg.shingle_size, cfg.max_value, id_col, text_col,
-            hot_shingles=hot, hash_bits=cfg.resolved_band_hash_bits,
+            hot_shingles=hot, hash_bits=cfg.band_hash_bits,
         )
     else:
         if cfg.boilerplate_max_df is not None and hot is None:
@@ -780,18 +644,18 @@ def incremental_candidates(
         # a checkpointed band table must carry the SAME hash width the
         # increment will emit: the implicit int->long cast in the join
         # would return zero matches without an error
-        expect = "int" if cfg.resolved_band_hash_bits == 32 else "bigint"
+        expect = "int" if cfg.band_hash_bits == 32 else "bigint"
         actual = dict(corpus_bands.dtypes).get("band_hash")
         if actual != expect:
             raise ValueError(
                 f"corpus_bands.band_hash is {actual} but "
-                f"cfg band width {cfg.resolved_band_hash_bits} emits {expect}: "
+                f"cfg band width {cfg.band_hash_bits} emits {expect}: "
                 "band hashes would never match across the join"
             )
     new_bands = fused_band_rows(
         new_docs, cfg.factory(), cfg.bands, cfg.rows_per_band,
         cfg.shingle_size, cfg.max_value, id_col, text_col,
-        hot_shingles=hot, hash_bits=cfg.resolved_band_hash_bits,
+        hot_shingles=hot, hash_bits=cfg.band_hash_bits,
     )
     bn = new_bands.select(
         "band_id", "band_hash", F.col(id_col).alias("id1")
@@ -826,10 +690,7 @@ def near_dup_against(
     forwards the full run's boilerplate set (see
     ``incremental_candidates``) and prunes the verify-side signatures
     identically."""
-    from bloom_filters_spark.operators.arrow_sig import (
-        detect_hot_shingles,
-        signatures_arrow,
-    )
+    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
 
     cfg = cfg or NearDupConfig()
     if (
@@ -855,23 +716,11 @@ def near_dup_against(
         hot_shingles,
     ).localCheckpoint(eager=False)
     n_cands = cands.count()
-    participants = new_docs.select(id_col, text_col).unionByName(
+    docs = new_docs.select(id_col, text_col).unionByName(
         corpus_docs.select(id_col, text_col)
     )
-    ids = (
-        cands.select(F.col("id1").alias(id_col))
-        .unionByName(cands.select(F.col("id2").alias(id_col)))
-        .distinct()
-    )
-    if n_cands < 25_000_000:
-        ids = F.broadcast(ids)
-    participants = participants.join(ids, id_col, "left_semi")
-    sigs = signatures_arrow(
-        participants, cfg.factory(),
-        shingle_size=cfg.shingle_size, max_value=cfg.max_value,
-        id_col=id_col, text_col=text_col,
-        need_shingles=cfg.verify in ("exact", "both"),
-        hot_shingles=hot_shingles,
+    sigs = _participant_signatures(
+        docs, cands, n_cands, cfg, id_col, text_col, hot_shingles
     )
     # materialize the (tiny) verified edge set once: later actions read
     # it, not the candidate checkpoint and the signature kernel

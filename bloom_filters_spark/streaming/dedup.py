@@ -145,8 +145,7 @@ def run_incremental_near_dup(
         "bands": cfg.bands,
         "seed": cfg.seed,
         "max_value": cfg.max_value,
-        "lowercase": cfg.lowercase,
-        "band_hash_bits": cfg.resolved_band_hash_bits,
+        "band_hash_bits": cfg.band_hash_bits,
     }
     os.makedirs(store_dir, exist_ok=True)
     sidecar = os.path.join(store_dir, "_store_config.json")
@@ -210,7 +209,7 @@ def run_incremental_near_dup(
                 if old_t != new_t:
                     raise ValueError(
                         f"band store {band_store} holds {old_t} band "
-                        f"hashes but cfg band width {cfg.resolved_band_hash_bits} "
+                        f"hashes but cfg band width {cfg.band_hash_bits} "
                         f"emits {new_t}: pin band_hash_bits to the width "
                         "the store was created with"
                     )

@@ -97,12 +97,22 @@ def _fs_read_text(spark, path_str) -> str:
 
 
 def _fs_write_text(spark, path_str, data: str) -> None:
+    """Publish ``data`` at ``path_str`` by writing a ``.tmp`` sibling
+    and renaming it over the old file: a crash mid-write leaves the old
+    file (or none), never a truncated one.  Filesystems whose rename
+    refuses an existing target (HDFS) get delete + rename; a crash
+    between the two leaves no file, which readers treat as absent."""
     fs, path = _fs_for(spark, path_str)
-    out = fs.create(path, True)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(path_str + ".tmp")
+    out = fs.create(tmp, True)
     try:
         out.write(bytearray(data.encode("utf-8")))
     finally:
         out.close()
+    if not fs.rename(tmp, path):
+        fs.delete(path, False)
+        if not fs.rename(tmp, path):
+            raise IOError(f"could not publish {path_str}")
 
 
 def _run_plan(spark, df, plan, stages, args):
@@ -118,6 +128,8 @@ def _run_plan(spark, df, plan, stages, args):
     prior stages from the source scan: O(stages**2) work at scale).
     Returns (df, skipped_stage_keys)."""
     import os
+
+    from py4j.protocol import Py4JJavaError
 
     if not plan:
         return df, []
@@ -141,9 +153,14 @@ def _run_plan(spark, df, plan, stages, args):
     fp = _plan_fingerprint((k for k, _ in plan), args)
     manifest = None
     if _fs_exists(spark, manifest_path):
-        manifest = json.loads(_fs_read_text(spark, manifest_path))
-        if manifest.get("fingerprint") != fp:
-            manifest = None  # different plan/input → start fresh
+        try:
+            manifest = json.loads(_fs_read_text(spark, manifest_path))
+            if manifest.get("fingerprint") != fp:
+                manifest = None  # different plan/input → start fresh
+        except (ValueError, Py4JJavaError):
+            # unreadable or undecodable (e.g. truncated, or failing its
+            # checksum): start fresh, as on a fingerprint mismatch
+            manifest = None
 
     done = dict(manifest["completed"]) if manifest else {}
 

@@ -246,3 +246,37 @@ def test_curate_job_stage_dir_kill_resume(spark, tmp_path):
         "--split", "train=0.8,val=0.1,test=0.1",
     )
     assert "stages_skipped" not in m4
+
+
+def test_curate_job_truncated_manifest_starts_fresh(spark, tmp_path):
+    """A stage-dir manifest that fails to decode counts as absent: the
+    rerun recomputes every stage and writes the same output."""
+    chain = ["--max-rare-ppm", "900000", "--dedup", "exact",
+             "--split", "train=0.8,val=0.1,test=0.1"]
+    out = str(tmp_path / "curated")
+    stage_dir = str(tmp_path / "stages")
+    args = ["--input", DOCS, "--output", out, "--stage-dir", stage_dir,
+            *chain]
+    m1 = _run_job("curate_job.py", *args)
+    rows1 = sorted(
+        tuple(r) for r in spark.read.parquet(out)
+        .select("doc_id", "split").collect()
+    )
+    manifest = os.path.join(stage_dir, "manifest.json")
+    assert not os.path.exists(manifest + ".tmp")
+    with open(manifest) as f:
+        text = f.read()
+    with open(manifest, "w") as f:
+        f.write(text[: len(text) // 2])
+
+    m2 = _run_job("curate_job.py", *args)
+    assert "stages_skipped" not in m2
+    assert m2["stages"] == m1["stages"]
+    assert m2["splits"] == m1["splits"]
+    rows2 = sorted(
+        tuple(r) for r in spark.read.parquet(out)
+        .select("doc_id", "split").collect()
+    )
+    assert rows2 == rows1
+    with open(manifest) as f:
+        assert json.load(f)["completed"]

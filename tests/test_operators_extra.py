@@ -558,6 +558,35 @@ def test_dsir_weights_prefer_target_like_docs(spark):
         assert worst_target_like > best_source_only, mode
 
 
+def test_dsir_weights_independent_of_parallelism(spark):
+    """The per-doc weight is an exact integer sum of fixed-point bucket
+    log ratios, so input and shuffle partitioning cannot change it."""
+    from bloom_filters_spark.operators.dsir import dsir_importance_weights
+    from bloom_filters_spark.sources.pages import (
+        PAGES_SCHEMA,
+        generate_pages_pdf,
+    )
+
+    docs = spark.createDataFrame(
+        generate_pages_pdf(np.arange(300), seed=11), PAGES_SCHEMA
+    )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    runs = []
+    try:
+        for n_in, n_shuffle in ((1, 1), (7, 32)):
+            spark.conf.set(key, str(n_shuffle))
+            d = docs.repartition(n_in)
+            w = dsir_importance_weights(
+                d.select("doc_id", "text"),
+                d.filter(F.col("lang") == "en").select("doc_id", "text"),
+            )
+            runs.append(sorted(tuple(r) for r in w.collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert runs[0] and runs[0] == runs[1]
+
+
 def test_dsir_select_topk_and_gumbel(spark):
     """topk is the deterministic ranking head; gumbel is deterministic
     for a fixed seed and still biased toward high weights."""

@@ -10,13 +10,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bloom_filters_spark.operators.minhash_spark import make_signature_udf
+from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
 from bloom_filters_spark.operators.shingles import shingle_set_py, shingles_expr
-from bloom_filters_spark.pipeline import (
-    NearDupConfig,
-    near_dup_pipeline,
-    signatures,
-)
+from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -27,16 +23,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def brute_force_pairs(texts: dict[int, str], cfg: NearDupConfig):
     """All-pairs reference decisions: (pairs at est-J >= threshold,
-    signature dict).  Uses the same shingle derivation as cfg."""
-    from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
-    from bloom_filters_spark.operators.shingles import token_shingle_set_py
+    signature dict), over the Arrow kernel's shingle sets."""
 
     def sh(t):
-        if cfg.shingle_impl == "arrow":
-            return arrow_shingle_set_py(t, cfg.shingle_size, cfg.max_value)
-        if cfg.shingle_impl == "token_hash":
-            return token_shingle_set_py(t, cfg.shingle_size, cfg.max_value)
-        return shingle_set_py(t, cfg.shingle_size, cfg.max_value)
+        return arrow_shingle_set_py(t, cfg.shingle_size, cfg.max_value)
 
     factory = cfg.factory()
     ids = sorted(i for i, t in texts.items() if len(sh(t)))
@@ -92,48 +82,6 @@ def test_shingles_jvm_matches_python(spark):
         assert got[i] == shingle_set_py(t, 3), f"text {i!r}"
 
 
-def test_signature_impls_agree_with_numpy(spark):
-    """All three signature paths (jvm expr, pandas UDF on string
-    shingles, fused token-hash UDF) match their python oracles."""
-    from bloom_filters_spark.operators.shingles import token_shingle_set_py
-
-    texts = [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta") for i in range(20)]
-    df = spark.createDataFrame(texts, "doc_id long, text string")
-    factory = NearDupConfig(num_hashes=32, bands=8).factory()
-
-    for impl in ["jvm", "pandas"]:
-        cfg = NearDupConfig(num_hashes=32, bands=8, signature_impl=impl,
-                            shingle_impl="string")
-        got = {r["doc_id"]: r["signature"] for r in signatures(df, cfg).collect()}
-        for i, t in texts:
-            expected = factory.signature(
-                np.array(shingle_set_py(t, cfg.shingle_size), dtype=np.int64)
-            ).tolist()
-            assert got[i] == expected, f"{impl} doc {i}"
-
-    cfg = NearDupConfig(num_hashes=32, bands=8, shingle_impl="token_hash")
-    got = {r["doc_id"]: (r["shingles"], r["signature"])
-           for r in signatures(df, cfg).collect()}
-    for i, t in texts:
-        sh = token_shingle_set_py(t, cfg.shingle_size, cfg.max_value)
-        expected = factory.signature(np.array(sh, dtype=np.int64)).tolist()
-        assert sorted(got[i][0]) == sorted(int(x) for x in sh), f"tok shingles {i}"
-        assert got[i][1] == expected, f"token_hash doc {i}"
-
-
-def test_signature_udf_handles_empty_and_batches():
-    import pandas as pd
-
-    cfg = NearDupConfig(num_hashes=8, bands=4)
-    udf_fn = make_signature_udf(cfg.factory()).func
-    s = pd.Series([[1, 2, 3], [], [99]])
-    out = udf_fn(s)
-    assert out[1] is None
-    factory = cfg.factory()
-    assert out[0] == factory.signature(np.array([1, 2, 3])).tolist()
-    assert out[2] == factory.signature(np.array([99])).tolist()
-
-
 # ---------------------------------------------------------------------------
 # end-to-end vs brute force on real testdata documents
 # ---------------------------------------------------------------------------
@@ -144,9 +92,8 @@ def documents_texts(spark):
     return {r["doc_id"]: r["text"] for r in df.select("doc_id", "text").collect()}
 
 
-@pytest.mark.parametrize("shingle_impl", ["arrow", "token_hash", "string"])
-def test_pipeline_matches_brute_force_oracle(spark, documents_texts, shingle_impl):
-    cfg = NearDupConfig(threshold=0.7, verify="estimate", shingle_impl=shingle_impl)
+def test_pipeline_matches_brute_force_oracle(spark, documents_texts):
+    cfg = NearDupConfig(threshold=0.7, verify="estimate")
     texts = documents_texts
     oracle_pairs, _ = brute_force_pairs(texts, cfg)
 
@@ -173,14 +120,19 @@ def test_pipeline_matches_brute_force_oracle(spark, documents_texts, shingle_imp
 
 
 def test_pipeline_exact_verify_mode(spark, documents_texts):
-    """verify='exact' keeps only pairs with true shingle-Jaccard >= t."""
-    cfg = NearDupConfig(threshold=0.7, verify="exact", shingle_impl="string")
+    """verify='exact' keeps only pairs with true shingle-Jaccard >= t,
+    over the Arrow kernel's shingle sets."""
+    cfg = NearDupConfig(threshold=0.7, verify="exact")
     texts = documents_texts
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     _, stages = near_dup_pipeline(df, cfg, return_stages=True)
-    for r in stages["pairs"].collect():
-        sa = set(shingle_set_py(texts[r["id1"]], cfg.shingle_size))
-        sb = set(shingle_set_py(texts[r["id2"]], cfg.shingle_size))
+    pairs = stages["pairs"].collect()
+    assert pairs
+    for r in pairs:
+        sa = set(arrow_shingle_set_py(texts[r["id1"]], cfg.shingle_size,
+                                      cfg.max_value))
+        sb = set(arrow_shingle_set_py(texts[r["id2"]], cfg.shingle_size,
+                                      cfg.max_value))
         true_j = len(sa & sb) / len(sa | sb)
         assert true_j == pytest.approx(r["jaccard"])
         assert true_j >= cfg.threshold
@@ -461,7 +413,7 @@ def test_hot_band_star_fallback(spark):
 def test_band_hash_bits_32_same_clusters(spark, documents_texts):
     """band_hash_bits=32 folds the band hash; merged groups only add
     verify work, so cluster output must be identical to the 64-bit
-    default (and the band table's hash column becomes int)."""
+    width (and the band table's hash column becomes int)."""
     texts = documents_texts
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     c64 = NearDupConfig(threshold=0.7, band_hash_bits=64)
@@ -478,29 +430,6 @@ def test_band_hash_bits_32_same_clusters(spark, documents_texts):
     assert dict(bands32.dtypes)["band_hash"] == "int"
     with pytest.raises(ValueError):
         NearDupConfig(band_hash_bits=16)
-
-
-def test_band_hash_bits_default_resolution():
-    """The None default resolves per impl: 32 where the arrow kernels
-    band, 64 where only the JVM expression impls run — so a pre-switch
-    config like NearDupConfig(band_impl='jvm_unrolled') keeps working
-    without pinning band_hash_bits=64 by hand."""
-    assert NearDupConfig().resolved_band_hash_bits == 32
-    assert NearDupConfig(
-        fuse_bands=False, band_impl="jvm_unrolled"
-    ).resolved_band_hash_bits == 64
-    assert NearDupConfig(
-        fuse_bands=False, band_impl="jvm_hof"
-    ).resolved_band_hash_bits == 64
-    # fused path is arrow regardless of band_impl
-    assert NearDupConfig(band_impl="jvm_unrolled").resolved_band_hash_bits == 32
-    assert NearDupConfig(band_hash_bits=64).resolved_band_hash_bits == 64
-    # an EXPLICIT 32 with a JVM band impl is a contradiction: refuse
-    from bloom_filters_spark.pipeline import lsh_bands
-    with pytest.raises(ValueError, match="64-bit"):
-        lsh_bands(None, NearDupConfig(
-            fuse_bands=False, band_impl="jvm_unrolled", band_hash_bits=32
-        ))
 
 
 def test_near_dup_against_increment(spark):

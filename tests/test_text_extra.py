@@ -16,6 +16,7 @@ from bloom_filters_spark.functions.url import canonicalize_url_expr
 
 
 def _canon_py(url: str) -> str:
+    url = re.sub(r"[\x00-\x1f\x7f]", "", url)
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", url)
     if not m:
         return re.sub(r"#.*$", "", url)
@@ -60,6 +61,7 @@ URLS = [
     "http://user:pw@Example.com/secret",        # userinfo stripped
     "http://h.com/a&ref=b",                     # '&' in PATH: not tracking
     "https://h.com/a&ref=b?utm_x=1",            # path '&' kept, query cleaned
+    "https://h.com/a/\x01?x=\x02\x7f1",           # control chars stripped
 ]
 
 
@@ -90,6 +92,27 @@ def test_canonicalize_url_specific_cases(spark):
     # '&' is a legal PATH character: '/a&ref=b' is not a tracking param
     assert got["http://h.com/a&ref=b"] == "http://h.com/a&ref=b"
     assert got["https://h.com/a&ref=b?utm_x=1"] == "https://h.com/a&ref=b"
+
+
+def test_canonicalize_url_strips_control_chars(spark):
+    """Control characters would collide with the chain's \\x01/\\x02
+    sentinels: a URL carrying them keys like the URL without them."""
+    pairs = [
+        ("https://example.com/a\x01?id=1", "https://example.com/a?id=1"),
+        ("https://example.com/a/\x01", "https://example.com/a/"),
+        ("\x02HTTPS://Example.com/x\x7f", "HTTPS://Example.com/x"),
+        ("https://ex\x00ample.com/p?utm_source=\x01x&k=2\x1f",
+         "https://example.com/p?utm_source=x&k=2"),
+        ("not a url\x01 #frag", "not a url #frag"),
+    ]
+    df = spark.createDataFrame(pairs, "dirty string, clean string")
+    got = df.select(
+        canonicalize_url_expr(F.col("dirty")).alias("d"),
+        canonicalize_url_expr(F.col("clean")).alias("c"),
+    ).collect()
+    for (dirty, _), r in zip(pairs, got):
+        assert r["d"] == r["c"], (dirty, r["d"], r["c"])
+    assert got[1]["d"] == "https://example.com/a"
 
 
 def _rep_py(text: str, n: int):
