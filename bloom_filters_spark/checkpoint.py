@@ -12,18 +12,32 @@ the manifest to a snapshot/metadata table):
     <root>/signatures/_manifest.json         completed buckets + lineage
     <root>/pairs/*.parquet, _manifest.json   verified pairs
     <root>/labels_iter_<k>/, _manifest.json  label-prop iterations
+                                             (distributed path only)
     <root>/clusters/*.parquet, _manifest.json
+
+The stages run the same stage graph as ``near_dup_pipeline``: candidate
+pairs are materialized once (local checkpoint + count), only their
+participants' signatures feed the verify join, and components are
+solved on the driver whenever the edge set fits
+(``operators.components.collect_edges``).
 
 Resume semantics:
 * signatures: bucket b = pmod(xxhash64(doc_id), n_buckets); only buckets
   missing from the manifest are recomputed (anti-join by bucket id);
   dynamic partition overwrite keeps completed buckets untouched.
 * pairs: all-or-nothing stage (skipped when its manifest exists).
-* label propagation: resumes from the last completed iteration.
+* clusters: all-or-nothing on the driver path (no ``labels_iter_<k>``
+  is written; the manifest records ``iterations: 0``).  Above the
+  driver threshold, or for non-integral ids, distributed label
+  propagation checkpoints every iteration as ``labels_iter_<k>`` and
+  resumes from the last completed one.
 
 Each manifest carries lineage: stage, config fingerprint, per-bucket row
-counts and wall_ms.  A config change invalidates the checkpoint (the
-fingerprint no longer matches → stage recomputes from scratch).
+counts and wall_ms.  Row counts come from an ``Observation`` on the
+write itself, not from reading the written table back.  A config change
+invalidates the checkpoint (the fingerprint no longer matches → stage
+recomputes from scratch); a torn or undecodable manifest counts as
+absent, so its stage recomputes.
 """
 
 from __future__ import annotations
@@ -33,13 +47,16 @@ import os
 import time
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from bloom_filters_spark.operators import components
 from bloom_filters_spark.operators.pairs import candidate_pairs
 from bloom_filters_spark.pipeline import (
     NearDupConfig,
     lsh_bands,
+    participant_ids,
+    resolve_pair_mode,
     signatures,
     verified_pairs,
 )
@@ -72,11 +89,17 @@ def _manifest_path(stage_dir: str) -> str:
 
 
 def read_manifest(stage_dir: str) -> dict | None:
+    """The stage's manifest, or None when it is missing, torn or
+    undecodable — the stage then recomputes."""
     p = _manifest_path(stage_dir)
     if not os.path.exists(p):
         return None
-    with open(p) as f:
-        return json.load(f)
+    try:
+        with open(p) as f:
+            man = json.load(f)
+    except ValueError:  # JSONDecodeError and UnicodeDecodeError
+        return None
+    return man if isinstance(man, dict) else None
 
 
 def write_manifest(stage_dir: str, payload: dict):
@@ -84,6 +107,10 @@ def write_manifest(stage_dir: str, payload: dict):
     tmp = _manifest_path(stage_dir) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
+        # durable before it is published: a crash after the rename
+        # must not leave a manifest whose bytes never reached the disk
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, _manifest_path(stage_dir))  # atomic publish
 
 
@@ -172,35 +199,32 @@ class CheckpointedNearDup:
                 prev_mode = self.spark.conf.get(overwrite_key)
             except Exception:
                 prev_mode = None
+            # per-bucket lineage counted on the write itself, after the
+            # repartition: the observation runs in the result stage, so
+            # a retried map stage cannot count a row twice
+            obs = Observation()
+            counted = sigs.repartition(len(missing), "bucket").observe(
+                obs,
+                *(F.count_if(F.col("bucket") == b).alias(str(b))
+                  for b in missing),
+            )
             self.spark.conf.set(overwrite_key, "dynamic")
             try:
-                self._write(
-                    sigs.repartition(len(missing), "bucket"),
-                    sig_dir,
-                    partition_by="bucket",
-                )
+                self._write(counted, sig_dir, partition_by="bucket")
             finally:
                 if prev_mode is None:
                     self.spark.conf.unset(overwrite_key)
                 else:
                     self.spark.conf.set(overwrite_key, prev_mode)
             wall_ms = int((time.time() - t0) * 1000)
-            # per-bucket lineage from the just-written files
-            counts = (
-                self._read(sig_dir)
-                .filter(F.col("bucket").isin(missing))
-                .groupBy("bucket")
-                .count()
-                .collect()
-            )
-            for r in counts:
-                done[str(r["bucket"])] = {
-                    "rows": r["count"],
-                    "wall_ms": wall_ms // max(len(missing), 1),
-                }
-            # buckets with zero output rows still count as completed
+            rows = obs.get
             for b in missing:
-                done.setdefault(str(b), {"rows": 0, "wall_ms": 0})
+                n = int(rows[str(b)])
+                # buckets with zero output rows still count as completed
+                done[str(b)] = {
+                    "rows": n,
+                    "wall_ms": wall_ms // len(missing) if n else 0,
+                }
             write_manifest(
                 sig_dir,
                 {
@@ -217,17 +241,41 @@ class CheckpointedNearDup:
         return self._read(sig_dir).drop("bucket")
 
     # -- stage 2: candidate + verified pairs --------------------------------
+    def _pair_mode(self, sigs: DataFrame) -> str:
+        """``cfg.pair_mode``, with "auto" resolved from the signatures
+        manifest's row counts (no Spark job)."""
+
+        def n_docs() -> int:
+            man = read_manifest(self._sig_dir())
+            if man is None or man.get("fingerprint") != self.fingerprint:
+                return sigs.count()
+            return sum(b["rows"] for b in man["buckets"].values())
+
+        return resolve_pair_mode(self.cfg, n_docs)
+
     def pairs_stage(self, sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         pair_dir = os.path.join(self.ckpt.root, "pairs")
         man = read_manifest(pair_dir)
         if man is None or man.get("fingerprint") != self.fingerprint:
             t0 = time.time()
+            # materialized once (the same stage graph as
+            # near_dup_pipeline): the id union, the semi-join and the
+            # verify join all read the checkpoint, not the band kernel
+            # and its exchange again
             cands = candidate_pairs(
-                lsh_bands(sigs, self.cfg, id_col), self.cfg.max_band_group, id_col
+                lsh_bands(sigs, self.cfg, id_col), self.cfg.max_band_group,
+                id_col, mode=self._pair_mode(sigs),
+            ).localCheckpoint(eager=False)
+            n_cands = cands.count()
+            side = sigs.join(
+                participant_ids(cands, n_cands, id_col), id_col, "left_semi"
             )
-            pairs = verified_pairs(cands, sigs, self.cfg, id_col)
+            obs = Observation()
+            pairs = verified_pairs(
+                cands, side, self.cfg, id_col, sigs_restricted=True
+            ).observe(obs, F.count(F.lit(1)).alias("rows"))
             self._write(pairs, pair_dir)
-            n = self._read(pair_dir).count()
+            n = int(obs.get["rows"])
             write_manifest(
                 pair_dir,
                 {
@@ -253,6 +301,15 @@ class CheckpointedNearDup:
         if man is not None and man.get("fingerprint") == self.fingerprint:
             self.counters.append({"stage": "clusters", "recomputed": False})
             return self._read(out_dir)
+
+        # driver solve when the edge set fits: one collect, one write,
+        # no per-iteration checkpoints (the stage is all-or-nothing)
+        tbl = components.collect_edges(pairs)
+        if tbl is not None:
+            out = components._components_driver(
+                tbl, self.spark, vertices, id_col
+            )
+            return self._write_clusters(out, out_dir, iterations=0)
 
         sym = pairs.select(
             F.col("id1").alias("src"), F.col("id2").alias("dst")
@@ -353,11 +410,19 @@ class CheckpointedNearDup:
                 F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
             )
         )
+        return self._write_clusters(out, out_dir, iterations=it)
+
+    def _write_clusters(self, out: DataFrame, out_dir: str,
+                        iterations: int) -> DataFrame:
         self._write(out, out_dir)
         write_manifest(
             out_dir,
             {"stage": "clusters", "fingerprint": self.fingerprint,
-             "iterations": it},
+             "iterations": iterations},
+        )
+        self.counters.append(
+            {"stage": "clusters", "recomputed": True,
+             "iterations": iterations}
         )
         return self._read(out_dir)
 

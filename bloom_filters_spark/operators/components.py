@@ -13,12 +13,48 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: Largest edge set the driver solve collects; above it (or for non-
+#: integral ids) components fall back to distributed label propagation.
+DRIVER_EDGE_THRESHOLD = 2_000_000
+
+
+def collect_edges(edges: DataFrame, threshold: int | None = None,
+                  n_edges: int | None = None):
+    """The (id1, id2) edge list as one Arrow table when the driver solve
+    can take it, else None.
+
+    The size check and the collect are one round trip: up to
+    ``threshold + 1`` edges arrive in a single Arrow collect, and one
+    edge too many means None.  A caller that already knows the edge
+    count passes ``n_edges`` to skip the collect when it is above the
+    threshold.  ``threshold`` defaults to :data:`DRIVER_EDGE_THRESHOLD`;
+    0 always answers None.
+    """
+    if threshold is None:
+        threshold = DRIVER_EDGE_THRESHOLD
+    # the Arrow driver solve assumes int64-castable ids; any other id
+    # type (string urls, decimals) takes the type-agnostic labelprop
+    # path regardless of edge count
+    integral = all(
+        t in ("bigint", "int", "smallint", "tinyint")
+        for _, t in edges.select("id1", "id2").dtypes
+    )
+    if (
+        not integral
+        or threshold <= 0
+        or (n_edges is not None and n_edges > threshold)
+    ):
+        return None
+    tbl = edges.select("id1", "id2").limit(threshold + 1).toArrow()
+    return tbl if tbl.num_rows <= threshold else None
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 20,
     id_col: str = "doc_id",
-    driver_edge_threshold: int = 2_000_000,
+    driver_edge_threshold: int | None = None,
     n_edges: int | None = None,
 ) -> DataFrame:
     """edges(id1, id2) → (doc_id, cluster_id = min id in component).
@@ -28,37 +64,16 @@ def connected_components(
 
     Adaptive execution: the verified-pair edge set is usually tiny
     relative to the corpus, so when it fits (<= driver_edge_threshold
-    rows) we collect it and run union-find on the driver — O(E α(E))
-    with zero shuffles — and broadcast the label map back.  The size
-    check and the collect are one round trip: up to
-    ``driver_edge_threshold + 1`` edges arrive in a single Arrow
-    collect, and one edge too many means the fallback, distributed
-    hash-min label propagation (O(diameter) shuffled iterations).  A
-    caller that already knows the edge count passes ``n_edges`` to skip
-    the collect when it is above the threshold.  Set the threshold to 0
-    to force the distributed path.
+    rows, default :data:`DRIVER_EDGE_THRESHOLD`) we collect it
+    (:func:`collect_edges`) and run union-find on the driver —
+    O(E α(E)) with zero shuffles — and broadcast the label map back.
+    Otherwise the fallback is distributed hash-min label propagation
+    (O(diameter) shuffled iterations).  Set the threshold to 0 to force
+    the distributed path.
     """
-    # the Arrow driver solve assumes int64-castable ids; any other id
-    # type (string urls, decimals) takes the type-agnostic labelprop
-    # path regardless of edge count
-    integral = all(
-        t in ("bigint", "int", "smallint", "tinyint")
-        for c, t in edges.select("id1", "id2").dtypes
-    )
-    if (
-        integral
-        and driver_edge_threshold > 0
-        and (n_edges is None or n_edges <= driver_edge_threshold)
-    ):
-        tbl = (
-            edges.select("id1", "id2")
-            .limit(driver_edge_threshold + 1)
-            .toArrow()
-        )
-        if tbl.num_rows <= driver_edge_threshold:
-            return _components_driver(
-                tbl, edges.sparkSession, vertices, id_col
-            )
+    tbl = collect_edges(edges, driver_edge_threshold, n_edges)
+    if tbl is not None:
+        return _components_driver(tbl, edges.sparkSession, vertices, id_col)
     return _components_labelprop(edges, vertices, max_iter, id_col)
 
 

@@ -141,24 +141,37 @@ def lsh_bands(sigs: DataFrame, cfg: NearDupConfig, id_col: str = "doc_id") -> Da
                        hash_bits=cfg.band_hash_bits)
 
 
-def _participant_signatures(docs: DataFrame, cands: DataFrame, n_cands: int,
-                            cfg: NearDupConfig, id_col: str, text_col: str,
-                            hot_shingles) -> DataFrame:
-    """Signatures of only the docs in a candidate pair (id1, id2),
-    pruned with the SAME hot set the bands were built with, or
-    verify-side estimates drift from banding.
+def resolve_pair_mode(cfg: NearDupConfig, n_docs) -> str:
+    """``cfg.pair_mode`` with "auto" resolved against the corpus size;
+    ``n_docs`` is a callable, only called for "auto"."""
+    if cfg.pair_mode != "auto":
+        return cfg.pair_mode
+    return "count_join" if n_docs() > cfg.pair_mode_threshold else "grouped"
 
-    A plain semi-join would shuffle the full corpus INCLUDING the text
-    column by id (measured 1.2GB at 800k docs); the id set is bounded
-    by 2x the candidate count, so it is broadcast when small and the
-    text column streams map-side."""
+
+def participant_ids(cands: DataFrame, n_cands: int, id_col: str) -> DataFrame:
+    """Distinct ids of the docs in a candidate pair (id1, id2), ready to
+    semi-join a doc or signature table down to the pair participants.
+
+    A plain semi-join against the candidates would shuffle the full
+    table INCLUDING its text or signature column by id (measured 1.2GB
+    at 800k docs); the id set is bounded by 2x the candidate count, so
+    it is broadcast when small and the wide side streams map-side."""
     ids = (
         cands.select(F.col("id1").alias(id_col))
         .unionByName(cands.select(F.col("id2").alias(id_col)))
         .distinct()
     )
-    if n_cands < 25_000_000:
-        ids = F.broadcast(ids)
+    return F.broadcast(ids) if n_cands < 25_000_000 else ids
+
+
+def _participant_signatures(docs: DataFrame, cands: DataFrame, n_cands: int,
+                            cfg: NearDupConfig, id_col: str, text_col: str,
+                            hot_shingles) -> DataFrame:
+    """Signatures of only the docs in a candidate pair, pruned with the
+    SAME hot set the bands were built with, or verify-side estimates
+    drift from banding."""
+    ids = participant_ids(cands, n_cands, id_col)
     return signatures(docs.join(ids, id_col, "left_semi"), cfg, id_col,
                       text_col, hot_shingles=hot_shingles)
 
@@ -454,15 +467,6 @@ def near_dup_pipeline(
             _n_docs[0] = vertices.count()
         return _n_docs[0]
 
-    def _pair_mode():
-        if cfg.pair_mode != "auto":
-            return cfg.pair_mode
-        return (
-            "count_join"
-            if _count() > cfg.pair_mode_threshold
-            else "grouped"
-        )
-
     doc_rep = None
     if cfg.exact_prededup != "off":
         # ASCII-only lowercase (translate A-Z), matching the Arrow
@@ -542,7 +546,8 @@ def near_dup_pipeline(
     # sharing one broadcast of it (blocks are GC-cleaned with the frame,
     # as in substring_dup_pairs)
     candidates = candidate_pairs(
-        bands, cfg.max_band_group, id_col, mode=_pair_mode()
+        bands, cfg.max_band_group, id_col,
+        mode=resolve_pair_mode(cfg, _count),
     ).localCheckpoint(eager=False)
     n_cands = candidates.count()
     # not cached: verify reads them once, through one reused broadcast

@@ -8,11 +8,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from bloom_filters_spark import checkpoint
 from bloom_filters_spark.checkpoint import (
     CheckpointConfig,
     CheckpointedNearDup,
     read_manifest,
 )
+from bloom_filters_spark.operators import components
 from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 
 
@@ -33,17 +35,12 @@ def test_checkpointed_matches_direct(spark, docs_df, tmp_path):
     assert got == direct
 
 
-def test_resume_skips_completed_buckets(spark, docs_df, tmp_path):
-    cfg = NearDupConfig(threshold=0.7)
-    root = str(tmp_path)
-    cp1 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=8))
-    first = clusters_dict(cp1.run(docs_df))
-
-    # simulate a crash that lost buckets 2 and 5 of the signature stage
-    # and everything downstream
+def crash_signature_buckets(root, buckets):
+    """Simulate a crash that lost the given signature buckets and every
+    stage downstream of them."""
     sig_dir = os.path.join(root, "signatures")
     man = read_manifest(sig_dir)
-    for b in ("2", "5"):
+    for b in buckets:
         del man["buckets"][b]
         shutil.rmtree(os.path.join(sig_dir, f"bucket={b}"), ignore_errors=True)
     with open(os.path.join(sig_dir, "_manifest.json"), "w") as f:
@@ -54,6 +51,20 @@ def test_resume_skips_completed_buckets(spark, docs_df, tmp_path):
         if d.startswith("labels_iter_"):
             shutil.rmtree(os.path.join(root, d))
 
+
+def label_iterations(root):
+    return sorted(int(d[len("labels_iter_"):]) for d in os.listdir(root)
+                  if d.startswith("labels_iter_"))
+
+
+def test_resume_skips_completed_buckets(spark, docs_df, tmp_path):
+    cfg = NearDupConfig(threshold=0.7)
+    root = str(tmp_path)
+    cp1 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=8))
+    first = clusters_dict(cp1.run(docs_df))
+
+    crash_signature_buckets(root, ("2", "5"))
+
     cp2 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=8))
     second = clusters_dict(cp2.run(docs_df))
     assert second == first
@@ -61,6 +72,100 @@ def test_resume_skips_completed_buckets(spark, docs_df, tmp_path):
     sig_counter = [c for c in cp2.metrics() if c["stage"] == "signatures"][0]
     assert sig_counter["recomputed_buckets"] == 2
     assert sig_counter["skipped_buckets"] == 6
+
+    # the row counts the manifests record (observed on the writes)
+    # equal the rows actually in the written tables
+    sig_dir = os.path.join(root, "signatures")
+    written = {str(r["bucket"]): r["count"] for r in
+               spark.read.parquet(sig_dir).groupBy("bucket").count().collect()}
+    recorded = {b: m["rows"] for b, m in read_manifest(sig_dir)["buckets"].items()}
+    assert set(recorded) == {str(b) for b in range(8)}
+    assert recorded == {b: written.get(b, 0) for b in recorded}
+    assert sum(recorded.values()) == docs_df.count()
+    pair_dir = os.path.join(root, "pairs")
+    assert read_manifest(pair_dir)["rows"] == spark.read.parquet(pair_dir).count()
+    assert read_manifest(pair_dir)["rows"] > 0
+
+
+def test_torn_manifest_recomputes_stage(spark, docs_df, tmp_path):
+    """A truncated manifest reads as absent: the resume recomputes that
+    stage instead of crashing, and the clusters stay the same."""
+    cfg = NearDupConfig(threshold=0.7)
+    root = str(tmp_path)
+    first = clusters_dict(
+        CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4)).run(docs_df)
+    )
+    man_path = os.path.join(root, "pairs", "_manifest.json")
+    with open(man_path) as f:
+        text = f.read()
+    with open(man_path, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert read_manifest(os.path.join(root, "pairs")) is None
+
+    cp2 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4))
+    assert clusters_dict(cp2.run(docs_df)) == first
+    stages = {c["stage"]: c for c in cp2.metrics()}
+    assert stages["signatures"]["recomputed_buckets"] == 0
+    assert stages["pairs"]["recomputed"] is True
+    assert read_manifest(os.path.join(root, "pairs"))["rows"] == stages["pairs"]["rows"]
+
+
+def test_pair_mode_reaches_candidate_pairs(spark, docs_df, tmp_path, monkeypatch):
+    """cfg.pair_mode is fingerprinted, so it must also select the
+    candidate exchange; the clusters match near_dup_pipeline's."""
+    cfg = NearDupConfig(threshold=0.7, pair_mode="count_join")
+    modes = []
+    real = checkpoint.candidate_pairs
+
+    def spy(bands, max_band_group, id_col, mode="grouped"):
+        modes.append(mode)
+        return real(bands, max_band_group, id_col, mode=mode)
+
+    monkeypatch.setattr(checkpoint, "candidate_pairs", spy)
+    cp = CheckpointedNearDup(spark, cfg, CheckpointConfig(str(tmp_path), n_buckets=4))
+    got = clusters_dict(cp.run(docs_df))
+    assert modes == ["count_join"]
+    assert got == clusters_dict(near_dup_pipeline(docs_df, cfg))
+
+
+def test_small_run_solves_components_on_driver(spark, docs_df, tmp_path):
+    """An edge set under the driver threshold is solved in one pass:
+    no label-propagation iteration is checkpointed."""
+    cfg = NearDupConfig(threshold=0.7)
+    root = str(tmp_path)
+    CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4)).run(docs_df)
+    assert label_iterations(root) == []
+    assert read_manifest(os.path.join(root, "clusters"))["iterations"] == 0
+
+
+def test_labelprop_resumes_from_last_iteration(spark, docs_df, tmp_path,
+                                               monkeypatch):
+    """Above the driver threshold (forced to 0 here) the clusters stage
+    checkpoints every label-propagation iteration; a crash after
+    iteration 1 resumes from it and gives near_dup_pipeline's
+    clusters."""
+    cfg = NearDupConfig(threshold=0.7)
+    root = str(tmp_path)
+    expected = clusters_dict(near_dup_pipeline(docs_df, cfg))
+    monkeypatch.setattr(components, "DRIVER_EDGE_THRESHOLD", 0)
+    cp1 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4))
+    assert clusters_dict(cp1.run(docs_df)) == expected
+    iters = label_iterations(root)
+    assert iters[0] == 1 and len(iters) >= 2
+
+    # crash after labels_iter_1 was published
+    shutil.rmtree(os.path.join(root, "clusters"))
+    for k in iters[1:]:
+        shutil.rmtree(os.path.join(root, f"labels_iter_{k}"))
+
+    cp2 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4))
+    assert clusters_dict(cp2.run(docs_df)) == expected
+    resumed = [c["iteration"] for c in cp2.metrics() if c["stage"] == "labels"]
+    assert resumed and resumed[0] == 2
+    assert label_iterations(root) == iters
+    stages = {c["stage"]: c for c in cp2.metrics()}
+    assert stages["pairs"]["recomputed"] is False
+    assert stages["clusters"]["iterations"] == iters[-1]
 
 
 def test_full_resume_is_all_skips(spark, docs_df, tmp_path):
