@@ -15,11 +15,13 @@ the manifest to a snapshot/metadata table):
                                              (distributed path only)
     <root>/clusters/*.parquet, _manifest.json
 
-The stages run the same stage graph as ``near_dup_pipeline``: candidate
-pairs are materialized once (local checkpoint + count), only their
-participants' signatures feed the verify join, and components are
-solved on the driver whenever the edge set fits
-(``operators.components.collect_edges``).
+The stages call the same stage code as ``near_dup_pipeline``: the
+candidate → verify step is ``pipeline.verify_candidates`` (candidates
+materialized once, only their participants' signatures in the verify
+join), components are solved on the driver whenever the edge set fits
+(``operators.components.collect_edges``), and above that the label
+propagation loop is ``operators.components.label_propagation``, with
+this module's store as its per-iteration materialization.
 
 Resume semantics:
 * signatures: bucket b = pmod(xxhash64(doc_id), n_buckets); only buckets
@@ -31,6 +33,9 @@ Resume semantics:
   driver threshold, or for non-integral ids, distributed label
   propagation checkpoints every iteration as ``labels_iter_<k>`` and
   resumes from the last completed one.
+* an empty input gives empty stages: no signature bucket file is
+  written, so the stage returns the kernel's empty output instead of
+  reading the store back.
 
 Each manifest carries lineage: stage, config fingerprint, per-bucket row
 counts and wall_ms.  Row counts come from an ``Observation`` on the
@@ -55,10 +60,9 @@ from bloom_filters_spark.operators.pairs import candidate_pairs
 from bloom_filters_spark.pipeline import (
     NearDupConfig,
     lsh_bands,
-    participant_ids,
     resolve_pair_mode,
     signatures,
-    verified_pairs,
+    verify_candidates,
 )
 
 
@@ -238,6 +242,10 @@ class CheckpointedNearDup:
             {"stage": "signatures", "recomputed_buckets": len(missing),
              "skipped_buckets": self.ckpt.n_buckets - len(missing)}
         )
+        if not any(b["rows"] for b in done.values()):
+            # an empty input writes no bucket file to read a schema from:
+            # the kernel's own (empty) output stands in for the store
+            return signatures(df.limit(0), self.cfg, id_col, text_col)
         return self._read(sig_dir).drop("bucket")
 
     # -- stage 2: candidate + verified pairs --------------------------------
@@ -258,22 +266,17 @@ class CheckpointedNearDup:
         man = read_manifest(pair_dir)
         if man is None or man.get("fingerprint") != self.fingerprint:
             t0 = time.time()
-            # materialized once (the same stage graph as
-            # near_dup_pipeline): the id union, the semi-join and the
-            # verify join all read the checkpoint, not the band kernel
-            # and its exchange again
-            cands = candidate_pairs(
-                lsh_bands(sigs, self.cfg, id_col), self.cfg.max_band_group,
-                id_col, mode=self._pair_mode(sigs),
-            ).localCheckpoint(eager=False)
-            n_cands = cands.count()
-            side = sigs.join(
-                participant_ids(cands, n_cands, id_col), id_col, "left_semi"
+            # the same candidate → verify step as near_dup_pipeline, over
+            # the stored signatures
+            _, _, pairs = verify_candidates(
+                candidate_pairs(
+                    lsh_bands(sigs, self.cfg, id_col), self.cfg.max_band_group,
+                    id_col, mode=self._pair_mode(sigs),
+                ),
+                sigs, self.cfg, id_col,
             )
             obs = Observation()
-            pairs = verified_pairs(
-                cands, side, self.cfg, id_col, sigs_restricted=True
-            ).observe(obs, F.count(F.lit(1)).alias("rows"))
+            pairs = pairs.observe(obs, F.count(F.lit(1)).alias("rows"))
             self._write(pairs, pair_dir)
             n = int(obs.get["rows"])
             write_manifest(
@@ -292,11 +295,10 @@ class CheckpointedNearDup:
             )
         return self._read(pair_dir)
 
-    # -- stage 3: label propagation with per-iteration checkpoints ----------
+    # -- stage 3: components, label propagation checkpointed per iteration --
     def clusters_stage(self, pairs: DataFrame, vertices: DataFrame,
                        id_col: str = "doc_id", max_iter: int = 20) -> DataFrame:
-        root = self.ckpt.root
-        out_dir = os.path.join(root, "clusters")
+        out_dir = os.path.join(self.ckpt.root, "clusters")
         man = read_manifest(out_dir)
         if man is not None and man.get("fingerprint") == self.fingerprint:
             self.counters.append({"stage": "clusters", "recomputed": False})
@@ -311,106 +313,46 @@ class CheckpointedNearDup:
             )
             return self._write_clusters(out, out_dir, iterations=0)
 
-        sym = pairs.select(
-            F.col("id1").alias("src"), F.col("id2").alias("dst")
-        ).unionByName(
-            pairs.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
-        ).dropDuplicates(["src", "dst"])
-
         # resume from the last completed iteration checkpoint
-        start_iter = 0
-        labels = None
+        labels, start_iter = None, 0
         for k in range(max_iter, 0, -1):
-            it_dir = os.path.join(root, f"labels_iter_{k}")
+            it_dir = os.path.join(self.ckpt.root, f"labels_iter_{k}")
             m = read_manifest(it_dir)
             if m is not None and m.get("fingerprint") == self.fingerprint:
                 labels = self._read(it_dir)
-                start_iter = k
-                if m.get("converged"):
-                    start_iter = max_iter  # nothing left to do
+                # a converged iteration leaves nothing to do
+                start_iter = max_iter if m.get("converged") else k
                 break
-        if labels is None:
-            labels = (
-                sym.select(F.col("src").alias(id_col))
-                .distinct()
-                .withColumn("label", F.col(id_col))
-            )
-
-        it = start_iter
-        converged = False
-        while it < max_iter and not converged:
-            it += 1
-            t0 = time.time()
-            msgs = (
-                sym.join(labels, sym.src == labels[id_col])
-                .groupBy(F.col("dst").alias(id_col))
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            stepped = labels.join(msgs, id_col, "left").select(
-                id_col,
-                F.col("label").alias("old_label"),
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-            )
-            # pointer jumping (label := label of label), same as
-            # components._components_labelprop: doubles the effective
-            # hop distance per iteration so chain-shaped components
-            # converge in O(log diameter) checkpointed iterations
-            jump = stepped.select(
-                F.col(id_col).alias("_jid"), F.col("label").alias("_jlabel")
-            )
-            stepped = (
-                stepped.join(jump, stepped["label"] == jump["_jid"], "left")
-                .select(
-                    id_col,
-                    "old_label",
-                    F.least(
-                        F.col("label"), F.coalesce("_jlabel", "label")
-                    ).alias("label"),
-                )
-            )
-            it_dir = os.path.join(root, f"labels_iter_{it}")
-            self._write(stepped, it_dir)
-            stepped = self._read(it_dir)
-            changed = stepped.filter(F.col("label") < F.col("old_label")).count()
-            converged = changed == 0
-            write_manifest(
-                it_dir,
-                {
-                    "stage": f"labels_iter_{it}",
-                    "fingerprint": self.fingerprint,
-                    "changed": changed,
-                    "converged": converged,
-                    "wall_ms": int((time.time() - t0) * 1000),
-                },
-            )
-            labels = stepped.select(id_col, "label")
-            self.counters.append(
-                {"stage": "labels", "iteration": it, "changed": changed}
-            )
-
-        if not converged and it >= max_iter and start_iter < max_iter:
-            # same contract as components._components_labelprop: never
-            # checkpoint a silently-split clustering — the manifest
-            # guard would make the wrong result sticky across runs
-            import warnings
-
-            warnings.warn(
-                f"label propagation did not converge in {max_iter} "
-                f"iterations ({changed} labels still changing); "
-                "clusters may be split — raise max_iter",
-                RuntimeWarning,
-            )
-
-        out = (
-            vertices.select(id_col)
-            .join(labels.select(id_col, F.col("label").alias("cluster_id")),
-                  id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-            )
+        out, it = components.label_propagation(
+            pairs, vertices, max_iter, id_col,
+            materialize=self._label_iteration, labels=labels,
+            start_iter=start_iter,
         )
         return self._write_clusters(out, out_dir, iterations=it)
+
+    def _label_iteration(self, stepped: DataFrame, it: int):
+        """Write iteration ``it``'s labels, publish its manifest, and read
+        them back: ``label_propagation``'s materialization step."""
+        t0 = time.time()
+        it_dir = os.path.join(self.ckpt.root, f"labels_iter_{it}")
+        obs = Observation()
+        self._write(stepped.observe(obs, F.count_if(
+            F.col("label") < F.col("old_label")).alias("changed")), it_dir)
+        changed = int(obs.get["changed"])
+        write_manifest(
+            it_dir,
+            {
+                "stage": f"labels_iter_{it}",
+                "fingerprint": self.fingerprint,
+                "changed": changed,
+                "converged": changed == 0,
+                "wall_ms": int((time.time() - t0) * 1000),
+            },
+        )
+        self.counters.append(
+            {"stage": "labels", "iteration": it, "changed": changed}
+        )
+        return self._read(it_dir), changed
 
     def _write_clusters(self, out: DataFrame, out_dir: str,
                         iterations: int) -> DataFrame:

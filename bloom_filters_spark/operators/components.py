@@ -3,7 +3,8 @@
 Catalyst has no fixpoint operator (SURVEY.md §4.3), so the loop lives on
 the driver: each iteration propagates the current minimum label across
 edges and keeps the elementwise min; ``localCheckpoint`` truncates
-lineage every iteration.  Dedup clusters are star-like → expect <= ~5
+lineage every iteration (``checkpoint.py`` passes its own store to the
+same loop instead).  Dedup clusters are star-like → expect <= ~5
 iterations; ``max_iter`` caps pathological chains.
 """
 
@@ -74,7 +75,7 @@ def connected_components(
     tbl = collect_edges(edges, driver_edge_threshold, n_edges)
     if tbl is not None:
         return _components_driver(tbl, edges.sparkSession, vertices, id_col)
-    return _components_labelprop(edges, vertices, max_iter, id_col)
+    return label_propagation(edges, vertices, max_iter, id_col)[0]
 
 
 def _components_driver(tbl, spark, vertices: DataFrame | None,
@@ -133,26 +134,50 @@ def _components_driver(tbl, spark, vertices: DataFrame | None,
     return lbl_df
 
 
-def _components_labelprop(
+def _materialize_in_memory(stepped: DataFrame, it: int):
+    stepped = stepped.localCheckpoint()  # one materialization per iteration
+    # whether any label changed is all the loop needs: stop at the first
+    changed = stepped.filter(F.col("label") < F.col("old_label"))
+    return stepped, len(changed.take(1))
+
+
+def label_propagation(
     edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iter: int,
-    id_col: str,
-) -> DataFrame:
+    vertices: DataFrame | None = None,
+    max_iter: int = 20,
+    id_col: str = "doc_id",
+    materialize=_materialize_in_memory,
+    labels: DataFrame | None = None,
+    start_iter: int = 0,
+):
+    """Distributed hash-min label propagation with pointer jumping →
+    ``(clusters(id_col, cluster_id), last iteration)``.
+
+    ``materialize(stepped, it)`` stores iteration ``it``'s labels
+    ``(id_col, old_label, label)`` and returns them re-read together
+    with the number of labels that changed (the loop only tests it for
+    0): by default a ``localCheckpoint`` that stops counting at 1, or a
+    table write plus manifest in a checkpoint store.
+    ``labels``/``start_iter`` resume from a stored iteration; a
+    ``start_iter`` of ``max_iter`` runs no iteration.
+    """
     sym = edges.select(
         F.col("id1").alias("src"), F.col("id2").alias("dst")
     ).unionByName(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
     sym = sym.dropDuplicates(["src", "dst"]).localCheckpoint()
 
-    labels = (
-        sym.select(F.col("src").alias(id_col))
-        .distinct()
-        .withColumn("label", F.col(id_col))
-        .localCheckpoint()
-    )
+    if labels is None:
+        labels = (
+            sym.select(F.col("src").alias(id_col))
+            .distinct()
+            .withColumn("label", F.col(id_col))
+            .localCheckpoint()
+        )
+    labels = labels.select(id_col, "label")
 
-    converged = False
-    for _ in range(max_iter):
+    it, converged = start_iter, False
+    while it < max_iter and not converged:
+        it += 1
         # min label among each vertex's neighbors
         msgs = (
             sym.join(labels, sym.src == labels[id_col])
@@ -173,33 +198,27 @@ def _components_labelprop(
         hop = relaxed.select(
             F.col(id_col).alias("_jid"), F.col("label").alias("_jlabel")
         )
-        stepped = (
-            relaxed.join(hop, relaxed["label"] == hop["_jid"], "left")
-            .select(
+        stepped, changed = materialize(
+            relaxed.join(hop, relaxed["label"] == hop["_jid"], "left").select(
                 id_col,
                 "old_label",
                 F.least(
                     F.col("label"), F.coalesce("_jlabel", "label")
                 ).alias("label"),
-            )
-            .localCheckpoint()  # one materialization per iteration
-        )
-        has_changes = (
-            len(stepped.filter(F.col("label") < F.col("old_label")).take(1)) > 0
+            ),
+            it,
         )
         labels = stepped.select(id_col, "label")
-        if not has_changes:
-            converged = True
-            break
-    if not converged:
+        converged = changed == 0
+    if not converged and start_iter < max_iter:
         # with pointer jumping this needs component diameter > 2^max_iter
         # — if it ever fires, the labels are WRONG (split components)
         import warnings
 
         warnings.warn(
-            f"connected_components label propagation did not converge "
-            f"within max_iter={max_iter} iterations; returned clusters "
-            f"may be split — raise max_iter",
+            f"label propagation did not converge within "
+            f"max_iter={max_iter} iterations; returned clusters may be "
+            f"split — raise max_iter",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -214,4 +233,4 @@ def _components_labelprop(
                 F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
             )
         )
-    return out
+    return out, it

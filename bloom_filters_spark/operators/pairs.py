@@ -1,11 +1,9 @@
 """Candidate-pair generation from LSH bands, with hot-band skew control.
 
-Strategy (SURVEY.md §4.3): one shuffle computes per-(band_id, band_hash)
-group size + min doc id (window over the band key); then
+Strategy (SURVEY.md §4.3): one shuffle groups the band rows by band key
+straight into a list of doc ids; then
 
-* groups with size <= max_band_group emit ALL within-group pairs via a
-  self-equi-join (SortMergeJoin/ShuffledHashJoin on the band key, AQE
-  skew-split eligible),
+* groups with size <= max_band_group emit ALL within-group pairs,
 * oversized groups (boilerplate bands — whp near-identical docs) emit
   STAR pairs (anchor = min doc id) — O(n) instead of O(n²) while
   preserving connectivity for clustering.
@@ -16,7 +14,7 @@ then sees each candidate once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # the band hash is seeded with the band id in every band impl, so
@@ -28,8 +26,9 @@ from pyspark.sql import functions as F
 # that needs a random group to collide with one of the handful of hot
 # groups (~n_groups·n_hot/2^64 — negligible at any real corpus size),
 # so dropping band_id there cuts the widest shuffle of the pipeline by
-# ~25% for free; at the opt-in 32-bit width collisions are material
-# (~n²/2^33 pairs) and _band_key() keeps band_id in the group key.
+# ~25% for free; at the 32-bit width (NearDupConfig's default since the
+# round-5 measurement) collisions are material (~n²/2^33 pairs) and
+# _band_key() keeps band_id in the group key.
 BAND_KEY = ["band_hash"]
 
 
@@ -56,14 +55,7 @@ def candidate_pairs(bands: DataFrame, max_band_group: int = 64,
     when band generation is cheap relative to the exchange (measured
     slower than "grouped" here, kept for cluster-scale corpora where
     the collect_list state itself is the memory risk).
-
-    mode="join": window + self-equi-join — 3 shuffles, but never
-    materializes a group; kept for comparison and for engines where
-    collect_list memory is a concern.
     """
-    if mode == "join":
-        return _candidate_pairs_join(bands, max_band_group, id_col)
-
     key = _band_key(bands)
     slim = bands.select(*key, id_col)
     if mode == "count_join":
@@ -110,32 +102,3 @@ def candidate_pairs(bands: DataFrame, max_band_group: int = 64,
     ).select("p.id1", "p.id2")
     return pairs.dropDuplicates(["id1", "id2"])
 
-
-def _candidate_pairs_join(bands: DataFrame, max_band_group: int,
-                          id_col: str) -> DataFrame:
-    key = _band_key(bands)
-    w = Window.partitionBy(*key)
-    sized = bands.withColumn("grp_n", F.count(F.lit(1)).over(w)).withColumn(
-        "grp_min", F.min(id_col).over(w)
-    )
-    # drop singleton groups immediately — they can't produce pairs
-    sized = sized.filter(F.col("grp_n") >= 2)
-
-    small = sized.filter(F.col("grp_n") <= max_band_group).select(
-        *key, F.col(id_col)
-    )
-    left = small.select(*key, F.col(id_col).alias("id1"))
-    right = small.select(*key, F.col(id_col).alias("id2"))
-    small_pairs = left.join(right, key).where(F.col("id1") < F.col("id2"))
-
-    star_pairs = (
-        sized.filter(F.col("grp_n") > max_band_group)
-        .where(F.col(id_col) != F.col("grp_min"))
-        .select(F.col("grp_min").alias("id1"), F.col(id_col).alias("id2"))
-    )
-
-    return (
-        small_pairs.select("id1", "id2")
-        .unionByName(star_pairs)
-        .dropDuplicates(["id1", "id2"])
-    )

@@ -149,31 +149,43 @@ def resolve_pair_mode(cfg: NearDupConfig, n_docs) -> str:
     return "count_join" if n_docs() > cfg.pair_mode_threshold else "grouped"
 
 
-def participant_ids(cands: DataFrame, n_cands: int, id_col: str) -> DataFrame:
-    """Distinct ids of the docs in a candidate pair (id1, id2), ready to
-    semi-join a doc or signature table down to the pair participants.
+def verify_candidates(cands: DataFrame, docs: DataFrame, cfg: NearDupConfig,
+                      id_col: str = "doc_id", text_col: str | None = None,
+                      hot_shingles=None):
+    """Candidate pairs → ``(candidates, participant signatures, verified
+    pairs)``: the candidate → verify step every runner shares.
 
-    A plain semi-join against the candidates would shuffle the full
-    table INCLUDING its text or signature column by id (measured 1.2GB
-    at 800k docs); the id set is bounded by 2x the candidate count, so
-    it is broadcast when small and the wide side streams map-side."""
+    ``docs`` holds the signatures ``(id, signature[, shingles])``, or,
+    with ``text_col``, the text the signature kernel runs on — then
+    pruned with ``hot_shingles``, the SAME set the bands were built
+    with, or verify-side estimates drift from banding.
+
+    The candidates are materialized once by a local checkpoint and its
+    count: the id union, the semi-join and both verify joins read it,
+    not the band kernel and its exchange again.  A checkpoint, not a
+    cache, because AQE reuses an exchange only over plain scans, and a
+    cached relation under the participant side would keep verify's two
+    joins from sharing one broadcast of it.  Only the participants'
+    signatures reach the verify join.  A plain semi-join against the
+    candidates would shuffle ``docs`` INCLUDING its text or signature
+    column by id (measured 1.2GB at 800k docs); the id set is bounded by
+    2x the candidate count, so it is broadcast when small and the wide
+    side streams map-side.
+    """
+    cands = cands.localCheckpoint(eager=False)
+    n_cands = cands.count()
     ids = (
         cands.select(F.col("id1").alias(id_col))
         .unionByName(cands.select(F.col("id2").alias(id_col)))
         .distinct()
     )
-    return F.broadcast(ids) if n_cands < 25_000_000 else ids
-
-
-def _participant_signatures(docs: DataFrame, cands: DataFrame, n_cands: int,
-                            cfg: NearDupConfig, id_col: str, text_col: str,
-                            hot_shingles) -> DataFrame:
-    """Signatures of only the docs in a candidate pair, pruned with the
-    SAME hot set the bands were built with, or verify-side estimates
-    drift from banding."""
-    ids = participant_ids(cands, n_cands, id_col)
-    return signatures(docs.join(ids, id_col, "left_semi"), cfg, id_col,
-                      text_col, hot_shingles=hot_shingles)
+    sigs = docs.join(F.broadcast(ids) if n_cands < 25_000_000 else ids,
+                     id_col, "left_semi")
+    if text_col is not None:
+        sigs = signatures(sigs, cfg, id_col, text_col,
+                          hot_shingles=hot_shingles)
+    return cands, sigs, verified_pairs(cands, sigs, cfg, id_col,
+                                       sigs_restricted=True)
 
 
 def verified_pairs(
@@ -204,8 +216,8 @@ def verified_pairs(
     need_shingles = cfg.verify in ("exact", "both")
     if sigs_restricted:
         # caller already semi-joined sigs down to pair participants
-        # (the fused and incremental paths do) — skip the redundant
-        # distinct + semi-join over the candidate set
+        # (verify_candidates does) — skip the redundant distinct +
+        # semi-join over the candidate set
         side = sigs
     else:
         ids = (
@@ -540,27 +552,16 @@ def near_dup_pipeline(
         cfg.shingle_size, cfg.max_value, id_col, text_col,
         hot_shingles=hot, hash_bits=cfg.band_hash_bits,
     )
-    # a local checkpoint, not a cache, materialized by the count: AQE
-    # reuses an exchange only over plain scans, and a cached relation
-    # under the participant side would keep verify's two joins from
-    # sharing one broadcast of it (blocks are GC-cleaned with the frame,
-    # as in substring_dup_pairs)
-    candidates = candidate_pairs(
-        bands, cfg.max_band_group, id_col,
-        mode=resolve_pair_mode(cfg, _count),
-    ).localCheckpoint(eager=False)
-    n_cands = candidates.count()
-    # not cached: verify reads them once, through one reused broadcast
-    sigs = _participant_signatures(
-        df, candidates, n_cands, cfg, id_col, text_col, hot
-    )
     # the (tiny) verified edge set is cached so the label-propagation
-    # fallback can iterate over it; the driver solve collects it in
-    # the same pass that fills the cache.  At cluster scale this
-    # boundary is the pairs checkpoint table (checkpoint.py).
-    pairs = verified_pairs(
-        candidates, sigs, cfg, id_col, sigs_restricted=True
-    ).persist()
+    # fallback can iterate over it; the driver solve collects it in the
+    # same pass that fills the cache.  At cluster scale this boundary is
+    # the pairs checkpoint table (checkpoint.py).
+    candidates, sigs, pairs = verify_candidates(
+        candidate_pairs(bands, cfg.max_band_group, id_col,
+                        mode=resolve_pair_mode(cfg, _count)),
+        df, cfg, id_col, text_col, hot,
+    )
+    pairs = pairs.persist()
     clusters = connected_components(pairs, vertices=vertices, id_col=id_col)
     if doc_rep is not None:
         # re-expand collapsed exact duplicates: every doc inherits its
@@ -709,28 +710,17 @@ def near_dup_against(
             corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
             cfg.shingle_size, cfg.max_value, id_col, text_col,
         )
-    # local checkpoint + count: the candidate set is consumed by the id
-    # union (twice), the semi-join, and the pair join inside
-    # verified_pairs — materialized once so the band join does not
-    # re-execute for each of them, and not cached, so the two verify
-    # joins share one broadcast of the participant signatures (see
-    # near_dup_pipeline).  The count also gates the broadcast exactly
-    # like near_dup_pipeline does.
-    cands = incremental_candidates(
-        new_docs, corpus_docs, cfg, id_col, text_col, corpus_bands,
-        hot_shingles,
-    ).localCheckpoint(eager=False)
-    n_cands = cands.count()
     docs = new_docs.select(id_col, text_col).unionByName(
         corpus_docs.select(id_col, text_col)
     )
-    sigs = _participant_signatures(
-        docs, cands, n_cands, cfg, id_col, text_col, hot_shingles
-    )
     # materialize the (tiny) verified edge set once: later actions read
     # it, not the candidate checkpoint and the signature kernel
-    out = verified_pairs(
-        cands, sigs, cfg, id_col, sigs_restricted=True
-    ).persist()
+    out = verify_candidates(
+        incremental_candidates(
+            new_docs, corpus_docs, cfg, id_col, text_col, corpus_bands,
+            hot_shingles,
+        ),
+        docs, cfg, id_col, text_col, hot_shingles,
+    )[2].persist()
     out.count()
     return out

@@ -106,9 +106,15 @@ def run_incremental_near_dup(
     verification join.
 
     Candidates are the union of the new×OLD band join AND a
-    within-batch self-join over the new bands (``candidate_pairs``) —
-    two near-dups arriving in the SAME micro-batch are paired too, not
-    just across batches.
+    within-batch self-join over the new bands (``candidate_pairs`` at
+    ``cfg.max_band_group``, so a hot band group within a batch is star
+    linked) — two near-dups arriving in the SAME micro-batch are paired
+    too, not just across batches.  They are verified by the batch
+    pipeline's step (``pipeline.verify_candidates``) against the new
+    and stored signatures, so the pair columns follow ``cfg.verify``:
+    ``jaccard_est`` (estimate), ``jaccard`` (exact) or both.  The exact
+    modes need shingles in the signature store, so the store pins
+    ``verify`` along with the signature and band parameters.
 
     Idempotency: every store write lands in an ``epoch=<id>``
     subdirectory with mode=overwrite, and the old-side reads filter to
@@ -121,9 +127,12 @@ def run_incremental_near_dup(
     """
     import os
 
-    from bloom_filters_spark.operators.minhash_spark import estimated_jaccard_expr
     from bloom_filters_spark.operators.pairs import candidate_pairs
-    from bloom_filters_spark.pipeline import lsh_bands, signatures
+    from bloom_filters_spark.pipeline import (
+        lsh_bands,
+        signatures,
+        verify_candidates,
+    )
 
     sig_store = os.path.join(store_dir, "signatures")
     band_store = os.path.join(store_dir, "bands")
@@ -146,12 +155,46 @@ def run_incremental_near_dup(
         "seed": cfg.seed,
         "max_value": cfg.max_value,
         "band_hash_bits": cfg.band_hash_bits,
+        # "exact" and "both" verify against stored shingles, which an
+        # "estimate" store does not hold
+        "verify": cfg.verify,
     }
+
+    def _read_prior_epochs(base: str, epoch_id: int | None = None):
+        """All rows from epochs strictly before ``epoch_id``
+        (replay-safe; every row without one), or None if the store does
+        not exist yet.  Only path-not-found maps to None — any other
+        read failure must raise, or a transient store error would
+        silently drop every cross-epoch candidate for the batch."""
+        from pyspark.errors import AnalysisException
+
+        try:
+            df = spark.read.parquet(base)
+        except AnalysisException as exc:
+            msg = str(exc)
+            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+                return None
+            raise
+        if epoch_id is None:
+            return df
+        return df.where(F.col("epoch") < F.lit(int(epoch_id))).drop("epoch")
+
     os.makedirs(store_dir, exist_ok=True)
     sidecar = os.path.join(store_dir, "_store_config.json")
     if os.path.exists(sidecar):
         with open(sidecar) as fh:
             prior = _json.load(fh)
+        if "verify" not in prior:
+            # a sidecar written before verify was pinned: the store
+            # holds shingles iff it was created with "exact" or "both"
+            # (nothing stored tells those two apart)
+            stored = _read_prior_epochs(sig_store)
+            held = (cfg.verify != "estimate" if stored is None
+                    else "shingles" in stored.columns)
+            prior["verify"] = (
+                cfg.verify if held == (cfg.verify != "estimate")
+                else "exact" if held else "estimate"
+            )
         diff = {k: (prior.get(k), v) for k, v in cfg_fields.items()
                 if prior.get(k) != v}
         if diff:
@@ -168,23 +211,6 @@ def run_incremental_near_dup(
     def _epoch_dir(base: str, epoch_id: int) -> str:
         return os.path.join(base, f"epoch={int(epoch_id)}")
 
-    def _read_prior_epochs(base: str, epoch_id: int):
-        """All rows from epochs strictly before this one (replay-safe),
-        or None if the store does not exist yet.  Only path-not-found
-        maps to None — any other read failure must raise, or a
-        transient store error would silently drop every cross-epoch
-        candidate for the batch."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            df = spark.read.parquet(base)
-        except AnalysisException as exc:
-            msg = str(exc)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
-        return df.where(F.col("epoch") < F.lit(int(epoch_id))).drop("epoch")
-
     def process_batch(batch_df, epoch_id):
         sigs = signatures(batch_df, cfg, id_col, text_col).persist()
         if sigs.take(1):
@@ -192,9 +218,7 @@ def run_incremental_near_dup(
 
             # within-batch candidates: self-join over the new bands
             # (hot-band star fallback included), id1 < id2
-            within = candidate_pairs(new_bands, id_col=id_col).select(
-                "id1", "id2"
-            )
+            within = candidate_pairs(new_bands, cfg.max_band_group, id_col)
 
             old_bands = _read_prior_epochs(band_store, epoch_id)
             old_sigs = _read_prior_epochs(sig_store, epoch_id)
@@ -226,40 +250,19 @@ def run_incremental_near_dup(
                 cands = within.unionByName(cross)
             else:
                 cands = within
-            cands = cands.dropDuplicates(["id1", "id2"])
-
             # id1 is always a new doc; id2 may be new (within) or old
-            # (cross) — look its signature up in the union
+            # (cross) — look both up in the union
             sig_lookup = (
                 sigs if old_sigs is None else sigs.unionByName(old_sigs)
             )
-            joined = (
-                cands.join(
-                    sigs.select(
-                        F.col(id_col).alias("id1"),
-                        F.col("signature").alias("sig1"),
-                    ),
-                    "id1",
-                )
-                .join(
-                    sig_lookup.select(
-                        F.col(id_col).alias("id2"),
-                        F.col("signature").alias("sig2"),
-                    ),
-                    "id2",
-                )
-                .withColumn(
-                    "jaccard_est",
-                    estimated_jaccard_expr(
-                        F.col("sig1"), F.col("sig2"), cfg.num_hashes
-                    ),
-                )
-                .filter(F.col("jaccard_est") >= cfg.threshold)
-                .select("id1", "id2", "jaccard_est")
+            cands, _, pairs = verify_candidates(
+                cands.dropDuplicates(["id1", "id2"]), sig_lookup, cfg, id_col
             )
-            joined.write.mode("overwrite").parquet(
+            pairs.write.mode("overwrite").parquet(
                 _epoch_dir(pair_store, epoch_id)
             )
+            # free the candidates' checkpoint blocks now, not at driver GC
+            cands._jdf.queryExecution().analyzed().rdd().unpersist(False)
             new_bands.write.mode("overwrite").parquet(
                 _epoch_dir(band_store, epoch_id)
             )

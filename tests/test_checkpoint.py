@@ -27,12 +27,49 @@ def clusters_dict(df):
     return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
 
 
+def hot_band_docs(spark):
+    """100 identical boilerplate docs (one band group far above
+    max_band_group=10) plus 5 unique docs."""
+    boiler = " ".join(f"b{j}" for j in range(30))
+    docs = [(i, boiler) for i in range(100)]
+    docs += [(200 + i, f"unique doc {i} with words {i*7} {i*13} {i*17} filler")
+             for i in range(5)]
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
 def test_checkpointed_matches_direct(spark, docs_df, tmp_path):
+    inputs = [
+        ("docs", docs_df, NearDupConfig(threshold=0.7)),
+        ("hot_band", hot_band_docs(spark),
+         NearDupConfig(threshold=0.8, max_band_group=10)),
+    ]
+    for name, df, cfg in inputs:
+        direct = clusters_dict(near_dup_pipeline(df, cfg))
+        cp = CheckpointedNearDup(
+            spark, cfg, CheckpointConfig(str(tmp_path / name), n_buckets=8)
+        )
+        got = clusters_dict(cp.run(df))
+        assert got == direct, name
+    # the hot band was star linked into one cluster, not split
+    assert set(got[i] for i in range(100)) == {0}
+    n_pairs = spark.read.parquet(str(tmp_path / "hot_band" / "pairs")).count()
+    assert n_pairs < 100 * 99 // 2, n_pairs
+
+
+@pytest.mark.parametrize("table_format", ["parquet", "orc"])
+def test_empty_input_runs_and_resumes(spark, tmp_path, table_format):
+    """An empty input writes no signature bucket file: the cold run
+    still gives empty clusters, and a resume over its store too."""
+    empty = spark.createDataFrame([], "doc_id long, text string")
     cfg = NearDupConfig(threshold=0.7)
-    direct = clusters_dict(near_dup_pipeline(docs_df, cfg))
-    cp = CheckpointedNearDup(spark, cfg, CheckpointConfig(str(tmp_path), n_buckets=8))
-    got = clusters_dict(cp.run(docs_df))
-    assert got == direct
+    ck = CheckpointConfig(str(tmp_path), n_buckets=4, table_format=table_format)
+    assert CheckpointedNearDup(spark, cfg, ck).run(empty).count() == 0
+    cp2 = CheckpointedNearDup(spark, cfg, ck)
+    assert cp2.run(empty).count() == 0
+    stages = {c["stage"]: c for c in cp2.metrics()}
+    assert stages["signatures"]["recomputed_buckets"] == 0
+    assert stages["pairs"]["recomputed"] is False
+    assert stages["clusters"]["recomputed"] is False
 
 
 def crash_signature_buckets(root, buckets):

@@ -414,3 +414,100 @@ def test_compact_epochs_preserves_replay(spark, tmp_path):
 
     # compacting an already-compacted store is a no-op
     assert compact_epochs(spark, store + "/bands", last) == 0
+
+
+def _run_stream(spark, src, store, ckpt, cfg):
+    static = spark.read.parquet(src + "/*")
+    stream = (
+        spark.readStream.schema(static.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src + "/*")
+        .select("doc_id", "text")
+    )
+    from bloom_filters_spark.streaming.dedup import run_incremental_near_dup
+
+    q = run_incremental_near_dup(spark, stream, cfg, store, checkpoint_dir=ckpt)
+    q.processAllAvailable()
+    q.stop()
+
+
+def test_incremental_near_dup_star_links_hot_band(spark, tmp_path):
+    """More than cfg.max_band_group identical docs in ONE micro-batch:
+    the within-batch candidates star-link the hot band group instead of
+    emitting all n(n-1)/2 pairs, and every copy is still paired."""
+    from bloom_filters_spark.pipeline import NearDupConfig
+
+    n = 40
+    boiler = " ".join(f"b{j}" for j in range(30))
+    docs = [(i, boiler) for i in range(n)]
+    docs += [(100 + i, f"unique doc {i} with words {i*7} {i*13} filler")
+             for i in range(5)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1) \
+        .write.parquet(src + "/b1")
+    store = str(tmp_path / "store")
+    _run_stream(spark, src, store, str(tmp_path / "ckpt"),
+                NearDupConfig(threshold=0.8, max_band_group=10))
+    got = {(r["id1"], r["id2"])
+           for r in spark.read.parquet(store + "/pairs").collect()}
+    assert len(got) < n * (n - 1) // 2, len(got)
+    assert {i for p in got for i in p} == set(range(n))
+
+
+def test_incremental_near_dup_exact_verify(spark, tmp_path):
+    """verify="exact" decides on exact shingle Jaccard, within a batch
+    and against the stored shingles of earlier epochs; a store created
+    in estimate mode refuses an exact-mode restart."""
+    import numpy as np
+
+    from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
+    from bloom_filters_spark.pipeline import NearDupConfig
+
+    src = str(tmp_path / "src")
+    pdfs = [generate_pages_pdf(np.arange(0, 60, 2), seed=9),    # originals
+            generate_pages_pdf(np.concatenate(                  # copies +
+                [np.arange(1, 61, 2), np.arange(60, 90)]), seed=9)]  # within
+    for i, pdf in enumerate(pdfs):
+        spark.createDataFrame(pdf, PAGES_SCHEMA).coalesce(1).write.parquet(
+            f"{src}/b{i}")
+    texts = {int(r["doc_id"]): r["text"]
+             for r in spark.read.parquet(src + "/*").collect()}
+    cfg = NearDupConfig(threshold=0.7, verify="exact")
+    store = str(tmp_path / "store")
+    _run_stream(spark, src, store, str(tmp_path / "ckpt"), cfg)
+    pairs = spark.read.parquet(store + "/pairs").collect()
+    assert any(r["id2"] < 60 for r in pairs)  # cross-epoch pairs
+    assert any(r["id1"] >= 60 for r in pairs)  # within-batch pairs
+    for r in pairs:
+        sa = set(arrow_shingle_set_py(texts[r["id1"]], cfg.shingle_size,
+                                      cfg.max_value))
+        sb = set(arrow_shingle_set_py(texts[r["id2"]], cfg.shingle_size,
+                                      cfg.max_value))
+        true_j = len(sa & sb) / len(sa | sb)
+        assert r["jaccard"] == pytest.approx(true_j)
+        assert true_j >= cfg.threshold
+
+    est_store = str(tmp_path / "est_store")
+    _run_stream(spark, src, est_store, str(tmp_path / "est_ckpt"),
+                NearDupConfig(threshold=0.7))
+    with pytest.raises(ValueError, match="different config"):
+        _run_stream(spark, src, est_store, str(tmp_path / "est_ckpt2"), cfg)
+
+    # sidecars written before verify was pinned: the stored shingles
+    # tell an exact/both store from an estimate one
+    import json
+
+    for st in (store, est_store):
+        path = os.path.join(st, "_store_config.json")
+        with open(path) as fh:
+            side = json.load(fh)
+        del side["verify"]
+        with open(path, "w") as fh:
+            json.dump(side, fh)
+    _run_stream(spark, src, store, str(tmp_path / "ckpt2"),
+                NearDupConfig(threshold=0.7, verify="both"))
+    with pytest.raises(ValueError, match="different config"):
+        _run_stream(spark, src, store, str(tmp_path / "ckpt3"),
+                    NearDupConfig(threshold=0.7))
+    with pytest.raises(ValueError, match="different config"):
+        _run_stream(spark, src, est_store, str(tmp_path / "est_ckpt3"), cfg)
