@@ -70,19 +70,18 @@ def q_near_dup_pairs_exact(spark, sf_dir):
     bands=64 (r=2) so the candidate stage misses a true >=0.7-Jaccard
     pair with prob (1-j^2)^64 <= 2e-19 — the oracle comparison is
     all-pairs, so candidate recall must be ~certain, not just >=0.99."""
-    from bloom_filters_spark.operators.arrow_sig import fused_band_rows
     from bloom_filters_spark.operators.pairs import candidate_pairs
     from bloom_filters_spark.operators.shingles import string_shingle_sets_udf
-    from bloom_filters_spark.pipeline import NearDupConfig
+    from bloom_filters_spark.pipeline import (
+        NearDupConfig,
+        lsh_bands,
+        signatures,
+    )
 
     cfg = NearDupConfig(threshold=0.7, num_hashes=128, bands=64)
     docs = _docs(spark, sf_dir)
-    # candidates via the fused kernel (text → 16-byte band rows in one
-    # Arrow pass) — the full-corpus signature matrix never materializes
-    bands = fused_band_rows(
-        docs, cfg.factory(), cfg.bands, cfg.rows_per_band,
-        cfg.shingle_size, cfg.max_value, "doc_id", "text",
-    )
+    # candidates via the Arrow signature kernel and its band rows
+    bands = lsh_bands(signatures(docs, cfg), cfg)
     cands = candidate_pairs(bands, 4096).persist()
     # string-shingle sets are interpreted HOFs (the price of DuckDB-exact
     # string semantics) — build them only for candidate participants

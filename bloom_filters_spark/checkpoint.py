@@ -319,9 +319,11 @@ class CheckpointedNearDup:
             it_dir = os.path.join(self.ckpt.root, f"labels_iter_{k}")
             m = read_manifest(it_dir)
             if m is not None and m.get("fingerprint") == self.fingerprint:
-                labels = self._read(it_dir)
-                # a converged iteration leaves nothing to do
-                start_iter = max_iter if m.get("converged") else k
+                labels, start_iter = self._read(it_dir), k
+                # a converged iteration leaves nothing to do: stop the
+                # loop at k, so the lineage records k iterations
+                if m.get("converged"):
+                    max_iter = k
                 break
         out, it = components.label_propagation(
             pairs, vertices, max_iter, id_col,

@@ -348,87 +348,6 @@ def _band_hashes_from_sig(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
     return acc
 
 
-def fused_band_rows(
-    df: DataFrame,
-    factory: MinHashFactory,
-    bands: int,
-    rows: int,
-    shingle_size: int = 3,
-    max_value: int = DEFAULT_MAX_VALUE,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hot_shingles: np.ndarray | None = None,
-    hash_bits: int = 32,
-) -> DataFrame:
-    """text → exploded (doc_id, band_id, band_hash) in ONE Arrow stage,
-    never materializing a signature column.
-
-    This is the scale path for candidate generation: the full-corpus
-    signature matrix exists only as a transient numpy array inside the
-    kernel, so nothing wide is persisted, cached, or shuffled — the band
-    table is 12-byte rows at the default width.  The verify stage
-    recomputes signatures just for the docs that appear in a candidate
-    pair — on crawl batches most of them (4,398 of 4,930 docs on the
-    benchmark's small-batches corpus), since 30-50% of fetches are
-    exact copies; determinism of the kernel guarantees they match the
-    ones banded here.
-
-    ``hash_bits=32`` (the default, adopted round 5 after the paired
-    ABBA measurement in ``BENCH/scaling_8_32.json``) xor-folds the
-    64-bit band hash into an int column, cutting the shuffled band row
-    16 → 12 bytes.  Collisions only MERGE candidate groups (extra pairs
-    are filtered downstream by verify), so recall is unaffected; the
-    cost is ~n_rows²/2³³ colliding row pairs of extra verify work.
-    ``hash_bits=64`` reads/extends band tables checkpointed before the
-    switch.
-    """
-    if hash_bits not in (32, 64):
-        raise ValueError("hash_bits must be 32 or 64")
-    a_arr = factory.a.copy()
-    b_arr = factory.b.copy()
-    c = int(factory.c)
-    k = factory.nb_hashes
-    w = shingle_size
-    mv = max_value
-    b_, r_ = bands, rows
-    fold32 = hash_bits == 32
-    hot = np.sort(hot_shingles.astype(np.int64)) if hot_shingles is not None \
-        and len(hot_shingles) else None
-
-    def compute(batches):
-        buf = np.empty((4096, k), dtype=np.uint64)
-        band_ids = np.arange(b_, dtype=np.int32)
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            kept, sig, _ = _batch_signatures(
-                ids, batch.column(1), a_arr, b_arr, c, w, mv, buf, False, hot)
-            n = len(kept)
-            if n == 0:
-                continue
-            acc = _band_hashes_from_sig(sig, b_, r_).reshape(-1)
-            if fold32:
-                hashes = pa.array(
-                    (acc ^ (acc >> np.uint64(32)))
-                    .astype(np.uint32).view(np.int32),
-                    type=pa.int32(),
-                )
-            else:
-                hashes = pa.array(acc.view(np.int64), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(kept, b_), type=pa.int64()),
-                    pa.array(np.tile(band_ids, n), type=pa.int32()),
-                    hashes,
-                ],
-                names=[id_col, "band_id", "band_hash"],
-            )
-
-    hash_t = "int" if fold32 else "long"
-    return df.select(id_col, text_col).mapInArrow(
-        compute, f"{id_col} long, band_id int, band_hash {hash_t}"
-    )
-
-
 def bands_arrow(sigs: DataFrame, bands: int, rows: int,
                 id_col: str = "doc_id", hash_bits: int = 32) -> DataFrame:
     """(id, signature) → exploded (id, band_id, band_hash), all
@@ -437,8 +356,14 @@ def bands_arrow(sigs: DataFrame, bands: int, rows: int,
 
     band_hash = uint64 Horner over the band's ``rows`` signature values,
     seeded with the band id so identical slices in different bands don't
-    collide; ``hash_bits`` folds it exactly like ``fused_band_rows`` so
-    the two-stage path stays row-for-row identical to the fused one.
+    collide.  ``hash_bits=32`` (the default, adopted round 5 after the
+    paired ABBA measurement in ``BENCH/scaling_8_32.json``) xor-folds it
+    into an int column, cutting the shuffled band row 16 → 12 bytes.
+    Collisions only MERGE candidate groups (extra pairs are filtered
+    downstream by verify), so recall is unaffected; the cost is
+    ~n_rows²/2³³ colliding row pairs of extra verify work.
+    ``hash_bits=64`` reads/extends band tables written before the
+    switch.
     """
     if hash_bits not in (32, 64):
         raise ValueError("hash_bits must be 32 or 64")

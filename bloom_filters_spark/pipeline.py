@@ -4,10 +4,10 @@
     candidate pairs → Jaccard verify → connected components → clusters
 
 Stage boundaries (= shuffles): band grouping, pair dedup, verify join,
-label propagation.  Everything before banding is one map-only stage:
-one ``mapInArrow`` kernel turns text straight into band rows
-(``operators/arrow_sig.py``), and signatures are recomputed by the same
-kernel only for the docs that appear in a candidate pair.
+label propagation.  Everything before banding is map-only: one
+``mapInArrow`` kernel signs each document's text once
+(``operators/arrow_sig.py``), and the band rows and the verify join
+both read those stored signatures — no document is signed twice.
 
 Verification semantics: ``verify="estimate"`` applies the reference's
 ``compareWith`` decision — (# equal signature positions)/k >= threshold
@@ -19,7 +19,7 @@ Jaccard over shingle sets (the reference's own test oracle,
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,9 +56,9 @@ class NearDupConfig:
     # (BENCH/scaling_8_32.json "hash32_paired_r5": 0.871x wall at 32
     # pinned cores, 0.993x at 8 — the band exchange is bandwidth-bound,
     # so 25% fewer bytes in the widest shuffle shows up directly).  Pin
-    # 64 to read band tables checkpointed before the switch
-    # (checkpoint.py and the incremental and streaming paths raise on a
-    # width mismatch rather than mis-join).
+    # 64 to read band tables stored before the switch (the incremental
+    # and streaming paths raise on a width mismatch rather than
+    # mis-join; checkpoint.py stores signatures, not bands).
     band_hash_bits: int = 32
     # CMS frequent-shingle (boilerplate) pruning: shingles appearing in
     # more than this fraction of documents are dropped before MinHash —
@@ -155,10 +155,13 @@ def verify_candidates(cands: DataFrame, docs: DataFrame, cfg: NearDupConfig,
     """Candidate pairs → ``(candidates, participant signatures, verified
     pairs)``: the candidate → verify step every runner shares.
 
-    ``docs`` holds the signatures ``(id, signature[, shingles])``, or,
-    with ``text_col``, the text the signature kernel runs on — then
-    pruned with ``hot_shingles``, the SAME set the bands were built
-    with, or verify-side estimates drift from banding.
+    ``docs`` holds the signatures ``(id, signature[, shingles])`` the
+    bands were built from, or, with ``text_col``, the text the signature
+    kernel runs on — then pruned with ``hot_shingles``, the SAME set the
+    bands were built with, or verify-side estimates drift from banding.
+    Only ``near_dup_against`` passes text: a precomputed ``corpus_bands``
+    table comes without the corpus signatures, so its participants are
+    signed here.
 
     The candidates are materialized once by a local checkpoint and its
     count: the id union, the semi-join and both verify joins read it,
@@ -186,6 +189,14 @@ def verify_candidates(cands: DataFrame, docs: DataFrame, cfg: NearDupConfig,
                           hot_shingles=hot_shingles)
     return cands, sigs, verified_pairs(cands, sigs, cfg, id_col,
                                        sigs_restricted=True)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of ``df``'s local checkpoint now, not at driver
+    GC (``DataFrame.unpersist`` does not reach them).  Nothing may read
+    ``df`` afterwards: its lineage is truncated, so Spark logs that it
+    cannot be recomputed."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def verified_pairs(
@@ -528,18 +539,14 @@ def near_dup_pipeline(
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if n_in is not None and n_in < parallelism:
         df = df.repartition(parallelism)
-    # text → (doc_id, band_hash) in one Arrow stage.  The full-corpus
-    # signature matrix never leaves the kernel — persisting/caching wide
-    # array<int> columns was measured to dominate the whole pipeline on
-    # bandwidth-bound hosts (the columnar cache serializes arrays per
-    # row).  Signatures are recomputed ONLY for docs that appear in a
-    # candidate pair.  On crawl batches that is most docs (4,398 of
-    # 4,930 on the benchmark's small-batches corpus), so the verify join
-    # computes them once for both endpoints (see verified_pairs).
-    from bloom_filters_spark.operators.arrow_sig import (
-        detect_hot_shingles,
-        fused_band_rows,
-    )
+    # text → signatures in one Arrow pass; the bands and the verify
+    # join both read them, so no doc goes through the kernel twice (on
+    # crawl batches ~90% of the docs are pair participants).  A local
+    # checkpoint, not a cache, for the reason verify_candidates gives:
+    # AQE reuses no broadcast exchange over a cached relation.  Banding
+    # and verify read the same rows, so they are pruned with the same
+    # hot-shingle set by construction.
+    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
 
     hot = None
     if cfg.boilerplate_max_df is not None:
@@ -547,11 +554,9 @@ def near_dup_pipeline(
             df, _count(), cfg.boilerplate_max_df,
             cfg.shingle_size, cfg.max_value, id_col, text_col,
         )
-    bands = fused_band_rows(
-        df, cfg.factory(), cfg.bands, cfg.rows_per_band,
-        cfg.shingle_size, cfg.max_value, id_col, text_col,
-        hot_shingles=hot, hash_bits=cfg.band_hash_bits,
-    )
+    all_sigs = signatures(df, cfg, id_col, text_col,
+                          hot_shingles=hot).localCheckpoint(eager=False)
+    bands = lsh_bands(all_sigs, cfg, id_col)
     # the (tiny) verified edge set is cached so the label-propagation
     # fallback can iterate over it; the driver solve collects it in the
     # same pass that fills the cache.  At cluster scale this boundary is
@@ -559,7 +564,7 @@ def near_dup_pipeline(
     candidates, sigs, pairs = verify_candidates(
         candidate_pairs(bands, cfg.max_band_group, id_col,
                         mode=resolve_pair_mode(cfg, _count)),
-        df, cfg, id_col, text_col, hot,
+        all_sigs, cfg, id_col,
     )
     pairs = pairs.persist()
     clusters = connected_components(pairs, vertices=vertices, id_col=id_col)
@@ -582,8 +587,12 @@ def near_dup_pipeline(
         }
     # the components stage has already materialized its labels (driver
     # union-find collects the edges; labelprop localCheckpoints), so the
-    # cached edge set can be released too
+    # cached edge set and the checkpoints behind it can be released too:
+    # a long-lived session calling once per crawl batch would otherwise
+    # hold every call's signatures until driver GC
     pairs.unpersist()
+    release_checkpoint(candidates)
+    release_checkpoint(all_sigs)
     return clusters
 
 
@@ -601,13 +610,13 @@ def incremental_candidates(
     corpus is NEVER re-paired against itself, so daily cost is
     proportional to the increment, not the archive.
 
-    Pass ``corpus_bands`` (the ``(id, band_id, band_hash)`` table a
-    previous full run checkpointed via ``checkpoint.py``) to skip
-    recomputing corpus bands entirely; then the corpus side of this
-    operator is a table READ and the only kernel work is one fused
-    Arrow pass over the (small) new batch.  The band equi-join touches
-    corpus rows only on matched keys.  Hot (boilerplate) bands are the
-    skew risk exactly as in the self-join path.
+    Pass ``corpus_bands`` (an ``(id, band_id, band_hash)`` table a
+    previous run stored, e.g. ``lsh_bands(signatures(corpus))`` written
+    out) to skip recomputing corpus bands entirely; then the corpus side
+    of this operator is a table READ and the only kernel work is one
+    signature pass over the (small) new batch.  The band equi-join
+    touches corpus rows only on matched keys.  Hot (boilerplate) bands
+    are the skew risk exactly as in the self-join path.
 
     Boilerplate pruning (``cfg.boilerplate_max_df``) must use the SAME
     hot-shingle set on both sides or band hashes stop being comparable
@@ -617,12 +626,12 @@ def incremental_candidates(
     the full run's persisted set as ``hot_shingles`` — this function
     refuses to guess.
     """
-    from bloom_filters_spark.operators.arrow_sig import (
-        detect_hot_shingles,
-        fused_band_rows,
-    )
+    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
 
     cfg = cfg or NearDupConfig()
+    # banding reads only the signature: skip the shingle sets exact
+    # verify needs
+    band_cfg = replace(cfg, verify="estimate")
     hot = hot_shingles
     if corpus_bands is None:
         if corpus_docs is None:
@@ -632,10 +641,10 @@ def incremental_candidates(
                 corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
                 cfg.shingle_size, cfg.max_value, id_col, text_col,
             )
-        corpus_bands = fused_band_rows(
-            corpus_docs, cfg.factory(), cfg.bands, cfg.rows_per_band,
-            cfg.shingle_size, cfg.max_value, id_col, text_col,
-            hot_shingles=hot, hash_bits=cfg.band_hash_bits,
+        corpus_bands = lsh_bands(
+            signatures(corpus_docs, band_cfg, id_col, text_col,
+                       hot_shingles=hot),
+            cfg, id_col,
         )
     else:
         if cfg.boilerplate_max_df is not None and hot is None:
@@ -658,10 +667,9 @@ def incremental_candidates(
                 f"cfg band width {cfg.band_hash_bits} emits {expect}: "
                 "band hashes would never match across the join"
             )
-    new_bands = fused_band_rows(
-        new_docs, cfg.factory(), cfg.bands, cfg.rows_per_band,
-        cfg.shingle_size, cfg.max_value, id_col, text_col,
-        hot_shingles=hot, hash_bits=cfg.band_hash_bits,
+    new_bands = lsh_bands(
+        signatures(new_docs, band_cfg, id_col, text_col, hot_shingles=hot),
+        cfg, id_col,
     )
     bn = new_bands.select(
         "band_id", "band_hash", F.col(id_col).alias("id1")

@@ -130,6 +130,7 @@ def run_incremental_near_dup(
     from bloom_filters_spark.operators.pairs import candidate_pairs
     from bloom_filters_spark.pipeline import (
         lsh_bands,
+        release_checkpoint,
         signatures,
         verify_candidates,
     )
@@ -261,8 +262,7 @@ def run_incremental_near_dup(
             pairs.write.mode("overwrite").parquet(
                 _epoch_dir(pair_store, epoch_id)
             )
-            # free the candidates' checkpoint blocks now, not at driver GC
-            cands._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            release_checkpoint(cands)
             new_bands.write.mode("overwrite").parquet(
                 _epoch_dir(band_store, epoch_id)
             )

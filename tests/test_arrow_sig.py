@@ -168,31 +168,6 @@ def test_bands_arrow_spark(spark):
     assert sorted(by_doc[1]) == [0, 1, 2, 3]
 
 
-def test_fused_band_rows_match_two_stage(spark):
-    """text → fused_band_rows == signatures_arrow → bands_arrow, row for
-    row (the fused kernel must band the exact same signatures it would
-    have emitted)."""
-    from bloom_filters_spark.operators.arrow_sig import (
-        bands_arrow,
-        fused_band_rows,
-        signatures_arrow,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    f = MinHashFactory(32, M31, 0x1234567890)
-    fused = {
-        (r["doc_id"], r["band_id"]): r["band_hash"]
-        for r in fused_band_rows(docs, f, bands=8, rows=4).collect()
-    }
-    sigs = signatures_arrow(docs, f)
-    staged = {
-        (r["doc_id"], r["band_id"]): r["band_hash"]
-        for r in bands_arrow(sigs, bands=8, rows=4).collect()
-    }
-    assert fused == staged
-    assert len(fused) == sigs.count() * 8
-
-
 def test_signatures_arrow_null_and_empty_text(spark):
     from bloom_filters_spark.operators.arrow_sig import signatures_arrow
 

@@ -204,6 +204,17 @@ def test_labelprop_resumes_from_last_iteration(spark, docs_df, tmp_path,
     assert stages["pairs"]["recomputed"] is False
     assert stages["clusters"]["iterations"] == iters[-1]
 
+    # crash after the last (converged) iteration: the resume runs no
+    # iteration and records the converged one's number
+    shutil.rmtree(os.path.join(root, "clusters"))
+    cp3 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4))
+    assert clusters_dict(cp3.run(docs_df)) == expected
+    stages = {c["stage"]: c for c in cp3.metrics()}
+    assert "labels" not in stages
+    assert stages["clusters"]["iterations"] == iters[-1]
+    assert read_manifest(os.path.join(root, "clusters"))["iterations"] == \
+        iters[-1]
+
 
 def test_full_resume_is_all_skips(spark, docs_df, tmp_path):
     cfg = NearDupConfig(threshold=0.7)

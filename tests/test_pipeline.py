@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
 from bloom_filters_spark.operators.shingles import shingle_set_py, shingles_expr
-from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
+from bloom_filters_spark.pipeline import (
+    NearDupConfig,
+    lsh_bands,
+    near_dup_pipeline,
+    signatures,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -102,6 +107,10 @@ def test_pipeline_matches_brute_force_oracle(spark, documents_texts):
     got_pairs = {
         (r["id1"], r["id2"]) for r in stages["pairs"].collect()
     }
+    # one text pass per doc: verify reads the stored signatures the
+    # bands came from, so no Arrow kernel runs under the verified pairs
+    nodes = _executed_nodes(stages["pairs"])
+    assert not [d for n, d in nodes if n == "MapInArrow"], nodes
 
     # recall >= 0.99 vs the reference's all-pairs compareWith decisions
     if oracle_pairs:
@@ -424,9 +433,7 @@ def test_band_hash_bits_32_same_clusters(spark, documents_texts):
              for r in near_dup_pipeline(df, c32).collect()}
     assert out64 == out32
 
-    from bloom_filters_spark.operators.arrow_sig import fused_band_rows
-    bands32 = fused_band_rows(df, c32.factory(), c32.bands,
-                              c32.rows_per_band, hash_bits=32)
+    bands32 = lsh_bands(signatures(df, c32), c32)
     assert dict(bands32.dtypes)["band_hash"] == "int"
     with pytest.raises(ValueError):
         NearDupConfig(band_hash_bits=16)
@@ -436,7 +443,6 @@ def test_near_dup_against_increment(spark):
     """Incremental dedup: new docs pair only against the corpus, the
     corpus is never re-paired against itself, and a pre-computed band
     table short-circuits corpus banding with identical results."""
-    from bloom_filters_spark.operators.arrow_sig import fused_band_rows
     from bloom_filters_spark.pipeline import (
         NearDupConfig,
         near_dup_against,
@@ -467,10 +473,7 @@ def test_near_dup_against_increment(spark):
     assert all(i1 == 10 for i1, _ in got)     # only new-side ids on id1
     assert (1, 3) not in got and (3, 1) not in got
 
-    bands = fused_band_rows(
-        corpus, cfg.factory(), cfg.bands, cfg.rows_per_band,
-        cfg.shingle_size, cfg.max_value, "doc_id", "text",
-    )
+    bands = lsh_bands(signatures(corpus, cfg), cfg)
     got2 = {
         (r["id1"], r["id2"])
         for r in near_dup_against(
@@ -544,8 +547,9 @@ def test_near_dup_against_signs_participants_once(spark):
 def test_pipeline_clusters_independent_of_input_partitioning(
     spark, documents_texts
 ):
-    """One input partition and seven give the same clusters, and the
-    one-partition input still runs the band kernel on every task slot."""
+    """One input partition and seven give the same clusters, the
+    one-partition input still runs the band kernel on every task slot,
+    and a finished call leaves none of its checkpoints cached."""
     cfg = NearDupConfig(threshold=0.7)
     df = spark.createDataFrame(
         list(documents_texts.items()), "doc_id long, text string"
@@ -555,12 +559,18 @@ def test_pipeline_clusters_independent_of_input_partitioning(
     def labels(clusters):
         return {r["doc_id"]: r["cluster_id"] for r in clusters.collect()}
 
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+
     clusters, stages = near_dup_pipeline(one, cfg, return_stages=True)
     got = labels(clusters)
+    before = cached_rdds()
     assert got == labels(near_dup_pipeline(df.repartition(7), cfg))
     assert len(set(got.values())) < len(got)     # some cluster merged
+    assert cached_rdds() <= before
 
-    sc = spark.sparkContext
     group = "test-band-kernel-spread"
     sc.setJobGroup(group, group)
     try:
@@ -614,12 +624,7 @@ def test_incremental_boilerplate_pruning_consistent(spark):
         assert abs(id1 - id2) == 1  # only planted (2k, 2k+1) pairs
 
     # precomputed corpus bands + boilerplate_max_df but no hot set: loud
-    from bloom_filters_spark.operators.arrow_sig import fused_band_rows
-
-    bands = fused_band_rows(
-        corpus, cfg.factory(), cfg.bands, cfg.rows_per_band,
-        cfg.shingle_size, cfg.max_value,
-    )
+    bands = lsh_bands(signatures(corpus, cfg), cfg)
     with pytest.raises(ValueError, match="hot_shingles"):
         incremental_candidates(inc, None, cfg, corpus_bands=bands)
 
@@ -633,7 +638,6 @@ def test_incremental_band_width_mismatch_raises(spark):
         NearDupConfig,
         incremental_candidates,
     )
-    from bloom_filters_spark.operators.arrow_sig import fused_band_rows
     from bloom_filters_spark.sources.pages import (
         PAGES_SCHEMA,
         generate_pages_pdf,
@@ -643,10 +647,7 @@ def test_incremental_band_width_mismatch_raises(spark):
         generate_pages_pdf(np.arange(40), seed=5), PAGES_SCHEMA
     ).select("doc_id", "text")
     cfg64 = NearDupConfig(band_hash_bits=64)
-    bands64 = fused_band_rows(
-        docs, cfg64.factory(), cfg64.bands, cfg64.rows_per_band,
-        cfg64.shingle_size, cfg64.max_value, hash_bits=64,
-    )
+    bands64 = lsh_bands(signatures(docs, cfg64), cfg64)
     with pytest.raises(ValueError, match="band_hash"):
         incremental_candidates(
             docs, None, NearDupConfig(band_hash_bits=32),

@@ -127,9 +127,9 @@ the cold checkpointed run, and the resumed run).
 The non-checkpointed fast path measured {base_s}s in the same session
 (host shows ±35% hypervisor-steal noise — see BENCH/SCALING.md — so
 single-session ratios are indicative only).  The structural difference
-is signature materialization: the fast path never writes signatures
-anywhere (they live only inside the Arrow kernel), while the
-checkpointed path makes them the resumable unit of work.  On a real
+is signature materialization: the fast path holds signatures only in a
+local checkpoint for the length of the call, while the checkpointed
+path writes them out as the resumable unit of work.  On a real
 cluster this trade is per-stage Iceberg tables vs recomputing from the
 raw scan on any executor loss — at 10^12 docs the checkpoint always
 wins.  The storage format is a config switch
