@@ -164,7 +164,9 @@ def label_propagation(
     sym = edges.select(
         F.col("id1").alias("src"), F.col("id2").alias("dst")
     ).unionByName(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
-    sym = sym.dropDuplicates(["src", "dst"]).localCheckpoint()
+    # lazy: the first job that reads it stores it, so a resume from a
+    # converged iteration, which runs none, never builds it
+    sym = sym.dropDuplicates(["src", "dst"]).localCheckpoint(eager=False)
 
     if labels is None:
         labels = (

@@ -9,7 +9,8 @@ straight into a list of doc ids; then
   preserving connectivity for clustering.
 
 Pairs are deduped across bands with dropDuplicates — the verify stage
-then sees each candidate once.
+then sees each candidate once.  ``cross_band_pairs`` is the incremental
+shape: new docs pair only with old ones through a band equi-join.
 """
 
 from __future__ import annotations
@@ -102,3 +103,22 @@ def candidate_pairs(bands: DataFrame, max_band_group: int = 64,
     ).select("p.id1", "p.id2")
     return pairs.dropDuplicates(["id1", "id2"])
 
+
+def cross_band_pairs(new_bands: DataFrame, old_bands: DataFrame,
+                     id_col: str = "doc_id") -> DataFrame:
+    """new × old bands → pairs(id1 = new, id2 = old), each once: the
+    equi-join on ``(band_id, band_hash)`` that pairs an increment with
+    a corpus without re-pairing the corpus against itself.  It touches
+    old rows only on matched keys; a hot band is the same skew risk as
+    in ``candidate_pairs``, but here it is not star-capped.  Both sides
+    must carry the same band-hash width: an int band hash never equals
+    a long one after the implicit cast, so a mismatch matches nothing.
+    """
+    bn = new_bands.select("band_id", "band_hash", F.col(id_col).alias("id1"))
+    bo = old_bands.select("band_id", "band_hash", F.col(id_col).alias("id2"))
+    return (
+        bn.join(bo, ["band_id", "band_hash"])
+        .where(F.col("id1") != F.col("id2"))
+        .select("id1", "id2")
+        .dropDuplicates(["id1", "id2"])
+    )

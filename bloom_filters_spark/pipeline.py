@@ -7,7 +7,9 @@ Stage boundaries (= shuffles): band grouping, pair dedup, verify join,
 label propagation.  Everything before banding is map-only: one
 ``mapInArrow`` kernel signs each document's text once
 (``operators/arrow_sig.py``), and the band rows and the verify join
-both read those stored signatures — no document is signed twice.
+both read those stored signatures — no document is signed twice.  The
+incremental shape (``near_dup_against``) is the same with the band
+grouping replaced by a new×corpus band equi-join.
 
 Verification semantics: ``verify="estimate"`` applies the reference's
 ``compareWith`` decision — (# equal signature positions)/k >= threshold
@@ -30,7 +32,10 @@ from bloom_filters_spark.operators.minhash_spark import (
     estimated_jaccard_expr,
     exact_jaccard_expr,
 )
-from bloom_filters_spark.operators.pairs import candidate_pairs
+from bloom_filters_spark.operators.pairs import (
+    candidate_pairs,
+    cross_band_pairs,
+)
 from bloom_filters_spark.operators.shingles import DEFAULT_MAX_VALUE
 from bloom_filters_spark.sketches.minhash import MinHashFactory
 
@@ -56,9 +61,9 @@ class NearDupConfig:
     # (BENCH/scaling_8_32.json "hash32_paired_r5": 0.871x wall at 32
     # pinned cores, 0.993x at 8 — the band exchange is bandwidth-bound,
     # so 25% fewer bytes in the widest shuffle shows up directly).  Pin
-    # 64 to read band tables stored before the switch (the incremental
-    # and streaming paths raise on a width mismatch rather than
-    # mis-join; checkpoint.py stores signatures, not bands).
+    # 64 to read band tables stored before the switch (the streaming
+    # band store raises on a width mismatch rather than mis-join;
+    # checkpoint.py stores signatures, not bands).
     band_hash_bits: int = 32
     # CMS frequent-shingle (boilerplate) pruning: shingles appearing in
     # more than this fraction of documents are dropped before MinHash —
@@ -149,19 +154,15 @@ def resolve_pair_mode(cfg: NearDupConfig, n_docs) -> str:
     return "count_join" if n_docs() > cfg.pair_mode_threshold else "grouped"
 
 
-def verify_candidates(cands: DataFrame, docs: DataFrame, cfg: NearDupConfig,
-                      id_col: str = "doc_id", text_col: str | None = None,
-                      hot_shingles=None):
+def verify_candidates(cands: DataFrame, sigs: DataFrame, cfg: NearDupConfig,
+                      id_col: str = "doc_id"):
     """Candidate pairs → ``(candidates, participant signatures, verified
     pairs)``: the candidate → verify step every runner shares.
 
-    ``docs`` holds the signatures ``(id, signature[, shingles])`` the
-    bands were built from, or, with ``text_col``, the text the signature
-    kernel runs on — then pruned with ``hot_shingles``, the SAME set the
-    bands were built with, or verify-side estimates drift from banding.
-    Only ``near_dup_against`` passes text: a precomputed ``corpus_bands``
-    table comes without the corpus signatures, so its participants are
-    signed here.
+    ``sigs`` holds the signatures ``(id, signature[, shingles])`` the
+    bands were built from, so verify reads the rows banding read: no
+    document is signed again here, and banding and verify share one
+    hot-shingle pruning by construction.
 
     The candidates are materialized once by a local checkpoint and its
     count: the id union, the semi-join and both verify joins read it,
@@ -170,10 +171,9 @@ def verify_candidates(cands: DataFrame, docs: DataFrame, cfg: NearDupConfig,
     cached relation under the participant side would keep verify's two
     joins from sharing one broadcast of it.  Only the participants'
     signatures reach the verify join.  A plain semi-join against the
-    candidates would shuffle ``docs`` INCLUDING its text or signature
-    column by id (measured 1.2GB at 800k docs); the id set is bounded by
-    2x the candidate count, so it is broadcast when small and the wide
-    side streams map-side.
+    candidates would shuffle ``sigs`` by id (measured 1.2GB at 800k
+    docs); the id set is bounded by 2x the candidate count, so it is
+    broadcast when small and the wide side streams map-side.
     """
     cands = cands.localCheckpoint(eager=False)
     n_cands = cands.count()
@@ -182,11 +182,8 @@ def verify_candidates(cands: DataFrame, docs: DataFrame, cfg: NearDupConfig,
         .unionByName(cands.select(F.col("id2").alias(id_col)))
         .distinct()
     )
-    sigs = docs.join(F.broadcast(ids) if n_cands < 25_000_000 else ids,
+    sigs = sigs.join(F.broadcast(ids) if n_cands < 25_000_000 else ids,
                      id_col, "left_semi")
-    if text_col is not None:
-        sigs = signatures(sigs, cfg, id_col, text_col,
-                          hot_shingles=hot_shingles)
     return cands, sigs, verified_pairs(cands, sigs, cfg, id_col,
                                        sigs_restricted=True)
 
@@ -596,92 +593,50 @@ def near_dup_pipeline(
     return clusters
 
 
+def _signed_sides(new_docs: DataFrame, corpus_docs: DataFrame,
+                  cfg: NearDupConfig, id_col: str, text_col: str):
+    """(new, corpus) signatures at ``cfg``, both pruned with ONE hot-
+    shingle set detected on the corpus (``cfg.boilerplate_max_df``):
+    band hashes are comparable across the two sides only when both
+    drop the same shingles."""
+    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
+
+    hot = None
+    if cfg.boilerplate_max_df is not None:
+        hot = detect_hot_shingles(
+            corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
+            cfg.shingle_size, cfg.max_value, id_col, text_col,
+        )
+    return tuple(signatures(d, cfg, id_col, text_col, hot_shingles=hot)
+                 for d in (new_docs, corpus_docs))
+
+
 def incremental_candidates(
     new_docs: DataFrame,
-    corpus_docs: DataFrame | None = None,
+    corpus_docs: DataFrame,
     cfg: NearDupConfig | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_bands: DataFrame | None = None,
-    hot_shingles=None,
 ) -> DataFrame:
     """Candidate (id1=new, id2=corpus) pairs between a document
     increment and an existing corpus — the rolling-crawl shape: the
-    corpus is NEVER re-paired against itself, so daily cost is
-    proportional to the increment, not the archive.
+    corpus is NEVER re-paired against itself, so the pair stage costs
+    what the increment matches, not the archive squared.
 
-    Pass ``corpus_bands`` (an ``(id, band_id, band_hash)`` table a
-    previous run stored, e.g. ``lsh_bands(signatures(corpus))`` written
-    out) to skip recomputing corpus bands entirely; then the corpus side
-    of this operator is a table READ and the only kernel work is one
-    signature pass over the (small) new batch.  The band equi-join
-    touches corpus rows only on matched keys.  Hot (boilerplate) bands
-    are the skew risk exactly as in the self-join path.
-
-    Boilerplate pruning (``cfg.boilerplate_max_df``) must use the SAME
-    hot-shingle set on both sides or band hashes stop being comparable
-    (a silent recall loss): when the corpus text is available the hot
-    set is detected on it here and applied to both sides; when a
-    checkpointed ``corpus_bands`` table replaces the corpus text, pass
-    the full run's persisted set as ``hot_shingles`` — this function
-    refuses to guess.
+    Both sides are signed once and banded from their signatures; the
+    band equi-join is ``operators.pairs.cross_band_pairs``.  With
+    ``cfg.boilerplate_max_df`` the hot-shingle set is detected on the
+    corpus and prunes both sides.
     """
-    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
-
     cfg = cfg or NearDupConfig()
     # banding reads only the signature: skip the shingle sets exact
     # verify needs
-    band_cfg = replace(cfg, verify="estimate")
-    hot = hot_shingles
-    if corpus_bands is None:
-        if corpus_docs is None:
-            raise ValueError("need corpus_docs or corpus_bands")
-        if cfg.boilerplate_max_df is not None and hot is None:
-            hot = detect_hot_shingles(
-                corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
-                cfg.shingle_size, cfg.max_value, id_col, text_col,
-            )
-        corpus_bands = lsh_bands(
-            signatures(corpus_docs, band_cfg, id_col, text_col,
-                       hot_shingles=hot),
-            cfg, id_col,
-        )
-    else:
-        if cfg.boilerplate_max_df is not None and hot is None:
-            raise ValueError(
-                "cfg.boilerplate_max_df is set but corpus_bands is a "
-                "precomputed table and no hot_shingles were passed: the "
-                "increment would band WITHOUT the pruning the corpus "
-                "banded WITH, silently missing near-dups.  Pass the "
-                "full run's hot-shingle set (hot_shingles=...) or unset "
-                "boilerplate_max_df."
-            )
-        # a checkpointed band table must carry the SAME hash width the
-        # increment will emit: the implicit int->long cast in the join
-        # would return zero matches without an error
-        expect = "int" if cfg.band_hash_bits == 32 else "bigint"
-        actual = dict(corpus_bands.dtypes).get("band_hash")
-        if actual != expect:
-            raise ValueError(
-                f"corpus_bands.band_hash is {actual} but "
-                f"cfg band width {cfg.band_hash_bits} emits {expect}: "
-                "band hashes would never match across the join"
-            )
-    new_bands = lsh_bands(
-        signatures(new_docs, band_cfg, id_col, text_col, hot_shingles=hot),
-        cfg, id_col,
+    new_sigs, old_sigs = _signed_sides(
+        new_docs, corpus_docs, replace(cfg, verify="estimate"), id_col,
+        text_col,
     )
-    bn = new_bands.select(
-        "band_id", "band_hash", F.col(id_col).alias("id1")
-    )
-    bo = corpus_bands.select(
-        "band_id", "band_hash", F.col(id_col).alias("id2")
-    )
-    return (
-        bn.join(bo, ["band_id", "band_hash"])
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
+    return cross_band_pairs(lsh_bands(new_sigs, cfg, id_col),
+                            lsh_bands(old_sigs, cfg, id_col), id_col)
 
 
 def near_dup_against(
@@ -690,45 +645,28 @@ def near_dup_against(
     cfg: NearDupConfig | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_bands: DataFrame | None = None,
-    hot_shingles=None,
 ) -> DataFrame:
     """Verified near-dup pairs (id1=new, id2=corpus, jaccard) between an
-    increment and an existing corpus: ``incremental_candidates`` + the
-    production verify stage (estimate / exact / both per
-    ``cfg.verify``), with signatures computed ONLY for pair
-    participants on both sides.  Ids must be disjoint across the two
-    tables (they address one namespace, as in a rolling crawl).
-    ``corpus_docs`` supplies participant text for the verify stage even
-    when ``corpus_bands`` short-circuits the banding; ``hot_shingles``
-    forwards the full run's boilerplate set (see
-    ``incremental_candidates``) and prunes the verify-side signatures
-    identically."""
-    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
-
+    increment and an existing corpus: ``near_dup_pipeline``'s shape on
+    the incremental pair stage.  Each side is signed once (one hot-
+    shingle set, detected on the corpus), held by a local checkpoint,
+    banded from the stored signatures, and verified against those same
+    rows (estimate / exact / both per ``cfg.verify``).  Ids must be
+    disjoint across the two tables (they address one namespace, as in
+    a rolling crawl)."""
     cfg = cfg or NearDupConfig()
-    if (
-        cfg.boilerplate_max_df is not None
-        and hot_shingles is None
-        and corpus_bands is None
-    ):
-        # detect once HERE so banding (inside incremental_candidates)
-        # and the verify-side signatures prune with the same set
-        hot_shingles = detect_hot_shingles(
-            corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
-            cfg.shingle_size, cfg.max_value, id_col, text_col,
-        )
-    docs = new_docs.select(id_col, text_col).unionByName(
-        corpus_docs.select(id_col, text_col)
+    # local checkpoints, not caches, for the reason verify_candidates
+    # gives: AQE reuses no broadcast exchange over a cached relation
+    new_sigs, old_sigs = (
+        s.localCheckpoint(eager=False)
+        for s in _signed_sides(new_docs, corpus_docs, cfg, id_col, text_col)
     )
+    cands = cross_band_pairs(lsh_bands(new_sigs, cfg, id_col),
+                             lsh_bands(old_sigs, cfg, id_col), id_col)
     # materialize the (tiny) verified edge set once: later actions read
-    # it, not the candidate checkpoint and the signature kernel
+    # it, not the verify joins over the checkpoints
     out = verify_candidates(
-        incremental_candidates(
-            new_docs, corpus_docs, cfg, id_col, text_col, corpus_bands,
-            hot_shingles,
-        ),
-        docs, cfg, id_col, text_col, hot_shingles,
+        cands, new_sigs.unionByName(old_sigs), cfg, id_col
     )[2].persist()
     out.count()
     return out

@@ -105,16 +105,17 @@ def run_incremental_near_dup(
     Signatures are stored too, but touched only by the (tiny) candidate
     verification join.
 
-    Candidates are the union of the new×OLD band join AND a
-    within-batch self-join over the new bands (``candidate_pairs`` at
-    ``cfg.max_band_group``, so a hot band group within a batch is star
-    linked) — two near-dups arriving in the SAME micro-batch are paired
-    too, not just across batches.  They are verified by the batch
-    pipeline's step (``pipeline.verify_candidates``) against the new
-    and stored signatures, so the pair columns follow ``cfg.verify``:
-    ``jaccard_est`` (estimate), ``jaccard`` (exact) or both.  The exact
-    modes need shingles in the signature store, so the store pins
-    ``verify`` along with the signature and band parameters.
+    Candidates are the union of the new×OLD band join
+    (``operators.pairs.cross_band_pairs``, the batch incremental path's
+    join) AND a within-batch self-join over the new bands
+    (``candidate_pairs`` at ``cfg.max_band_group``, so a hot band group
+    within a batch is star linked) — two near-dups arriving in the SAME
+    micro-batch are paired too, not just across batches.  They are
+    verified by the batch pipeline's step (``pipeline.verify_candidates``)
+    against the new and stored signatures, so the pair columns follow
+    ``cfg.verify``: ``jaccard_est`` (estimate), ``jaccard`` (exact) or
+    both.  The exact modes need shingles in the signature store, so the
+    store pins ``verify`` along with the signature and band parameters.
 
     Idempotency: every store write lands in an ``epoch=<id>``
     subdirectory with mode=overwrite, and the old-side reads filter to
@@ -127,7 +128,10 @@ def run_incremental_near_dup(
     """
     import os
 
-    from bloom_filters_spark.operators.pairs import candidate_pairs
+    from bloom_filters_spark.operators.pairs import (
+        candidate_pairs,
+        cross_band_pairs,
+    )
     from bloom_filters_spark.pipeline import (
         lsh_bands,
         release_checkpoint,
@@ -224,11 +228,10 @@ def run_incremental_near_dup(
             old_bands = _read_prior_epochs(band_store, epoch_id)
             old_sigs = _read_prior_epochs(sig_store, epoch_id)
             if old_bands is not None:
-                # same guard as the batch checkpoint path: a band store
-                # written at the other band_hash_bits width would be
-                # silently unjoinable (int->long upcast never matches a
-                # folded hash), so refuse rather than miss every
-                # cross-epoch dup
+                # a band store written at the other band_hash_bits
+                # width would be silently unjoinable (int->long upcast
+                # never matches a folded hash), so refuse rather than
+                # miss every cross-epoch dup
                 old_t = dict(old_bands.dtypes).get("band_hash")
                 new_t = dict(new_bands.dtypes)["band_hash"]
                 if old_t != new_t:
@@ -238,17 +241,11 @@ def run_incremental_near_dup(
                         f"emits {new_t}: pin band_hash_bits to the width "
                         "the store was created with"
                     )
-                cross = (
-                    new_bands.join(
-                        old_bands.withColumnRenamed(id_col, "id_old"),
-                        ["band_id", "band_hash"],
-                    )
-                    .where(F.col(id_col) != F.col("id_old"))
-                    .select(
-                        F.col(id_col).alias("id1"), F.col("id_old").alias("id2")
-                    )
-                )
-                cands = within.unionByName(cross)
+                # a doc id re-sent in a later epoch is both new and old,
+                # so one pair can come from both sides
+                cands = within.unionByName(
+                    cross_band_pairs(new_bands, old_bands, id_col)
+                ).dropDuplicates(["id1", "id2"])
             else:
                 cands = within
             # id1 is always a new doc; id2 may be new (within) or old
@@ -256,9 +253,7 @@ def run_incremental_near_dup(
             sig_lookup = (
                 sigs if old_sigs is None else sigs.unionByName(old_sigs)
             )
-            cands, _, pairs = verify_candidates(
-                cands.dropDuplicates(["id1", "id2"]), sig_lookup, cfg, id_col
-            )
+            cands, _, pairs = verify_candidates(cands, sig_lookup, cfg, id_col)
             pairs.write.mode("overwrite").parquet(
                 _epoch_dir(pair_store, epoch_id)
             )

@@ -20,7 +20,8 @@ pairs, and the existing corpus is never re-paired against itself.
 (``--checkpoint-root`` and ``--boilerplate-max-df``/``--exact-prededup
 on`` are mutually exclusive: the checkpointed signature stage has no
 hot-shingle pruning, and the job refuses the combination rather than
-silently ignoring flags.)
+silently ignoring flags.  ``--against`` likewise refuses
+``--exact-prededup on``: the incremental mode has no pre-dedup.)
 
 With ``--checkpoint-root`` the run is resumable: re-submitting after a
 crash recomputes only incomplete buckets/stages (see checkpoint.py).
@@ -114,6 +115,10 @@ def main():
         # the curation stages below run full count() jobs
         p.error("--against is a standalone mode (plain doc tables, "
                 "no --pages/--checkpoint-root)")
+    if args.against and args.exact_prededup == "on":
+        p.error("--exact-prededup on is not supported together with "
+                "--against (the incremental mode has no pre-dedup); drop "
+                "one of the flags")
     df = spark.read.parquet(args.input)
     t0 = time.time()
 

@@ -205,10 +205,18 @@ def test_labelprop_resumes_from_last_iteration(spark, docs_df, tmp_path,
     assert stages["clusters"]["iterations"] == iters[-1]
 
     # crash after the last (converged) iteration: the resume runs no
-    # iteration and records the converged one's number
+    # iteration, records the converged one's number, and builds no edge
+    # set (a job that builds it stores its local-checkpoint blocks)
     shutil.rmtree(os.path.join(root, "clusters"))
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
     cp3 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=4))
     assert clusters_dict(cp3.run(docs_df)) == expected
+    assert cached_rdds() <= before
     stages = {c["stage"]: c for c in cp3.metrics()}
     assert "labels" not in stages
     assert stages["clusters"]["iterations"] == iters[-1]

@@ -99,6 +99,36 @@ def test_near_dup_job_with_curation(tmp_path):
     assert m["clusters"] <= m["rows"]
 
 
+def test_near_dup_job_against(spark, tmp_path):
+    """--against on sf0.001 split into an increment (doc_id % 10 = 5)
+    and a corpus: verified new×corpus pairs in the metrics JSON; the
+    incremental mode refuses --exact-prededup on before reading input."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(DOCS)
+    new, corpus = str(tmp_path / "new.parquet"), str(tmp_path / "old.parquet")
+    docs.filter(F.col("doc_id") % 10 == 5).write.parquet(new)
+    docs.filter(F.col("doc_id") % 10 != 5).write.parquet(corpus)
+    out = str(tmp_path / "pairs")
+    m = _run_job(
+        "near_dup_job.py", "--input", new, "--output", out,
+        "--against", corpus,
+    )
+    assert m["pairs"] == 3
+    assert json.load(open(out + "_metrics.json")) == m
+
+    env = {**os.environ, "PYTHONPATH": REPO}
+    bad = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "near_dup_job.py"),
+         "--input", new, "--output", str(tmp_path / "x"),
+         "--against", corpus, "--exact-prededup", "on"],
+        capture_output=True, text=True, timeout=120, env=env,
+    )
+    assert bad.returncode != 0
+    assert "--exact-prededup on is not supported together with --against" \
+        in bad.stderr
+
+
 def test_latest_revision_null_ts_survives(spark, tmp_path):
     """A canonical-URL group whose winning row has NULL warc_ts must
     SURVIVE --latest-revision (null-safe ts equality in the semi-join;

@@ -440,9 +440,8 @@ def test_band_hash_bits_32_same_clusters(spark, documents_texts):
 
 
 def test_near_dup_against_increment(spark):
-    """Incremental dedup: new docs pair only against the corpus, the
-    corpus is never re-paired against itself, and a pre-computed band
-    table short-circuits corpus banding with identical results."""
+    """Incremental dedup: new docs pair only against the corpus, and
+    the corpus is never re-paired against itself."""
     from bloom_filters_spark.pipeline import (
         NearDupConfig,
         near_dup_against,
@@ -473,15 +472,6 @@ def test_near_dup_against_increment(spark):
     assert all(i1 == 10 for i1, _ in got)     # only new-side ids on id1
     assert (1, 3) not in got and (3, 1) not in got
 
-    bands = lsh_bands(signatures(corpus, cfg), cfg)
-    got2 = {
-        (r["id1"], r["id2"])
-        for r in near_dup_against(
-            new, corpus, cfg, corpus_bands=bands
-        ).collect()
-    }
-    assert got2 == got
-
 
 def _executed_nodes(df):
     """(node name, description) of every node in ``df``'s executed
@@ -509,10 +499,11 @@ def _executed_nodes(df):
 
 
 def test_near_dup_against_signs_participants_once(spark):
-    """Both verify joins read one exchange of the participant
-    signatures (a broadcast, or a shuffle where AQE keeps a sort-merge
-    join): the signature kernel appears once in the executed plan and
-    the second join reuses the side's exchange."""
+    """Verify reads the signatures the bands were built from, so no
+    Arrow kernel runs under the verified pairs, and both verify joins
+    read one exchange of the participant signatures (a broadcast, or a
+    shuffle where AQE keeps a sort-merge join): the second join reuses
+    the side's exchange."""
     from bloom_filters_spark.pipeline import near_dup_against
 
     base = " ".join(f"tok{i}" for i in range(30))
@@ -533,9 +524,7 @@ def test_near_dup_against_signs_participants_once(spark):
             (10, 1), (10, 3)
         }
         nodes = _executed_nodes(out)
-        sig_kernels = [d for n, d in nodes
-                       if n == "MapInArrow" and "signature" in d]
-        assert len(sig_kernels) == 1, sig_kernels
+        assert not [d for n, d in nodes if n == "MapInArrow"], nodes
         # the side's columns, not the participant-id broadcast's
         # (column pruning drops the signature in exact mode)
         assert any(
@@ -589,15 +578,11 @@ def test_pipeline_clusters_independent_of_input_partitioning(
 def test_incremental_boilerplate_pruning_consistent(spark):
     """cfg.boilerplate_max_df on the incremental path: hot shingles are
     detected on the corpus and applied to BOTH sides, so a corpus doc
-    and its near-copy increment still pair despite shared boilerplate;
-    a checkpointed band table without the hot set refuses to run."""
+    and its near-copy increment still pair despite shared boilerplate,
+    in either verify mode."""
     import numpy as np
 
-    from bloom_filters_spark.pipeline import (
-        NearDupConfig,
-        incremental_candidates,
-        near_dup_against,
-    )
+    from bloom_filters_spark.pipeline import NearDupConfig, near_dup_against
     from bloom_filters_spark.sources.pages import (
         PAGES_SCHEMA,
         generate_pages_pdf,
@@ -614,42 +599,13 @@ def test_incremental_boilerplate_pruning_consistent(spark):
     inc = spark.createDataFrame(inc_pdf, PAGES_SCHEMA).select(
         "doc_id", "text"
     )
-    cfg = NearDupConfig(threshold=0.8, boilerplate_max_df=0.5)
-    got = {
-        (r["id1"], r["id2"])
-        for r in near_dup_against(inc, corpus, cfg).collect()
-    }
-    assert len(got) > 0
-    for id1, id2 in got:
-        assert abs(id1 - id2) == 1  # only planted (2k, 2k+1) pairs
-
-    # precomputed corpus bands + boilerplate_max_df but no hot set: loud
-    bands = lsh_bands(signatures(corpus, cfg), cfg)
-    with pytest.raises(ValueError, match="hot_shingles"):
-        incremental_candidates(inc, None, cfg, corpus_bands=bands)
-
-
-def test_incremental_band_width_mismatch_raises(spark):
-    """A checkpointed 64-bit band table joined by a 32-bit increment
-    config would silently match nothing — must raise instead."""
-    import numpy as np
-
-    from bloom_filters_spark.pipeline import (
-        NearDupConfig,
-        incremental_candidates,
-    )
-    from bloom_filters_spark.sources.pages import (
-        PAGES_SCHEMA,
-        generate_pages_pdf,
-    )
-
-    docs = spark.createDataFrame(
-        generate_pages_pdf(np.arange(40), seed=5), PAGES_SCHEMA
-    ).select("doc_id", "text")
-    cfg64 = NearDupConfig(band_hash_bits=64)
-    bands64 = lsh_bands(signatures(docs, cfg64), cfg64)
-    with pytest.raises(ValueError, match="band_hash"):
-        incremental_candidates(
-            docs, None, NearDupConfig(band_hash_bits=32),
-            corpus_bands=bands64,
-        )
+    for verify in ("estimate", "exact"):
+        cfg = NearDupConfig(threshold=0.8, boilerplate_max_df=0.5,
+                            verify=verify)
+        got = {
+            (r["id1"], r["id2"])
+            for r in near_dup_against(inc, corpus, cfg).collect()
+        }
+        assert len(got) > 0, verify
+        for id1, id2 in got:
+            assert abs(id1 - id2) == 1  # only planted (2k, 2k+1) pairs
