@@ -1,8 +1,8 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` payloads
 with typed metadata, processed through Arrow-batched ``mapInPandas``.
 
-Decoding support (no external media libraries in this container, so
-everything here is stdlib + numpy):
+Decoding support (no external media libraries: everything here is
+stdlib + numpy, so decoded pixels are identical on every host):
 
 * **PNG** — REAL decoder: zlib inflate + full scanline unfiltering
   (None/Sub/Up/Average/Paeth), 8-bit gray/gray+alpha/RGB/RGBA/palette,
@@ -17,8 +17,10 @@ everything here is stdlib + numpy):
   RIFF chunk walk yields per-frame JPEG streams for the in-repo JPEG
   decoder; ``sample_video_frames`` decodes only the sampled frames.
   Other codecs genuinely need ffmpeg and raise ``NotImplementedError``
-  (honest-error policy).  ``fake_decode`` survives ONLY as
-  ``decode_image``'s documented plumbing double for webp/gif tests.
+  (honest-error policy).
+* **webp, gif and other image formats** raise ``NotImplementedError``;
+  ``fake_decode`` survives ONLY as ``decode_image``'s documented
+  plumbing double for them in tests.
 
 At 100TB scale the pattern is: keep payloads in their own parquet/
 Iceberg column chunk (never project them unless needed — column pruning
@@ -222,47 +224,12 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return samples[: n * n_channels].reshape(n, n_channels), rate
 
 
-def decode_image(payload: bytes, fake_decode: bool = False,
-                 use_pillow: bool = False, strict: bool = False) -> np.ndarray:
+def decode_image(payload: bytes, fake_decode: bool = False) -> np.ndarray:
     """Magic-byte-routed image decode: PNG and JPEG (baseline AND
     progressive) decode for real — pure stdlib/numpy, see
     functions/jpeg.py.  Other formats (webp, gif, ...) raise unless
     ``fake_decode=True`` substitutes the deterministic pseudo decode
-    for plumbing tests.
-
-    ``use_pillow=True`` prefers Pillow when the wheel is importable
-    (covers webp/gif and is faster); by default it falls back to the
-    built-in decoders when it is not.  DETERMINISM CAVEAT: the Pillow
-    path is NOT hash-stable across environments — Pillow emits
-    3-channel RGB where the built-ins keep grayscale 2-D, and its
-    libjpeg IDCT differs from the built-in by ±1 pixel steps — so
-    oracled/fingerprinted features must use the built-in path (the
-    default everywhere in this repo).  Pass ``strict=True`` to make a
-    missing Pillow raise instead of silently switching decoder
-    families."""
-    if strict and not use_pillow:
-        raise ValueError(
-            "decode_image(strict=True) is only meaningful with "
-            "use_pillow=True — strict forbids the silent fallback from "
-            "Pillow to the built-in decoders, so without use_pillow "
-            "there is nothing to be strict about"
-        )
-    if use_pillow:
-        try:
-            import io
-
-            from PIL import Image  # optional dependency seam
-
-            return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
-        except ImportError:
-            if strict:
-                raise ImportError(
-                    "decode_image(use_pillow=True, strict=True): Pillow "
-                    "is not importable; refusing the silent fallback to "
-                    "the built-in decoders because their pixel output "
-                    "differs (grayscale shape, IDCT rounding) and would "
-                    "break hash-stability of downstream features"
-                )
+    for plumbing tests."""
     if payload[:8] == PNG_MAGIC:
         return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
@@ -272,9 +239,8 @@ def decode_image(payload: bytes, fake_decode: bool = False,
     if not fake_decode:
         raise NotImplementedError(
             "only PNG and JPEG (baseline + progressive) decode without "
-            "external libraries (webp/gif need Pillow — pass "
-            "use_pillow=True where the wheel exists); pass "
-            "fake_decode=True for the deterministic test double"
+            "external libraries (webp/gif need an external decoder); "
+            "pass fake_decode=True for the deterministic test double"
         )
     return _fake_decode(payload)
 

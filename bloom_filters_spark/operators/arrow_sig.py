@@ -349,26 +349,22 @@ def _band_hashes_from_sig(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
 
 
 def bands_arrow(sigs: DataFrame, bands: int, rows: int,
-                id_col: str = "doc_id", hash_bits: int = 32) -> DataFrame:
+                id_col: str = "doc_id") -> DataFrame:
     """(id, signature) → exploded (id, band_id, band_hash), all
     vectorized in Arrow (replaces the interpreted JVM
     ``transform + xxhash64 + explode`` chain, which anti-scaled).
 
     band_hash = uint64 Horner over the band's ``rows`` signature values,
     seeded with the band id so identical slices in different bands don't
-    collide.  ``hash_bits=32`` (the default, adopted round 5 after the
-    paired ABBA measurement in ``BENCH/scaling_8_32.json``) xor-folds it
-    into an int column, cutting the shuffled band row 16 → 12 bytes.
-    Collisions only MERGE candidate groups (extra pairs are filtered
-    downstream by verify), so recall is unaffected; the cost is
-    ~n_rows²/2³³ colliding row pairs of extra verify work.
-    ``hash_bits=64`` reads/extends band tables written before the
-    switch.
+    collide, then xor-folded into an int column: 4 bytes less per row
+    of the widest shuffle (adopted round 5 after the paired ABBA
+    measurement in ``BENCH/scaling_8_32.json``: 0.871x wall at 32
+    cores, where the band exchange is bandwidth-bound).  A collision
+    only MERGES candidate groups (extra pairs are filtered downstream by
+    verify), so recall is unaffected; the cost is ~n_rows²/2³³ colliding
+    row pairs of extra verify work.
     """
-    if hash_bits not in (32, 64):
-        raise ValueError("hash_bits must be 32 or 64")
     b_, r_ = bands, rows
-    fold32 = hash_bits == 32
 
     def compute(batches):
         for batch in batches:
@@ -383,14 +379,6 @@ def bands_arrow(sigs: DataFrame, bands: int, rows: int,
             acc = _band_hashes_from_sig(
                 flat.reshape(n, b_ * r_), b_, r_
             ).reshape(-1)
-            if fold32:
-                hashes = pa.array(
-                    (acc ^ (acc >> np.uint64(32)))
-                    .astype(np.uint32).view(np.int32),
-                    type=pa.int32(),
-                )
-            else:
-                hashes = pa.array(acc.view(np.int64), type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(ids, b_), type=pa.int64()),
@@ -398,14 +386,17 @@ def bands_arrow(sigs: DataFrame, bands: int, rows: int,
                         np.tile(np.arange(b_, dtype=np.int32), n),
                         type=pa.int32(),
                     ),
-                    hashes,
+                    pa.array(
+                        (acc ^ (acc >> np.uint64(32)))
+                        .astype(np.uint32).view(np.int32),
+                        type=pa.int32(),
+                    ),
                 ],
                 names=[id_col, "band_id", "band_hash"],
             )
 
-    hash_type = "int" if fold32 else "long"
     return sigs.select(id_col, "signature").mapInArrow(
-        compute, f"{id_col} long, band_id int, band_hash {hash_type}"
+        compute, f"{id_col} long, band_id int, band_hash int"
     )
 
 

@@ -19,20 +19,17 @@ from pyspark.sql import functions as F
 DRIVER_EDGE_THRESHOLD = 2_000_000
 
 
-def collect_edges(edges: DataFrame, threshold: int | None = None,
-                  n_edges: int | None = None):
+def collect_edges(edges: DataFrame, n_edges: int | None = None):
     """The (id1, id2) edge list as one Arrow table when the driver solve
     can take it, else None.
 
     The size check and the collect are one round trip: up to
-    ``threshold + 1`` edges arrive in a single Arrow collect, and one
-    edge too many means None.  A caller that already knows the edge
-    count passes ``n_edges`` to skip the collect when it is above the
-    threshold.  ``threshold`` defaults to :data:`DRIVER_EDGE_THRESHOLD`;
-    0 always answers None.
+    :data:`DRIVER_EDGE_THRESHOLD` + 1 edges arrive in a single Arrow
+    collect, and one edge too many means None.  A caller that already
+    knows the edge count passes ``n_edges`` to skip the collect when it
+    is above the threshold.  A threshold of 0 always answers None.
     """
-    if threshold is None:
-        threshold = DRIVER_EDGE_THRESHOLD
+    threshold = DRIVER_EDGE_THRESHOLD  # read per call: tests patch it
     # the Arrow driver solve assumes int64-castable ids; any other id
     # type (string urls, decimals) takes the type-agnostic labelprop
     # path regardless of edge count
@@ -55,7 +52,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iter: int = 20,
     id_col: str = "doc_id",
-    driver_edge_threshold: int | None = None,
     n_edges: int | None = None,
 ) -> DataFrame:
     """edges(id1, id2) → (doc_id, cluster_id = min id in component).
@@ -64,15 +60,15 @@ def connected_components(
     appear in the output as their own singleton cluster.
 
     Adaptive execution: the verified-pair edge set is usually tiny
-    relative to the corpus, so when it fits (<= driver_edge_threshold
-    rows, default :data:`DRIVER_EDGE_THRESHOLD`) we collect it
+    relative to the corpus, so when it fits (<=
+    :data:`DRIVER_EDGE_THRESHOLD` rows) we collect it
     (:func:`collect_edges`) and run union-find on the driver —
     O(E α(E)) with zero shuffles — and broadcast the label map back.
     Otherwise the fallback is distributed hash-min label propagation
-    (O(diameter) shuffled iterations).  Set the threshold to 0 to force
-    the distributed path.
+    (O(diameter) shuffled iterations).  Setting the threshold to 0
+    forces the distributed path.
     """
-    tbl = collect_edges(edges, driver_edge_threshold, n_edges)
+    tbl = collect_edges(edges, n_edges)
     if tbl is not None:
         return _components_driver(tbl, edges.sparkSession, vertices, id_col)
     return label_propagation(edges, vertices, max_iter, id_col)[0]

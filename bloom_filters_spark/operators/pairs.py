@@ -18,24 +18,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the band hash is seeded with the band id in every band impl, so
-# grouping by the hash alone is equivalent to (band_id, band_hash) up to
-# hash collisions.  A collision MERGES two groups; merged extra
-# candidates are verified downstream, so the only recall hazard is the
-# corner where a merge pushes a small genuine group past max_band_group
-# and flips it to star linking through a foreign anchor.  At 64 bits
-# that needs a random group to collide with one of the handful of hot
-# groups (~n_groups·n_hot/2^64 — negligible at any real corpus size),
-# so dropping band_id there cuts the widest shuffle of the pipeline by
-# ~25% for free; at the 32-bit width (NearDupConfig's default since the
-# round-5 measurement) collisions are material (~n²/2^33 pairs) and
-# _band_key() keeps band_id in the group key.
-BAND_KEY = ["band_hash"]
+# the 32-bit band hash collides at ~n²/2^33 row pairs; a collision
+# MERGES two groups, and a merge that pushes a small genuine group past
+# max_band_group would flip it to star linking through a foreign anchor
+# (recall loss), so band_id stays in the group key
+BAND_KEY = ["band_id", "band_hash"]
 
 
 def _band_key(bands: DataFrame) -> list:
-    if dict(bands.dtypes).get("band_hash") == "int":  # 32-bit mode
-        return ["band_id", "band_hash"]
+    """The group key of ``bands`` (``neardup_bench`` replays the band
+    exchange with it)."""
     return list(BAND_KEY)
 
 
@@ -49,7 +41,7 @@ def candidate_pairs(bands: DataFrame, max_band_group: int = 64,
     degrade to star linking, so even a 10^6-doc boilerplate band costs
     one 8MB group row, not 10^12 join rows.
 
-    mode="count_join": count per band_hash first (primitive partial-agg
+    mode="count_join": count per band key first (primitive partial-agg
     state), broadcast the rare duplicated hashes back as a semi-join,
     collect_list only the survivors.  Cuts per-key object buffers from
     the big exchange, but consumes the band table TWICE — only pays off
@@ -57,23 +49,22 @@ def candidate_pairs(bands: DataFrame, max_band_group: int = 64,
     slower than "grouped" here, kept for cluster-scale corpora where
     the collect_list state itself is the memory risk).
     """
-    key = _band_key(bands)
-    slim = bands.select(*key, id_col)
+    slim = bands.select(*BAND_KEY, id_col)
     if mode == "count_join":
         dup_hashes = (
-            slim.groupBy(*key)
+            slim.groupBy(*BAND_KEY)
             .agg(F.count(F.lit(1)).alias("grp_n"))
             .filter(F.col("grp_n") >= 2)
-            .select(*key)
+            .select(*BAND_KEY)
         )
         # no forced broadcast: this mode is auto-selected exactly at
         # corpus scales where duplicated hashes are NOT rare (30-50%
         # web dup rates -> O(10^7+) rows); AQE broadcasts when the set
         # is actually small and shuffles when it isn't
-        slim = slim.join(dup_hashes, key)
+        slim = slim.join(dup_hashes, BAND_KEY)
 
     grouped = (
-        slim.groupBy(*key)
+        slim.groupBy(*BAND_KEY)
         .agg(F.collect_list(id_col).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
@@ -110,14 +101,12 @@ def cross_band_pairs(new_bands: DataFrame, old_bands: DataFrame,
     equi-join on ``(band_id, band_hash)`` that pairs an increment with
     a corpus without re-pairing the corpus against itself.  It touches
     old rows only on matched keys; a hot band is the same skew risk as
-    in ``candidate_pairs``, but here it is not star-capped.  Both sides
-    must carry the same band-hash width: an int band hash never equals
-    a long one after the implicit cast, so a mismatch matches nothing.
+    in ``candidate_pairs``, but here it is not star-capped.
     """
-    bn = new_bands.select("band_id", "band_hash", F.col(id_col).alias("id1"))
-    bo = old_bands.select("band_id", "band_hash", F.col(id_col).alias("id2"))
+    bn = new_bands.select(*BAND_KEY, F.col(id_col).alias("id1"))
+    bo = old_bands.select(*BAND_KEY, F.col(id_col).alias("id2"))
     return (
-        bn.join(bo, ["band_id", "band_hash"])
+        bn.join(bo, BAND_KEY)
         .where(F.col("id1") != F.col("id2"))
         .select("id1", "id2")
         .dropDuplicates(["id1", "id2"])

@@ -50,21 +50,6 @@ class NearDupConfig:
     threshold: float = 0.8           # Jaccard accept threshold
     verify: str = "estimate"         # estimate | exact | both
     max_band_group: int = 64         # all-pairs cap per LSH band group
-    # band-hash width: 32 xor-folds the hash, cutting the widest
-    # shuffle's rows 16 → 12 bytes at the price of ~n_rows²/2³³
-    # colliding candidate groups.  Merged groups usually only ADD verify
-    # work; to keep a collision from pushing a small genuine group past
-    # max_band_group (star-linking through a foreign anchor = recall
-    # loss), candidate_pairs groups 32-bit bands by (band_id, band_hash)
-    # instead of the hash alone (operators/pairs.py _band_key).  Adopted
-    # as the default after the round-5 paired ABBA measurement
-    # (BENCH/scaling_8_32.json "hash32_paired_r5": 0.871x wall at 32
-    # pinned cores, 0.993x at 8 — the band exchange is bandwidth-bound,
-    # so 25% fewer bytes in the widest shuffle shows up directly).  Pin
-    # 64 to read band tables stored before the switch (the streaming
-    # band store raises on a width mismatch rather than mis-join;
-    # checkpoint.py stores signatures, not bands).
-    band_hash_bits: int = 32
     # CMS frequent-shingle (boilerplate) pruning: shingles appearing in
     # more than this fraction of documents are dropped before MinHash —
     # navigation chrome / legal footers otherwise dominate signatures
@@ -105,8 +90,6 @@ class NearDupConfig:
     def __post_init__(self):
         if self.num_hashes % self.bands != 0:
             raise ValueError("num_hashes must be divisible by bands")
-        if self.band_hash_bits not in (32, 64):
-            raise ValueError("band_hash_bits must be 32 or 64")
 
     @property
     def rows_per_band(self) -> int:
@@ -142,8 +125,7 @@ def lsh_bands(sigs: DataFrame, cfg: NearDupConfig, id_col: str = "doc_id") -> Da
     """signatures → exploded (band_id, band_hash, doc_id)."""
     from bloom_filters_spark.operators.arrow_sig import bands_arrow
 
-    return bands_arrow(sigs, cfg.bands, cfg.rows_per_band, id_col,
-                       hash_bits=cfg.band_hash_bits)
+    return bands_arrow(sigs, cfg.bands, cfg.rows_per_band, id_col)
 
 
 def resolve_pair_mode(cfg: NearDupConfig, n_docs) -> str:
@@ -661,12 +643,15 @@ def near_dup_against(
         s.localCheckpoint(eager=False)
         for s in _signed_sides(new_docs, corpus_docs, cfg, id_col, text_col)
     )
-    cands = cross_band_pairs(lsh_bands(new_sigs, cfg, id_col),
-                             lsh_bands(old_sigs, cfg, id_col), id_col)
-    # materialize the (tiny) verified edge set once: later actions read
-    # it, not the verify joins over the checkpoints
-    out = verify_candidates(
-        cands, new_sigs.unionByName(old_sigs), cfg, id_col
-    )[2].persist()
-    out.count()
+    cands, _, out = verify_candidates(
+        cross_band_pairs(lsh_bands(new_sigs, cfg, id_col),
+                         lsh_bands(old_sigs, cfg, id_col), id_col),
+        new_sigs.unionByName(old_sigs), cfg, id_col,
+    )
+    # materialize the (tiny) verified edge set into its own checkpoint,
+    # which cuts its lineage, so the checkpoints it was computed from
+    # can be released now rather than held until driver GC
+    out = out.localCheckpoint()
+    for df in (cands, new_sigs, old_sigs):
+        release_checkpoint(df)
     return out

@@ -100,8 +100,8 @@ def run_incremental_near_dup(
     lives in tables, not in executor memory.
 
     The band store is what makes this O(batch) instead of O(stream):
-    the old side is a plain parquet scan of 16-byte (band_hash, id)
-    rows, NOT a re-banding of every stored signature per micro-batch.
+    the old side is a plain parquet scan of 16-byte (band_id,
+    band_hash, id) rows, NOT a re-banding of every stored signature per micro-batch.
     Signatures are stored too, but touched only by the (tiny) candidate
     verification join.
 
@@ -159,7 +159,10 @@ def run_incremental_near_dup(
         "bands": cfg.bands,
         "seed": cfg.seed,
         "max_value": cfg.max_value,
-        "band_hash_bits": cfg.band_hash_bits,
+        # the band row format (32-bit band hash): a store written with
+        # 64-bit hashes, or before the width was recorded, would be
+        # silently unjoinable, so the check below refuses it
+        "band_hash_bits": 32,
         # "exact" and "both" verify against stored shingles, which an
         # "estimate" store does not hold
         "verify": cfg.verify,
@@ -228,19 +231,6 @@ def run_incremental_near_dup(
             old_bands = _read_prior_epochs(band_store, epoch_id)
             old_sigs = _read_prior_epochs(sig_store, epoch_id)
             if old_bands is not None:
-                # a band store written at the other band_hash_bits
-                # width would be silently unjoinable (int->long upcast
-                # never matches a folded hash), so refuse rather than
-                # miss every cross-epoch dup
-                old_t = dict(old_bands.dtypes).get("band_hash")
-                new_t = dict(new_bands.dtypes)["band_hash"]
-                if old_t != new_t:
-                    raise ValueError(
-                        f"band store {band_store} holds {old_t} band "
-                        f"hashes but cfg band width {cfg.band_hash_bits} "
-                        f"emits {new_t}: pin band_hash_bits to the width "
-                        "the store was created with"
-                    )
                 # a doc id re-sent in a later epoch is both new and old,
                 # so one pair can come from both sides
                 cands = within.unionByName(

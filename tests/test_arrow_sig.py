@@ -156,7 +156,9 @@ def test_bands_arrow_spark(spark):
         (3, [9, 9] + list(range(2, 8))),  # differs only in band 0
     ]
     sigs = spark.createDataFrame(rows, "doc_id long, signature array<int>")
-    bands = bands_arrow(sigs, bands=4, rows=2).collect()
+    bands = bands_arrow(sigs, bands=4, rows=2)
+    assert dict(bands.dtypes)["band_hash"] == "int"   # xor-folded
+    bands = bands.collect()
     assert len(bands) == 12
     by_doc = {}
     for r in bands:

@@ -5,6 +5,7 @@ cross-checked against each other and a known partition.
 
 import pytest
 
+from bloom_filters_spark.operators import components
 from bloom_filters_spark.operators.components import connected_components
 
 
@@ -37,15 +38,16 @@ def test_two_components_and_orientation(spark, edge_df):
     assert out == {3: 3, 5: 3, 7: 3, 10: 10, 12: 10, 14: 10}
 
 
-def test_driver_and_labelprop_agree(spark, edge_df):
+def test_driver_and_labelprop_agree(spark, edge_df, monkeypatch):
     import random
 
     rng = random.Random(7)
     pairs = [(rng.randrange(500), rng.randrange(500)) for _ in range(400)]
     pairs = [(a, b) for a, b in pairs if a != b]
     edges = edge_df(pairs)
-    drv = _labels(connected_components(edges, driver_edge_threshold=10**6))
-    dist = _labels(connected_components(edges, driver_edge_threshold=0))
+    drv = _labels(connected_components(edges))
+    monkeypatch.setattr(components, "DRIVER_EDGE_THRESHOLD", 0)
+    dist = _labels(connected_components(edges))
     assert drv == dist
 
 
@@ -55,19 +57,20 @@ def test_empty_edges(spark, edge_df):
     assert [f.name for f in out.schema.fields] == ["doc_id", "cluster_id"]
 
 
-def test_isolated_vertices_join(spark, edge_df):
+def test_isolated_vertices_join(spark, edge_df, monkeypatch):
     edges = edge_df([(1, 2)])
     verts = spark.createDataFrame([(1,), (2,), (9,)], "doc_id long")
     out = _labels(connected_components(edges, vertices=verts))
     assert out == {1: 1, 2: 1, 9: 9}
     # distributed path gives the same answer
-    out2 = _labels(
-        connected_components(edges, vertices=verts, driver_edge_threshold=0)
-    )
+    monkeypatch.setattr(components, "DRIVER_EDGE_THRESHOLD", 0)
+    out2 = _labels(connected_components(edges, vertices=verts))
     assert out2 == out
 
 
-def test_labelprop_long_chain_converges_with_pointer_jumping(spark):
+def test_labelprop_long_chain_converges_with_pointer_jumping(
+    spark, monkeypatch
+):
     """A 120-node chain has diameter 119; plain one-hop hash-min needs
     119 iterations, pointer jumping needs ~log2 — must converge (one
     cluster, min label) well inside max_iter=12 with no warning."""
@@ -80,11 +83,10 @@ def test_labelprop_long_chain_converges_with_pointer_jumping(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], "id1 long, id2 long"
     )
+    monkeypatch.setattr(components, "DRIVER_EDGE_THRESHOLD", 0)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # non-convergence warning = fail
-        out = connected_components(
-            edges, max_iter=12, driver_edge_threshold=0
-        ).collect()
+        out = connected_components(edges, max_iter=12).collect()
     assert len(out) == 120
     assert {r["cluster_id"] for r in out} == {0}
 

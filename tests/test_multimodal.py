@@ -585,18 +585,6 @@ def test_jpeg_truncation_raises_contract_errors():
             # a short cut may still decode (e.g. only EOI missing)
 
 
-def test_decode_image_strict_requires_use_pillow():
-    import numpy as np
-    import pytest as _pytest
-
-    from bloom_filters_spark.functions.jpeg import encode_jpeg
-    from bloom_filters_spark.functions.multimodal import decode_image
-
-    img = (np.mgrid[0:8, 0:8][0] * 9 % 256).astype(np.uint8)
-    with _pytest.raises(ValueError, match="use_pillow"):
-        decode_image(encode_jpeg(img), strict=True)
-
-
 def test_jpeg_progressive_baseline_parity_property():
     """Property test (hypothesis): for ANY image shape, content seed,
     quality, and subsampling in the supported envelope, the progressive

@@ -12,12 +12,7 @@ from pyspark.sql import functions as F
 
 from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
 from bloom_filters_spark.operators.shingles import shingle_set_py, shingles_expr
-from bloom_filters_spark.pipeline import (
-    NearDupConfig,
-    lsh_bands,
-    near_dup_pipeline,
-    signatures,
-)
+from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -419,26 +414,6 @@ def test_hot_band_star_fallback(spark):
     assert all(got[200 + i] == 200 + i for i in range(5))
 
 
-def test_band_hash_bits_32_same_clusters(spark, documents_texts):
-    """band_hash_bits=32 folds the band hash; merged groups only add
-    verify work, so cluster output must be identical to the 64-bit
-    width (and the band table's hash column becomes int)."""
-    texts = documents_texts
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    c64 = NearDupConfig(threshold=0.7, band_hash_bits=64)
-    c32 = NearDupConfig(threshold=0.7, band_hash_bits=32)
-    out64 = {r["doc_id"]: r["cluster_id"]
-             for r in near_dup_pipeline(df, c64).collect()}
-    out32 = {r["doc_id"]: r["cluster_id"]
-             for r in near_dup_pipeline(df, c32).collect()}
-    assert out64 == out32
-
-    bands32 = lsh_bands(signatures(df, c32), c32)
-    assert dict(bands32.dtypes)["band_hash"] == "int"
-    with pytest.raises(ValueError):
-        NearDupConfig(band_hash_bits=16)
-
-
 def test_near_dup_against_increment(spark):
     """Incremental dedup: new docs pair only against the corpus, and
     the corpus is never re-paired against itself."""
@@ -498,14 +473,8 @@ def _executed_nodes(df):
     return nodes
 
 
-def test_near_dup_against_signs_participants_once(spark):
-    """Verify reads the signatures the bands were built from, so no
-    Arrow kernel runs under the verified pairs, and both verify joins
-    read one exchange of the participant signatures (a broadcast, or a
-    shuffle where AQE keeps a sort-merge join): the second join reuses
-    the side's exchange."""
-    from bloom_filters_spark.pipeline import near_dup_against
-
+def _against_inputs(spark):
+    """(increment, corpus) where doc 10 near-copies corpus docs 1 and 3."""
     base = " ".join(f"tok{i}" for i in range(30))
     corpus = spark.createDataFrame(
         [(1, base), (2, "completely different words entirely here today"),
@@ -516,14 +485,35 @@ def test_near_dup_against_signs_participants_once(spark):
         [(10, " ".join(f"tok{i}" for i in range(29)) + " tokX")],
         "doc_id long, text string",
     )
+    return new, corpus
+
+
+def test_near_dup_against_signs_participants_once(spark, monkeypatch):
+    """Verify reads the signatures the bands were built from, so no
+    Arrow kernel runs under the verified pairs, and both verify joins
+    read one exchange of the participant signatures (a broadcast, or a
+    shuffle where AQE keeps a sort-merge join): the second join reuses
+    the side's exchange.  The plan inspected is the one that
+    materialized the returned pairs' checkpoint."""
+    from bloom_filters_spark import pipeline
+
+    real, verified = pipeline.verify_candidates, []
+
+    def recording(*args, **kwargs):
+        out = real(*args, **kwargs)
+        verified.append(out[2])
+        return out
+
+    monkeypatch.setattr(pipeline, "verify_candidates", recording)
+    new, corpus = _against_inputs(spark)
     for verify in ("estimate", "exact"):
         cfg = NearDupConfig(threshold=0.7, num_hashes=128, bands=64,
                             verify=verify)
-        out = near_dup_against(new, corpus, cfg)
+        out = pipeline.near_dup_against(new, corpus, cfg)
         assert {(r["id1"], r["id2"]) for r in out.collect()} == {
             (10, 1), (10, 3)
         }
-        nodes = _executed_nodes(out)
+        nodes = _executed_nodes(verified.pop())
         assert not [d for n, d in nodes if n == "MapInArrow"], nodes
         # the side's columns, not the participant-id broadcast's
         # (column pruning drops the signature in exact mode)
@@ -531,6 +521,30 @@ def test_near_dup_against_signs_participants_once(spark):
             n == "ReusedExchange" and ("signature" in d or "shingles" in d)
             for n, d in nodes
         )
+
+
+def test_near_dup_against_releases_checkpoints(spark):
+    """A finished call holds only its result's own checkpoint: the
+    signature and candidate checkpoints it was computed from are
+    released, not kept until driver GC."""
+    from bloom_filters_spark.pipeline import near_dup_against
+
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+
+    new, corpus = _against_inputs(spark)
+    for verify in ("estimate", "exact"):
+        cfg = NearDupConfig(threshold=0.7, num_hashes=128, bands=64,
+                            verify=verify)
+        before = cached_rdds()
+        out = near_dup_against(new, corpus, cfg)
+        left = cached_rdds() - before
+        assert len(left) <= 1, left
+        assert {(r["id1"], r["id2"]) for r in out.collect()} == {
+            (10, 1), (10, 3)
+        }
 
 
 def test_pipeline_clusters_independent_of_input_partitioning(

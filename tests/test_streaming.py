@@ -1,6 +1,7 @@
 """Structured Streaming dedup tests: file source → dedup → memory sink,
 driven synchronously with processAllAvailable (SURVEY.md §2.6)."""
 
+import json
 import os
 
 import pytest
@@ -143,6 +144,19 @@ def test_incremental_store_config_mismatch_raises(spark, tmp_path):
             spark, stream, NearDupConfig(threshold=0.8, num_hashes=64,
                                          bands=16),
             store, checkpoint_dir=str(tmp_path / "ckpt2"),
+        )
+    # a store whose band rows hold 64-bit hashes: refused before any
+    # batch runs, since its bands can never join the 32-bit ones
+    sidecar = os.path.join(store, "_store_config.json")
+    with open(sidecar) as fh:
+        stored = json.load(fh)
+    assert stored["band_hash_bits"] == 32
+    with open(sidecar, "w") as fh:
+        json.dump({**stored, "band_hash_bits": 64}, fh)
+    with pytest.raises(ValueError, match="different config"):
+        run_incremental_near_dup(
+            spark, stream, NearDupConfig(threshold=0.8), store,
+            checkpoint_dir=str(tmp_path / "ckpt3"),
         )
 
 

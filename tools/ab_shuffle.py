@@ -36,16 +36,6 @@ VARIANTS: dict[str, dict] = {
         "spark.shuffle.file.buffer": "1m",
         "spark.shuffle.localDisk.file.output.buffer": "1m",
     },
-    # 32-bit band hash: widest shuffle rows 16 -> 12 bytes; extra
-    # colliding candidates are verified away (VERDICT r02 item #7 asks
-    # for the 32-core-only re-quantification of this A/B).  Pinned
-    # explicitly so the pair stays meaningful across default changes:
-    # after the round-5 paired ABBA run (tools/ab_hash32_paired.py,
-    # 0.871x @32c / 0.993x @8c) 32-bit became the NearDupConfig
-    # default, so "base" now equals "hash32" and "hash64" is the
-    # counterfactual.
-    "hash32": {"__cfg": {"band_hash_bits": 32}},
-    "hash64": {"__cfg": {"band_hash_bits": 64}},
     # shuffle files on tmpfs: removes filesystem/journal overhead from
     # the band exchange (page cache already absorbs most of it -> tests
     # whether any residual IO path matters)
@@ -94,13 +84,12 @@ from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 cores = {cores}
 conf = {conf!r}
 mult = conf.pop("__shuffle_partitions_mult", 1)
-cfg_kw = conf.pop("__cfg", {{}})
 conf.setdefault("spark.sql.files.maxPartitionBytes", "1048576")
 spark = get_spark("ab-%d" % cores, cores=cores,
                   shuffle_partitions=cores * mult, extra_conf=conf)
 docs = spark.read.parquet({corpus!r})
 docs.count()
-cfg = NearDupConfig(threshold=0.8, **cfg_kw)
+cfg = NearDupConfig(threshold=0.8)
 timings = []
 for trial in range(5):
     spark.catalog.clearCache()
