@@ -16,17 +16,25 @@ the manifest to a snapshot/metadata table):
     <root>/clusters/*.parquet, _manifest.json
 
 The stages call the same stage code as ``near_dup_pipeline``: the
-candidate → verify step is ``pipeline.verify_candidates`` (candidates
-materialized once, only their participants' signatures in the verify
-join), components are solved on the driver whenever the edge set fits
+exact pre-dedup (``pipeline.collapse_exact_dups``/``expand_exact_dups``),
+the boilerplate set (``pipeline.hot_shingle_set``), the candidate →
+verify step (``pipeline.verify_candidates``: candidates materialized
+once, only their participants' signatures in the verify join),
+components solved on the driver whenever the edge set fits
 (``operators.components.collect_edges``), and above that the label
 propagation loop is ``operators.components.label_propagation``, with
 this module's store as its per-iteration materialization.
 
 Resume semantics:
+* exact pre-dedup: recomputed on every run (it depends on the input
+  alone), so ``"auto"`` pays its HLL ``first()`` on each resume.  Every
+  stage stores representatives only; ``run()`` re-expands the clusters.
 * signatures: bucket b = pmod(xxhash64(doc_id), n_buckets); only buckets
   missing from the manifest are recomputed (anti-join by bucket id);
-  dynamic partition overwrite keeps completed buckets untouched.
+  dynamic partition overwrite keeps completed buckets untouched.  The
+  manifest's ``"hot_shingles"`` (sorted ints, or null) is the set the
+  cold run detected; a resume prunes with it and detects nothing.  A
+  manifest without the key counts as written under another config.
 * pairs: all-or-nothing stage (skipped when its manifest exists).
 * clusters: all-or-nothing on the driver path (no ``labels_iter_<k>``
   is written; the manifest records ``iterations: 0``).  Above the
@@ -59,6 +67,9 @@ from bloom_filters_spark.operators import components
 from bloom_filters_spark.operators.pairs import candidate_pairs
 from bloom_filters_spark.pipeline import (
     NearDupConfig,
+    collapse_exact_dups,
+    expand_exact_dups,
+    hot_shingle_set,
     lsh_bands,
     resolve_pair_mode,
     signatures,
@@ -167,12 +178,14 @@ class CheckpointedNearDup:
         man = read_manifest(sig_dir)
         # bucket assignment is pmod(hash, n_buckets), so a manifest
         # written under a different n_buckets describes DIFFERENT
-        # buckets — resuming against it would duplicate or stale rows
+        # buckets — resuming against it would duplicate or stale rows;
+        # one without "hot_shingles" cannot say how its rows were pruned
         done: dict[str, dict] = (
             man["buckets"]
             if man
             and man.get("fingerprint") == self.fingerprint
             and man.get("n_buckets") == self.ckpt.n_buckets
+            and "hot_shingles" in man
             else {}
         )
         all_buckets = set(range(self.ckpt.n_buckets))
@@ -181,13 +194,21 @@ class CheckpointedNearDup:
             t0 = time.time()
             if not done and os.path.exists(sig_dir):
                 # fresh start over an existing dir (config/n_buckets
-                # changed): dynamic partition overwrite only replaces
-                # partitions this run writes, so stale old-config
-                # bucket dirs would survive and feed _read() — clear
-                # the stage wholesale first
+                # changed, or no stored hot-shingle set): dynamic
+                # partition overwrite only replaces partitions this run
+                # writes, so stale old-config bucket dirs would survive
+                # and feed _read() — clear the stage wholesale first, and
+                # the stages computed from its old rows
                 import shutil
 
-                shutil.rmtree(sig_dir)
+                for d in os.listdir(self.ckpt.root):
+                    if d in ("signatures", "pairs", "clusters") \
+                            or d.startswith("labels_iter_"):
+                        shutil.rmtree(os.path.join(self.ckpt.root, d))
+            # a resume prunes with the stored buckets' set, so every
+            # bucket's band hashes stay comparable
+            hot = man["hot_shingles"] if done else hot_shingle_set(
+                df, self.cfg, df.count, id_col, text_col)
             bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(self.ckpt.n_buckets))
             todo = df.withColumn("bucket", bucket).filter(
                 F.col("bucket").isin(missing)
@@ -195,9 +216,9 @@ class CheckpointedNearDup:
             # bucket is a pure function of the id column: attach it
             # with the same expression instead of re-scanning df
             # through a join
-            sigs = signatures(todo, self.cfg, id_col, text_col).withColumn(
-                "bucket", bucket
-            )
+            sigs = signatures(
+                todo, self.cfg, id_col, text_col, hot_shingles=hot
+            ).withColumn("bucket", bucket)
             overwrite_key = "spark.sql.sources.partitionOverwriteMode"
             try:
                 prev_mode = self.spark.conf.get(overwrite_key)
@@ -236,6 +257,7 @@ class CheckpointedNearDup:
                     "fingerprint": self.fingerprint,
                     "n_buckets": self.ckpt.n_buckets,
                     "buckets": done,
+                    "hot_shingles": hot,
                 },
             )
         self.counters.append(
@@ -373,9 +395,11 @@ class CheckpointedNearDup:
     # -- full run ------------------------------------------------------------
     def run(self, df: DataFrame, id_col: str = "doc_id",
             text_col: str = "text") -> DataFrame:
+        df, doc_rep = collapse_exact_dups(df, self.cfg, id_col, text_col)
         sigs = self.signatures_stage(df, id_col, text_col)
         pairs = self.pairs_stage(sigs, id_col)
-        return self.clusters_stage(pairs, df.select(id_col), id_col)
+        clusters = self.clusters_stage(pairs, df.select(id_col), id_col)
+        return expand_exact_dups(clusters, doc_rep, id_col)
 
     def metrics(self) -> list[dict]:
         return list(self.counters)

@@ -287,7 +287,7 @@ def signatures_arrow(
     id_col: str = "doc_id",
     text_col: str = "text",
     need_shingles: bool = False,
-    hot_shingles: np.ndarray | None = None,
+    hot_shingles: np.ndarray | list | None = None,
 ) -> DataFrame:
     """(id, text) → (id, signature array<int>[, shingles array<long>]).
 
@@ -303,8 +303,8 @@ def signatures_arrow(
     w = shingle_size
     mv = max_value
     want_sh = need_shingles
-    hot = np.sort(hot_shingles.astype(np.int64)) if hot_shingles is not None \
-        and len(hot_shingles) else None
+    hot = np.sort(np.asarray(hot_shingles, dtype=np.int64)) \
+        if hot_shingles is not None and len(hot_shingles) else None
 
     fields = [pa.field(id_col, pa.int64())]
     if want_sh:

@@ -21,6 +21,7 @@ Jaccard over shingle sets (the reference's own test oracle,
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
@@ -53,10 +54,10 @@ class NearDupConfig:
     # CMS frequent-shingle (boilerplate) pruning: shingles appearing in
     # more than this fraction of documents are dropped before MinHash —
     # navigation chrome / legal footers otherwise dominate signatures
-    # and create hot LSH bands.  None disables.  near_dup_pipeline and
-    # the incremental paths only (checkpoint.py and streaming do not
-    # prune); the detection pass emits a few hundred candidate rows,
-    # not the shingle universe (see detect_hot_shingles).
+    # and create hot LSH bands.  None disables.  The batch runners
+    # prune; the streaming runner refuses it.  The detection pass emits
+    # a few hundred candidate rows, not the shingle universe (see
+    # detect_hot_shingles).
     boilerplate_max_df: float | None = None
     # HLL-gated exact pre-dedup: estimate distinct text fingerprints
     # with native HLL++ (approx_count_distinct — one map-side-combined
@@ -136,6 +137,79 @@ def resolve_pair_mode(cfg: NearDupConfig, n_docs) -> str:
     return "count_join" if n_docs() > cfg.pair_mode_threshold else "grouped"
 
 
+def hot_shingle_set(df: DataFrame, cfg: NearDupConfig, n_docs,
+                    id_col: str = "doc_id", text_col: str = "text"):
+    """The boilerplate shingles every signature is pruned of: a sorted
+    int list from ``detect_hot_shingles`` over ``df``, or None when
+    ``cfg.boilerplate_max_df`` is.  ``n_docs`` is a callable counting
+    ``df``, only called when pruning is on."""
+    if cfg.boilerplate_max_df is None:
+        return None
+    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
+
+    return detect_hot_shingles(
+        df, n_docs(), cfg.boilerplate_max_df, cfg.shingle_size,
+        cfg.max_value, id_col, text_col,
+    ).tolist()
+
+
+def collapse_exact_dups(df: DataFrame, cfg: NearDupConfig,
+                        id_col: str = "doc_id", text_col: str = "text"):
+    """HLL-gated exact pre-dedup (``cfg.exact_prededup``): ``(df cut to
+    one representative per normalized text, doc → representative
+    map)``, or ``(df, None)`` when it is off or the gate declines.  The
+    gate and the representatives (per-group minimum ids) depend on the
+    input alone; :func:`expand_exact_dups` undoes it on the clusters."""
+    if cfg.exact_prededup == "off":
+        return df, None
+    # ASCII-only lowercase (translate A-Z), matching the Arrow
+    # kernel's byte-level token domain: with Unicode F.lower, two
+    # texts differing only in non-ASCII letter case would collapse
+    # here but shingle differently in the kernel — breaking the
+    # "cluster output is identical either way" contract
+    lowered = F.translate(
+        F.col(text_col),
+        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+        "abcdefghijklmnopqrstuvwxyz",
+    )
+    norm = F.regexp_replace(F.trim(lowered), r"\s+", " ")
+    fps = df.select(
+        id_col,
+        F.when(F.length(norm) > 0, F.xxhash64(norm)).alias("_fp"),
+    )
+    if cfg.exact_prededup == "auto":
+        # the HLL cardinality gate: one scan, partial-aggregated
+        row = fps.filter(F.col("_fp").isNotNull()).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("_fp").alias("d"),
+        ).first()
+        n, d = row["n"], row["d"]
+        if n == 0 or d >= (1.0 - cfg.prededup_min_rate) * n:
+            return df, None
+    rep = fps.filter(F.col("_fp").isNotNull()).groupBy("_fp").agg(
+        F.min(id_col).alias("_rep")
+    )
+    # checkpointed, not cached, for the reason verify_candidates gives:
+    # it sits under the verify side's plan
+    doc_rep = fps.join(rep, "_fp", "left").select(
+        id_col, F.coalesce("_rep", F.col(id_col)).alias("_rep")
+    ).localCheckpoint(eager=False)
+    rep_ids = doc_rep.filter(F.col(id_col) == F.col("_rep")).select(id_col)
+    return df.join(rep_ids, id_col, "left_semi"), doc_rep
+
+
+def expand_exact_dups(clusters: DataFrame, doc_rep: DataFrame | None,
+                      id_col: str = "doc_id") -> DataFrame:
+    """Representatives' clusters → every doc's: each doc inherits its
+    representative's cluster (rep ids are per-group minima, so
+    cluster_id stays "min doc id in component").  ``doc_rep`` None (no
+    collapse) returns ``clusters`` as they are."""
+    if doc_rep is None:
+        return clusters
+    rep_clusters = clusters.select(F.col(id_col).alias("_rep"), "cluster_id")
+    return doc_rep.join(rep_clusters, "_rep").select(id_col, "cluster_id")
+
+
 def verify_candidates(cands: DataFrame, sigs: DataFrame, cfg: NearDupConfig,
                       id_col: str = "doc_id"):
     """Candidate pairs → ``(candidates, participant signatures, verified
@@ -173,9 +247,10 @@ def verify_candidates(cands: DataFrame, sigs: DataFrame, cfg: NearDupConfig,
 def release_checkpoint(df: DataFrame) -> None:
     """Free the blocks of ``df``'s local checkpoint now, not at driver
     GC (``DataFrame.unpersist`` does not reach them).  Nothing may read
-    ``df`` afterwards: its lineage is truncated, so Spark logs that it
-    cannot be recomputed."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    ``df`` afterwards: its lineage is truncated.  ``RDD.unpersist`` warns
+    about that; this is the call it makes after the warning."""
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def verified_pairs(
@@ -462,54 +537,8 @@ def near_dup_pipeline(
     # collapse, prededup) — never pay it twice.  Late-bound `vertices`
     # on purpose: both consumers run after it is bound below, so they
     # count the deduplicated frame, without the spreading shuffle.
-    _n_docs: list = [None]
-
-    def _count():
-        if _n_docs[0] is None:
-            _n_docs[0] = vertices.count()
-        return _n_docs[0]
-
-    doc_rep = None
-    if cfg.exact_prededup != "off":
-        # ASCII-only lowercase (translate A-Z), matching the Arrow
-        # kernel's byte-level token domain: with Unicode F.lower, two
-        # texts differing only in non-ASCII letter case would collapse
-        # here but shingle differently in the kernel — breaking the
-        # "cluster output is identical either way" contract
-        lowered = F.translate(
-            F.col(text_col),
-            "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-            "abcdefghijklmnopqrstuvwxyz",
-        )
-        norm = F.regexp_replace(F.trim(lowered), r"\s+", " ")
-        fps = df.select(
-            id_col,
-            F.when(F.length(norm) > 0, F.xxhash64(norm)).alias("_fp"),
-        )
-        run_prededup = cfg.exact_prededup == "on"
-        if cfg.exact_prededup == "auto":
-            # the HLL cardinality gate: one scan, partial-aggregated
-            row = fps.filter(F.col("_fp").isNotNull()).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("_fp").alias("d"),
-            ).first()
-            n_rows = row["n"] or 0
-            run_prededup = n_rows > 0 and (
-                row["d"] < (1.0 - cfg.prededup_min_rate) * n_rows
-            )
-        if run_prededup:
-            rep = fps.filter(F.col("_fp").isNotNull()).groupBy("_fp").agg(
-                F.min(id_col).alias("_rep")
-            )
-            # checkpointed, not cached, for the same reason as the
-            # candidates below: it sits under the verify side's plan
-            doc_rep = fps.join(rep, "_fp", "left").select(
-                id_col, F.coalesce("_rep", F.col(id_col)).alias("_rep")
-            ).localCheckpoint(eager=False)
-            rep_ids = doc_rep.filter(F.col(id_col) == F.col("_rep")).select(
-                id_col
-            )
-            df = df.join(rep_ids, id_col, "left_semi")
+    _count = functools.cache(lambda: vertices.count())
+    df, doc_rep = collapse_exact_dups(df, cfg, id_col, text_col)
     vertices = df.select(id_col)
     # a small batch is often one file with one row group, so one scan
     # partition: spread it round-robin over every task slot, or the
@@ -525,16 +554,10 @@ def near_dup_pipeline(
     # AQE reuses no broadcast exchange over a cached relation.  Banding
     # and verify read the same rows, so they are pruned with the same
     # hot-shingle set by construction.
-    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
-
-    hot = None
-    if cfg.boilerplate_max_df is not None:
-        hot = detect_hot_shingles(
-            df, _count(), cfg.boilerplate_max_df,
-            cfg.shingle_size, cfg.max_value, id_col, text_col,
-        )
-    all_sigs = signatures(df, cfg, id_col, text_col,
-                          hot_shingles=hot).localCheckpoint(eager=False)
+    all_sigs = signatures(
+        df, cfg, id_col, text_col,
+        hot_shingles=hot_shingle_set(df, cfg, _count, id_col, text_col),
+    ).localCheckpoint(eager=False)
     bands = lsh_bands(all_sigs, cfg, id_col)
     # the (tiny) verified edge set is cached so the label-propagation
     # fallback can iterate over it; the driver solve collects it in the
@@ -547,16 +570,7 @@ def near_dup_pipeline(
     )
     pairs = pairs.persist()
     clusters = connected_components(pairs, vertices=vertices, id_col=id_col)
-    if doc_rep is not None:
-        # re-expand collapsed exact duplicates: every doc inherits its
-        # representative's cluster (rep ids are per-group minima, so
-        # cluster_id stays "min doc id in component")
-        rep_clusters = clusters.select(
-            F.col(id_col).alias("_rep"), "cluster_id"
-        )
-        clusters = doc_rep.join(rep_clusters, "_rep").select(
-            id_col, "cluster_id"
-        )
+    clusters = expand_exact_dups(clusters, doc_rep, id_col)
     if return_stages:
         return clusters, {
             "sigs": sigs,
@@ -581,14 +595,8 @@ def _signed_sides(new_docs: DataFrame, corpus_docs: DataFrame,
     shingle set detected on the corpus (``cfg.boilerplate_max_df``):
     band hashes are comparable across the two sides only when both
     drop the same shingles."""
-    from bloom_filters_spark.operators.arrow_sig import detect_hot_shingles
-
-    hot = None
-    if cfg.boilerplate_max_df is not None:
-        hot = detect_hot_shingles(
-            corpus_docs, corpus_docs.count(), cfg.boilerplate_max_df,
-            cfg.shingle_size, cfg.max_value, id_col, text_col,
-        )
+    hot = hot_shingle_set(corpus_docs, cfg, corpus_docs.count, id_col,
+                          text_col)
     return tuple(signatures(d, cfg, id_col, text_col, hot_shingles=hot)
                  for d in (new_docs, corpus_docs))
 

@@ -53,9 +53,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # shuffle tuning from the round-3 paired A/B (tools/ab_shuffle.py,
-        # BENCH/SCALING.md): the hot-path shuffle rows are 8-byte hashes +
-        # ids (~incompressible), so lz4 is two pure-overhead memory passes
+        # shuffle tuning from the round-3 paired A/B (BENCH/SCALING.md,
+        # "Round-3 shuffle-conf A/B"): hot-path shuffle rows are 8-byte
+        # hashes + ids (~incompressible), so lz4 is two wasted memory passes
         # — compression off + 1m write buffers won both paired head-to-heads
         # (-7.5% wall at 32 cores, -24% at 8).  The off-default applies
         # ONLY under a local[] master (see compress_default above): a

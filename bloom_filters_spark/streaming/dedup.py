@@ -187,6 +187,10 @@ def run_incremental_near_dup(
             return df
         return df.where(F.col("epoch") < F.lit(int(epoch_id))).drop("epoch")
 
+    if cfg.boilerplate_max_df is not None:
+        # a batch has no corpus-wide shingle frequencies to prune with
+        raise ValueError("run_incremental_near_dup does not prune "
+                         "boilerplate: boilerplate_max_df must be None")
     os.makedirs(store_dir, exist_ok=True)
     sidecar = os.path.join(store_dir, "_store_config.json")
     if os.path.exists(sidecar):

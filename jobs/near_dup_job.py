@@ -9,19 +9,15 @@ Ship the library as a zip and submit (north-rule deployment shape):
         --input  /path/to/docs.parquet \
         --output /path/to/clusters \
         [--pages] [--canonicalize-urls] [--lang en] [--threshold 0.8] \
-        [--checkpoint-root /path/to/ckpt | --boilerplate-max-df 0.3] \
+        [--checkpoint-root /path/to/ckpt] [--boilerplate-max-df 0.3] \
+        [--exact-prededup auto|on|off] \
         [--against /path/to/existing_corpus.parquet] \
         [--quality-filter] [--domain-cap K] [--sample-fraction F]
 
 ``--against`` switches to incremental mode: --input is a new crawl
 increment, the job emits verified (id1=new, id2=corpus, jaccard)
-pairs, and the existing corpus is never re-paired against itself.
-
-(``--checkpoint-root`` and ``--boilerplate-max-df``/``--exact-prededup
-on`` are mutually exclusive: the checkpointed signature stage has no
-hot-shingle pruning, and the job refuses the combination rather than
-silently ignoring flags.  ``--against`` likewise refuses
-``--exact-prededup on``: the incremental mode has no pre-dedup.)
+pairs, and the existing corpus is never re-paired against itself.  It
+has no pre-dedup, so it refuses ``--exact-prededup on``.
 
 With ``--checkpoint-root`` the run is resumable: re-submitting after a
 crash recomputes only incomplete buckets/stages (see checkpoint.py).
@@ -141,46 +137,14 @@ def main():
     if args.against:
         from bloom_filters_spark.pipeline import near_dup_against
 
-        corpus = spark.read.parquet(args.against)
-        pairs = near_dup_against(
-            df, corpus, cfg, id_col=args.id_col, text_col=args.text_col
+        result = near_dup_against(
+            df, spark.read.parquet(args.against), cfg, id_col=args.id_col,
+            text_col=args.text_col,
         )
-        pairs.write.mode("overwrite").parquet(args.output)
-        out = spark.read.parquet(args.output)
-        metrics = {
-            "input": args.input,
-            "against": args.against,
-            "pairs": out.count(),
-            **({"curation": curation} if curation else {}),
-            "wall_sec": round(time.time() - t0, 2),
-            "config": {
-                "threshold": args.threshold,
-                "num_hashes": args.num_hashes,
-                "bands": args.bands,
-                "shingle_size": args.shingle_size,
-            },
-        }
-        line = json.dumps(metrics)
-        print(line)
-        with open(args.output.rstrip("/") + "_metrics.json", "w") as f:
-            f.write(line + "\n")
-        spark.stop()
-        return
-    if args.pages:
-        clusters = pages_near_dup(df, cfg, lang=args.lang,
-                                  canonicalize_urls=args.canonicalize_urls)
+    elif args.pages:
+        result = pages_near_dup(df, cfg, lang=args.lang,
+                                canonicalize_urls=args.canonicalize_urls)
     elif args.checkpoint_root:
-        # the checkpointed path runs the plain signatures()/pairs stages
-        # and does not implement hot-shingle pruning or exact prededup —
-        # fail fast instead of silently ignoring the flags
-        if args.boilerplate_max_df is not None:
-            p.error("--boilerplate-max-df is not supported together with "
-                    "--checkpoint-root (the checkpointed signature stage "
-                    "has no hot-shingle pruning); drop one of the flags")
-        if args.exact_prededup == "on":
-            p.error("--exact-prededup on is not supported together with "
-                    "--checkpoint-root; drop one of the flags")
-        cfg.exact_prededup = "off"
         from bloom_filters_spark.checkpoint import (
             CheckpointConfig,
             CheckpointedNearDup,
@@ -190,38 +154,34 @@ def main():
             spark, cfg,
             CheckpointConfig(args.checkpoint_root, args.checkpoint_buckets),
         )
-        clusters = cp.run(df, id_col=args.id_col, text_col=args.text_col)
+        result = cp.run(df, id_col=args.id_col, text_col=args.text_col)
     else:
-        clusters = near_dup_pipeline(
+        result = near_dup_pipeline(
             df, cfg, id_col=args.id_col, text_col=args.text_col
         )
-    clusters.write.mode("overwrite").parquet(args.output)
+    result.write.mode("overwrite").parquet(args.output)
 
     out = spark.read.parquet(args.output)
     n_rows = out.count()
-    key = out.columns[0]
-    cluster_col = out.columns[1]
-    n_clusters = out.select(cluster_col).distinct().count()
+    if args.against:
+        counts = {"against": args.against, "pairs": n_rows}
+    else:
+        n_clusters = out.select(out.columns[1]).distinct().count()
+        counts = {"rows": n_rows, "clusters": n_clusters,
+                  "dup_rows": n_rows - n_clusters}
     metrics = {
         "input": args.input,
-        "rows": n_rows,
+        **counts,
         **({"curation": curation} if curation else {}),
-        "clusters": n_clusters,
-        "dup_rows": n_rows - n_clusters,
         "wall_sec": round(time.time() - t0, 2),
-        "config": {
-            "threshold": args.threshold,
-            "num_hashes": args.num_hashes,
-            "bands": args.bands,
-            "shingle_size": args.shingle_size,
-        },
+        "config": {k: getattr(args, k) for k in
+                   ("threshold", "num_hashes", "bands", "shingle_size")},
     }
     line = json.dumps(metrics)
     print(line)
     with open(args.output.rstrip("/") + "_metrics.json", "w") as f:
         f.write(line + "\n")
     spark.stop()
-
 
 if __name__ == "__main__":
     main()

@@ -14,7 +14,7 @@ from bloom_filters_spark.checkpoint import (
     CheckpointedNearDup,
     read_manifest,
 )
-from bloom_filters_spark.operators import components
+from bloom_filters_spark.operators import arrow_sig, components
 from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 
 
@@ -37,23 +37,59 @@ def hot_band_docs(spark):
     return spark.createDataFrame(docs, "doc_id long, text string")
 
 
+def boilerplate_docs(spark):
+    """40 docs that share only a 40-word navigation block, plus three
+    copies (100-102) of one real text behind the same block."""
+    boiler = " ".join(f"nav{j}" for j in range(40))
+    docs = [
+        (i, boiler + " " + " ".join(f"u{i}w{j * 7 + i}" for j in range(8)))
+        for i in range(40)
+    ]
+    real = " ".join(f"core{j}" for j in range(30))
+    docs += [(i, boiler + " " + real) for i in (100, 101, 102)]
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
+def exact_copy_docs(spark):
+    """20 distinct texts in near-dup twins (one word apart), each sent
+    1-3 times with case and whitespace changes the pre-dedup undoes."""
+    docs = []
+    for i in range(20):
+        text = " ".join([f"g{i // 2}w{j}" for j in range(11)] + [f"own{i}"])
+        for copy in (text, text.upper(), text.replace(" ", " \t "))[: i % 3 + 1]:
+            docs.append((len(docs), copy))
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
 def test_checkpointed_matches_direct(spark, docs_df, tmp_path):
     inputs = [
         ("docs", docs_df, NearDupConfig(threshold=0.7)),
         ("hot_band", hot_band_docs(spark),
          NearDupConfig(threshold=0.8, max_band_group=10)),
+        ("boilerplate", boilerplate_docs(spark),
+         NearDupConfig(threshold=0.7, boilerplate_max_df=0.5)),
+        ("exact_copies", exact_copy_docs(spark),
+         NearDupConfig(threshold=0.7, exact_prededup="on")),
     ]
+    got = {}
     for name, df, cfg in inputs:
         direct = clusters_dict(near_dup_pipeline(df, cfg))
         cp = CheckpointedNearDup(
             spark, cfg, CheckpointConfig(str(tmp_path / name), n_buckets=8)
         )
-        got = clusters_dict(cp.run(df))
-        assert got == direct, name
+        got[name] = clusters_dict(cp.run(df))
+        assert got[name] == direct, name
     # the hot band was star linked into one cluster, not split
-    assert set(got[i] for i in range(100)) == {0}
+    assert set(got["hot_band"][i] for i in range(100)) == {0}
     n_pairs = spark.read.parquet(str(tmp_path / "hot_band" / "pairs")).count()
     assert n_pairs < 100 * 99 // 2, n_pairs
+    # pruned, the shared block links nothing: the 40 docs stay apart
+    assert len(set(got["boilerplate"].values())) == 41
+    # the stages hold one representative per distinct normalized text,
+    # and the twins still link across them
+    man = read_manifest(str(tmp_path / "exact_copies" / "signatures"))
+    assert sum(b["rows"] for b in man["buckets"].values()) == 20
+    assert len(set(got["exact_copies"].values())) == 10
 
 
 @pytest.mark.parametrize("table_format", ["parquet", "orc"])
@@ -122,6 +158,46 @@ def test_resume_skips_completed_buckets(spark, docs_df, tmp_path):
     pair_dir = os.path.join(root, "pairs")
     assert read_manifest(pair_dir)["rows"] == spark.read.parquet(pair_dir).count()
     assert read_manifest(pair_dir)["rows"] > 0
+
+
+def test_resume_under_boilerplate_pruning(spark, tmp_path, monkeypatch):
+    """A resume prunes its lost buckets with the hot-shingle set stored
+    in the signatures manifest, without detecting it again, and gives
+    near_dup_pipeline's clusters (pre-dedup on as well)."""
+    cfg = NearDupConfig(threshold=0.7, boilerplate_max_df=0.5,
+                        exact_prededup="on")
+    df = boilerplate_docs(spark)
+    root = str(tmp_path)
+    expected = clusters_dict(near_dup_pipeline(df, cfg))
+    first = clusters_dict(
+        CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=8)).run(df)
+    )
+    assert first == expected
+    hot = read_manifest(os.path.join(root, "signatures"))["hot_shingles"]
+    assert hot and hot == sorted(hot)
+
+    crash_signature_buckets(root, ("1", "4", "6"))
+    detected = []
+    monkeypatch.setattr(arrow_sig, "detect_hot_shingles",
+                        lambda *a, **k: detected.append(a))
+    cp2 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=8))
+    assert clusters_dict(cp2.run(df)) == expected
+    assert detected == []
+    sig_counter = [c for c in cp2.metrics() if c["stage"] == "signatures"][0]
+    assert sig_counter["recomputed_buckets"] == 3
+
+    # a manifest without the set counts as written under another
+    # config: every stage recomputes, none reads the old rows
+    monkeypatch.undo()
+    man = read_manifest(os.path.join(root, "signatures"))
+    del man["hot_shingles"]
+    checkpoint.write_manifest(os.path.join(root, "signatures"), man)
+    cp3 = CheckpointedNearDup(spark, cfg, CheckpointConfig(root, n_buckets=8))
+    assert clusters_dict(cp3.run(df)) == expected
+    stages = {c["stage"]: c for c in cp3.metrics()}
+    assert stages["signatures"]["recomputed_buckets"] == 8
+    assert stages["pairs"]["recomputed"] is True
+    assert stages["clusters"]["recomputed"] is True
 
 
 def test_torn_manifest_recomputes_stage(spark, docs_df, tmp_path):

@@ -129,6 +129,26 @@ def test_near_dup_job_against(spark, tmp_path):
         in bad.stderr
 
 
+def test_near_dup_job_checkpoint_with_pruning_and_prededup(spark, tmp_path):
+    """--checkpoint-root takes --boilerplate-max-df and --exact-prededup
+    on, and writes the same clusters as the job without it."""
+    flags = ["--input", DOCS, "--boilerplate-max-df", "0.5",
+             "--exact-prededup", "on"]
+    direct, ckpt = str(tmp_path / "direct"), str(tmp_path / "ckpt_out")
+    _run_job("near_dup_job.py", *flags, "--output", direct)
+    m = _run_job("near_dup_job.py", *flags, "--output", ckpt,
+                 "--checkpoint-root", str(tmp_path / "ckpt"),
+                 "--checkpoint-buckets", "4")
+    assert m["rows"] == 500
+    assert os.path.exists(tmp_path / "ckpt" / "signatures" / "_manifest.json")
+
+    def clusters(path):
+        return {r["doc_id"]: r["cluster_id"]
+                for r in spark.read.parquet(path).collect()}
+
+    assert clusters(ckpt) == clusters(direct)
+
+
 def test_latest_revision_null_ts_survives(spark, tmp_path):
     """A canonical-URL group whose winning row has NULL warc_ts must
     SURVIVE --latest-revision (null-safe ts equality in the semi-join;

@@ -160,6 +160,26 @@ def test_incremental_store_config_mismatch_raises(spark, tmp_path):
         )
 
 
+def test_incremental_near_dup_refuses_boilerplate_pruning(spark, tmp_path):
+    """A batch has no corpus-wide shingle frequencies to prune with, so
+    boilerplate_max_df is refused before the query starts or the store
+    is created."""
+    from bloom_filters_spark.pipeline import NearDupConfig
+    from bloom_filters_spark.streaming.dedup import run_incremental_near_dup
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    store = str(tmp_path / "store")
+    with pytest.raises(ValueError, match="boilerplate_max_df"):
+        run_incremental_near_dup(
+            spark, stream, NearDupConfig(boilerplate_max_df=0.3), store,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert not os.path.exists(store)
+    assert not spark.streams.active
+
+
 def test_incremental_near_dup_within_batch_pairs(spark, tmp_path):
     """Two near-dups arriving in the SAME micro-batch must be paired —
     the new bands self-join, not only the new×old store join."""
