@@ -62,29 +62,13 @@ def q_near_dup_clusters(spark, sf_dir):
     return near_dup_pipeline(_docs(spark, sf_dir), cfg)
 
 
-def q_near_dup_pairs_exact(spark, sf_dir):
-    """LSH candidates + exact verify over *string* shingle sets, so the
-    DuckDB brute-force oracle can replicate bit-for-bit (integer
-    inter/union sizes; jaccard rounded 6dp).
-
-    bands=64 (r=2) so the candidate stage misses a true >=0.7-Jaccard
-    pair with prob (1-j^2)^64 <= 2e-19 — the oracle comparison is
-    all-pairs, so candidate recall must be ~certain, not just >=0.99."""
-    from bloom_filters_spark.operators.pairs import candidate_pairs
+def _string_jaccard_pairs(docs, cands, cfg):
+    """Verify candidate (id1, id2) pairs on exact STRING shingle sets,
+    so a DuckDB oracle replicates them bit-for-bit: (id1, id2, inter,
+    n_union, jaccard rounded 6dp) at jaccard >= ``cfg.threshold``.  The
+    sets are built for candidate participants only."""
     from bloom_filters_spark.operators.shingles import string_shingle_sets_udf
-    from bloom_filters_spark.pipeline import (
-        NearDupConfig,
-        lsh_bands,
-        signatures,
-    )
 
-    cfg = NearDupConfig(threshold=0.7, num_hashes=128, bands=64)
-    docs = _docs(spark, sf_dir)
-    # candidates via the Arrow signature kernel and its band rows
-    bands = lsh_bands(signatures(docs, cfg), cfg)
-    cands = candidate_pairs(bands, 4096).persist()
-    # string-shingle sets are interpreted HOFs (the price of DuckDB-exact
-    # string semantics) — build them only for candidate participants
     ids = (
         cands.select(F.col("id1").alias("doc_id"))
         .unionByName(cands.select(F.col("id2").alias("doc_id")))
@@ -92,7 +76,7 @@ def q_near_dup_pairs_exact(spark, sf_dir):
     )
     # string shingles via the Arrow-batched UDF (bit-equal to the JVM
     # HOF chain on this corpus, ~10x faster), spread across the cluster
-    par = spark.sparkContext.defaultParallelism
+    par = docs.sparkSession.sparkContext.defaultParallelism
     sh_udf = string_shingle_sets_udf(cfg.shingle_size)
     sets = docs.join(ids, "doc_id", "left_semi").repartition(par, "doc_id").select(
         "doc_id", sh_udf(F.col("text")).alias("sh"),
@@ -111,8 +95,31 @@ def q_near_dup_pairs_exact(spark, sf_dir):
             union.alias("n_union"),
             F.round(inter.cast("double") / union.cast("double"), 6).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= 0.7)
+        .filter(F.col("jaccard") >= cfg.threshold)
     )
+
+
+def q_near_dup_pairs_exact(spark, sf_dir):
+    """LSH candidates + exact verify over *string* shingle sets, so the
+    DuckDB brute-force oracle can replicate bit-for-bit (integer
+    inter/union sizes; jaccard rounded 6dp).
+
+    bands=64 (r=2) so the candidate stage misses a true >=0.7-Jaccard
+    pair with prob (1-j^2)^64 <= 2e-19 — the oracle comparison is
+    all-pairs, so candidate recall must be ~certain, not just >=0.99."""
+    from bloom_filters_spark.operators.pairs import candidate_pairs
+    from bloom_filters_spark.pipeline import (
+        NearDupConfig,
+        lsh_bands,
+        signatures,
+    )
+
+    cfg = NearDupConfig(threshold=0.7, num_hashes=128, bands=64)
+    docs = _docs(spark, sf_dir)
+    # candidates via the Arrow signature kernel and its band rows
+    bands = lsh_bands(signatures(docs, cfg), cfg)
+    cands = candidate_pairs(bands, 4096).persist()
+    return _string_jaccard_pairs(docs, cands, cfg)
 
 
 def q_dedup_keep_best(spark, sf_dir):
@@ -153,7 +160,6 @@ def q_incremental_near_dup(spark, sf_dir):
     against itself); verify uses string shingle sets so the DuckDB
     all-cross-pairs oracle replicates bit-for-bit (bands=64/r=2 makes
     candidate recall ~certain, as in near_dup_pairs_exact)."""
-    from bloom_filters_spark.operators.shingles import string_shingle_sets_udf
     from bloom_filters_spark.pipeline import (
         NearDupConfig,
         incremental_candidates,
@@ -164,36 +170,7 @@ def q_incremental_near_dup(spark, sf_dir):
     new = docs.filter(F.col("doc_id") % 10 == 5)
     corpus = docs.filter(F.col("doc_id") % 10 != 5)
     cands = incremental_candidates(new, corpus, cfg).persist()
-    ids = (
-        cands.select(F.col("id1").alias("doc_id"))
-        .unionByName(cands.select(F.col("id2").alias("doc_id")))
-        .distinct()
-    )
-    par = spark.sparkContext.defaultParallelism
-    sh_udf = string_shingle_sets_udf(cfg.shingle_size)
-    sets = docs.join(ids, "doc_id", "left_semi").repartition(
-        par, "doc_id"
-    ).select(
-        "doc_id", sh_udf(F.col("text")).alias("sh"),
-    ).filter(F.size("sh") > 0).persist()
-    a = sets.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    b = sets.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    return (
-        cands.join(a, "id1")
-        .join(b, "id2")
-        .select(
-            "id1",
-            "id2",
-            inter.alias("inter"),
-            union.alias("n_union"),
-            F.round(inter.cast("double") / union.cast("double"), 6).alias(
-                "jaccard"
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.7)
-    )
+    return _string_jaccard_pairs(docs, cands, cfg)
 
 
 def q_pages_near_dup_urls(spark, sf_dir):

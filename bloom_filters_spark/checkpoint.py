@@ -117,16 +117,22 @@ def read_manifest(stage_dir: str) -> dict | None:
     return man if isinstance(man, dict) else None
 
 
-def write_manifest(stage_dir: str, payload: dict):
-    os.makedirs(stage_dir, exist_ok=True)
-    tmp = _manifest_path(stage_dir) + ".tmp"
+def publish_json(path: str, payload: dict):
+    """Write ``payload`` to ``path`` crash-safely: a crash at any point
+    leaves the old file (or none), never a torn one."""
+    tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
         # durable before it is published: a crash after the rename
-        # must not leave a manifest whose bytes never reached the disk
+        # must not leave a file whose bytes never reached the disk
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(stage_dir))  # atomic publish
+    os.replace(tmp, path)  # atomic publish
+
+
+def write_manifest(stage_dir: str, payload: dict):
+    os.makedirs(stage_dir, exist_ok=True)
+    publish_json(_manifest_path(stage_dir), payload)
 
 
 def config_fingerprint(cfg: NearDupConfig) -> str:

@@ -22,12 +22,18 @@ This module instead runs ``mapInArrow`` over the raw Arrow buffers:
   flat int32 signature buffer → Arrow ListArray.
 
 The MinHash semantics are the reference's ``sig[i] = min((a_i*x + b_i)
-mod c)`` (``/root/reference/src/sketch/min-hash.ts:34-36,94-110``);
-only the *shingle → integer* map differs from the string-shingle oracle
-path (``shingles.shingles_expr``: any deterministic uniform map into
-[0, max_value) preserves the MinHash/Jaccard statistics;
-``arrow_shingle_set_py`` below is the bit-exact Python oracle for this
-one).
+mod c)`` (the reference's ``src/sketch/min-hash.ts:34-36,94-110``).
+Shingling has exactly two implementations: this kernel's hashed
+shingles (``arrow_shingle_set_py`` below is their bit-exact Python
+oracle) and the string shingles of ``shingles.string_shingle_sets_udf``,
+which the DuckDB oracle queries replicate.  Both tokenize the same
+way; any deterministic uniform map into [0, max_value) preserves the
+MinHash/Jaccard statistics.
+
+``batch_token_hashes`` is the one text front end (string buffers →
+token hashes) of every Arrow text kernel: the signature kernel and
+``detect_hot_shingles`` here, ``dedup.simhash_arrow`` and
+``substring.gram_hash_rows``.
 
 Why the Mersenne fold: ``np.remainder`` on int64 uses the scalar divide
 unit and only scales ~0.74 from 8→32 procs on this box, while pure ALU
@@ -134,38 +140,114 @@ def _token_hashes(data: np.ndarray, tok_starts: np.ndarray,
     return acc * P + tok_lens.astype(np.uint64)
 
 
-def _shingle_hashes(tok_hashes: np.ndarray, tok_doc: np.ndarray,
-                    n_docs: int, w: int, max_value: int):
-    """Flat w-token rolling combine → shingle hashes in [0, max_value).
+def _string_array_parts(col: pa.Array):
+    """Zero-copy (offsets int64, data uint8, null_mask|None) of a
+    string/large_string Arrow array."""
+    if pa.types.is_large_string(col.type):
+        off_dtype = np.int64
+    else:
+        off_dtype = np.int32
+    bufs = col.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
+        col.offset: col.offset + len(col) + 1
+    ].astype(np.int64)
+    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else \
+        np.zeros(0, dtype=np.uint8)
+    nulls = None
+    if col.null_count:
+        nulls = np.array(col.is_null())
+    return offsets, data, nulls
+
+
+def batch_token_hashes(text_col: pa.Array):
+    """The text front end of every Arrow text kernel: one string batch
+    → (token hashes uint64, token doc index), tokens in document order.
+
+    ASCII-lowercase the batch's bytes, split on ASCII whitespace, drop
+    the tokens of null rows (a null row's offsets may still span
+    bytes), then hash each token (``token_hash_py`` is the oracle).
+    """
+    offsets, data, nulls = _string_array_parts(text_col)
+    base = offsets[0]
+    d = _ascii_lower(data[base: offsets[-1]].copy())
+    tok_starts, tok_lens, tok_doc = _flat_tokenize(d, offsets - base)
+    if nulls is not None and len(tok_doc):
+        keep = ~nulls[tok_doc]
+        tok_starts, tok_lens, tok_doc = (
+            tok_starts[keep], tok_lens[keep], tok_doc[keep])
+    return _token_hashes(d, tok_starts, tok_lens), tok_doc
+
+
+def _rolling_combine(tok_hashes: np.ndarray, tok_doc: np.ndarray,
+                     n_docs: int, w: int):
+    """Flat w-token rolling combine → raw uint64 gram hashes.
 
     Horner recurrence ``acc = acc*ROLL_PRIME + t`` over each doc's
-    consecutive token hashes; docs with 0 < n_tokens < w yield ONE
-    shingle over all their tokens.  Duplicates are NOT removed — elementwise min is invariant
-    under multiset repeats, so the MinHash signature is unchanged (use
-    ``np.unique`` per doc only when the caller needs shingle SETs).
+    consecutive token hashes; docs with 0 < n_tokens < w yield ONE gram
+    over all their tokens.  Duplicates are NOT removed.
 
-    Returns (sh_hash uint64 in [0,max_value), sh_doc, doc_token_counts).
+    Returns (acc uint64, gram doc index, doc_token_counts).
     """
     n_tok = np.bincount(tok_doc, minlength=n_docs).astype(np.int64)
     first_tok = np.concatenate(([0], np.cumsum(n_tok)[:-1]))
     pos_in_doc = np.arange(len(tok_doc), dtype=np.int64) - first_tok[tok_doc]
     eff_w = np.minimum(n_tok, w)  # per doc
-    # a token starts a shingle iff pos <= n_tok - eff_w (short docs: only pos 0)
-    sh_mask = pos_in_doc <= (n_tok - eff_w)[tok_doc]
-    sh_starts = np.flatnonzero(sh_mask).astype(np.int64)
-    sh_doc = tok_doc[sh_starts]
-    sh_w = eff_w[sh_doc]
+    # a token starts a gram iff pos <= n_tok - eff_w (short docs: only pos 0)
+    starts = np.flatnonzero(pos_in_doc <= (n_tok - eff_w)[tok_doc])
+    g_doc = tok_doc[starts]
+    g_w = eff_w[g_doc]
     P = _U(ROLL_PRIME)
-    acc = np.zeros(len(sh_starts), dtype=np.uint64)
-    if len(sh_starts):
-        for j in range(int(sh_w.max())):
-            alive = sh_w > j
-            acc[alive] = acc[alive] * P + tok_hashes[sh_starts[alive] + j]
+    acc = np.zeros(len(starts), dtype=np.uint64)
+    if len(starts):
+        for j in range(int(g_w.max())):
+            alive = g_w > j
+            acc[alive] = acc[alive] * P + tok_hashes[starts[alive] + j]
+    return acc, g_doc, n_tok
+
+
+def _shingle_hashes(tok_hashes: np.ndarray, tok_doc: np.ndarray,
+                    n_docs: int, w: int, max_value: int):
+    """``_rolling_combine`` reduced into [0, max_value): the MinHash
+    shingle domain.  Elementwise min is invariant under multiset
+    repeats, so the signature needs no per-doc distinct step.
+
+    Returns (sh_hash uint64 in [0,max_value), sh_doc, doc_token_counts).
+    """
+    acc, sh_doc, n_tok = _rolling_combine(tok_hashes, tok_doc, n_docs, w)
     if max_value == 2**31 - 1:
         sh = mod_mersenne31(acc)
     else:
         sh = acc % _U(max_value)
     return sh, sh_doc, n_tok
+
+
+def splitmix64(acc: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer, in place: Horner/multiplicative hashes
+    have weakly-mixed low bits, and SimHash votes and gram-hash keys
+    use every bit."""
+    acc ^= acc >> _U(30)
+    acc *= _U(0xBF58476D1CE4E5B9)
+    acc ^= acc >> _U(27)
+    acc *= _U(0x94D049BB133111EB)
+    acc ^= acc >> _U(31)
+    return acc
+
+
+def distinct_per_doc(doc: np.ndarray, vals: np.ndarray):
+    """Distinct (doc, value) pairs of uint64 ``vals``, sorted by doc
+    then value."""
+    if not len(vals):
+        return doc, vals
+    if int(vals.max()) < 2**32:
+        # values fit beside the batch-local doc index in one uint64 key,
+        # and one sort of it is ~6x faster than the lexsort below
+        key = np.unique((doc.astype(np.uint64) << _U(32)) | vals)
+        return (key >> _U(32)).astype(doc.dtype), key & _U(0xFFFFFFFF)
+    order = np.lexsort((vals, doc))
+    d, v = doc[order], vals[order]
+    keep = np.ones(len(v), dtype=bool)
+    keep[1:] = (d[1:] != d[:-1]) | (v[1:] != v[:-1])
+    return d[keep], v[keep]
 
 
 def _signatures_from_shingles(sh: np.ndarray, sh_doc: np.ndarray,
@@ -202,46 +284,25 @@ def _signatures_from_shingles(sh: np.ndarray, sh_doc: np.ndarray,
     return out
 
 
-def _string_array_parts(col: pa.Array):
-    """Zero-copy (offsets int64, data uint8, null_mask|None) of a
-    string/large_string Arrow array."""
-    if pa.types.is_large_string(col.type):
-        off_dtype = np.int64
-    else:
-        off_dtype = np.int32
-    bufs = col.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-        col.offset: col.offset + len(col) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else \
-        np.zeros(0, dtype=np.uint8)
-    nulls = None
-    if col.null_count:
-        nulls = np.array(col.is_null())
-    return offsets, data, nulls
+def _list_array(flat: np.ndarray, lens: np.ndarray) -> pa.ListArray:
+    """Flat values + per-row lengths → Arrow ListArray."""
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat))
 
 
 def _batch_signatures(ids: np.ndarray, text_col: pa.Array,
                       a, b, c, w, max_value, buf,
                       need_shingles: bool, hot_shingles: np.ndarray | None = None):
-    """One Arrow batch → (ids_kept, sig (n,k) int32, shingle sets|None).
+    """One Arrow batch → (ids_kept, sig (n,k) int32, shingle-set
+    ListArray|None).
 
     ``hot_shingles`` (sorted int64 array) drops boilerplate shingles
     before the MinHash fold — the CMS frequent-shingle pruning stage.
     Docs left with zero shingles after pruning are dropped like empty
     docs (the reference's empty-MinHash guard).
     """
-    offsets, data, nulls = _string_array_parts(text_col)
-    base = offsets[0]
-    d = _ascii_lower(data[base: offsets[-1]].copy())
-    doc_offsets = offsets - base
-    tok_starts, tok_lens, tok_doc = _flat_tokenize(d, doc_offsets)
-    if nulls is not None and len(tok_doc):
-        keep_tok = ~nulls[tok_doc]
-        tok_starts, tok_lens, tok_doc = (
-            tok_starts[keep_tok], tok_lens[keep_tok], tok_doc[keep_tok])
     n_docs = len(ids)
-    th = _token_hashes(d, tok_starts, tok_lens)
+    th, tok_doc = batch_token_hashes(text_col)
     sh, sh_doc, n_tok = _shingle_hashes(th, tok_doc, n_docs, w, max_value)
     if hot_shingles is not None and len(sh):
         cold = ~np.isin(sh.astype(np.int64), hot_shingles)
@@ -252,31 +313,13 @@ def _batch_signatures(ids: np.ndarray, text_col: pa.Array,
         keep &= np.bincount(sh_doc, minlength=n_docs) > 0
     shingle_sets = None
     if need_shingles:
-        counts = np.bincount(sh_doc, minlength=n_docs)
-        bounds = np.concatenate(([0], np.cumsum(counts)))
-        shingle_sets = [
-            np.unique(sh[bounds[i]: bounds[i + 1]]).astype(np.int64)
-            for i in np.flatnonzero(keep)
-        ]
+        # every kept doc has >= 1 shingle and every other doc has none,
+        # so the distinct rows are exactly the kept docs' sets, in order
+        set_doc, sets = distinct_per_doc(sh_doc, sh)
+        shingle_sets = _list_array(
+            sets.astype(np.int64),
+            np.bincount(set_doc, minlength=n_docs)[keep])
     return ids[keep], sig[keep], shingle_sets
-
-
-def _list_array_from_flat(flat: np.ndarray, list_size: int) -> pa.ListArray:
-    n = len(flat) // list_size
-    offsets = pa.array(
-        np.arange(0, (n + 1) * list_size, list_size, dtype=np.int32),
-        type=pa.int32(),
-    )
-    return pa.ListArray.from_arrays(offsets, pa.array(flat))
-
-
-def _ragged_list_array(segments: list[np.ndarray]) -> pa.ListArray:
-    lens = np.fromiter((len(s) for s in segments), dtype=np.int64,
-                       count=len(segments))
-    offsets = pa.array(np.concatenate(([0], np.cumsum(lens))).astype(np.int32))
-    values = (np.concatenate(segments) if segments
-              else np.zeros(0, dtype=np.int64))
-    return pa.ListArray.from_arrays(offsets, pa.array(values))
 
 
 def signatures_arrow(
@@ -321,8 +364,8 @@ def signatures_arrow(
                 hot)
             cols = [pa.array(kept, type=pa.int64())]
             if want_sh:
-                cols.append(_ragged_list_array(sh_sets))
-            cols.append(_list_array_from_flat(sig.reshape(-1), k))
+                cols.append(sh_sets)
+            cols.append(_list_array(sig.reshape(-1), np.full(len(kept), k)))
             yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
     spark_schema = f"{id_col} long, " + (
@@ -511,17 +554,8 @@ def detect_hot_shingles(
         # everything stays in numpy arrays — no per-shingle Python
         vals_parts, cnts_parts = [], []
         for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            offsets, data, nulls = _string_array_parts(batch.column(1))
-            base = offsets[0]
-            d = _ascii_lower(data[base: offsets[-1]].copy())
-            tok_starts, tok_lens, tok_doc = _flat_tokenize(d, offsets - base)
-            if nulls is not None and len(tok_doc):
-                keep = ~nulls[tok_doc]
-                tok_starts, tok_lens, tok_doc = (
-                    tok_starts[keep], tok_lens[keep], tok_doc[keep])
-            th = _token_hashes(d, tok_starts, tok_lens)
-            sh, sh_doc, _ = _shingle_hashes(th, tok_doc, len(ids), w, mv)
+            th, tok_doc = batch_token_hashes(batch.column(1))
+            sh, sh_doc, _ = _shingle_hashes(th, tok_doc, batch.num_rows, w, mv)
             if not len(sh):
                 continue
             if keep_shingles is not None:
@@ -530,9 +564,8 @@ def detect_hot_shingles(
                 if not len(sh):
                     continue
             # doc-frequency semantics: count each (doc, shingle) once
-            key = sh_doc.astype(np.uint64) * _U(2**32) + sh  # sh < 2^31
-            uniq = np.unique(key)
-            vals, cnts = np.unique(uniq & _U(0xFFFFFFFF), return_counts=True)
+            _, uniq = distinct_per_doc(sh_doc, sh)
+            vals, cnts = np.unique(uniq, return_counts=True)
             vals_parts.append(vals.astype(np.int64))
             cnts_parts.append(cnts.astype(np.int64))
         if not vals_parts:

@@ -17,7 +17,6 @@ from bloom_filters_spark.functions.text import (
     doc_fingerprint_expr,
     token_count_expr,
 )
-from bloom_filters_spark.operators.shingles import shingles_expr
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -75,15 +74,11 @@ def ngram_jaccard_pairs(
     prefix_tokens: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = False,
 ) -> DataFrame:
     """Blocked exact n-gram Jaccard: candidate pairs share their first
     ``prefix_tokens`` tokens (cheap deterministic blocking key), then
-    exact Jaccard over w-shingle sets.  Entirely built-ins.
-
-    ``hashed=True`` intersects int64 shingle hashes (8 bytes/shingle —
-    the scale path); default intersects shingle strings (bit-identical
-    to a SQL oracle, no hash-collision caveat).
+    exact Jaccard over w-shingle STRING sets (bit-identical to a SQL
+    oracle, no hash-collision caveat).
 
     Returns (id1, id2, inter, n_union, jaccard) with jaccard rounded 6dp.
     """
@@ -93,29 +88,19 @@ def ngram_jaccard_pairs(
     )
 
     toks = tokens_expr(F.col(text_col))
-    # string path: Arrow-batched UDF (equal to the JVM HOF chain on
-    # ASCII corpora, ~10x faster); hashed path: JVM int64 shingles
-    sh = (
-        shingles_expr(F.col(text_col), w)
-        if hashed
-        else string_shingle_sets_udf(w)(F.col(text_col))
-    )
-    # the shingle-set HOFs are interpreted — spread them across the
-    # cluster first (the parquet scan arrives in few partitions at
-    # bench SFs, serializing the expensive expression work)
+    # Arrow-batched UDF (equal to the JVM HOF chain on ASCII corpora,
+    # ~10x faster); token-less docs get [] and the size filter drops them
+    sh = string_shingle_sets_udf(w)(F.col(text_col))
+    # spread the per-doc shingle work across the cluster first (the
+    # parquet scan arrives in few partitions at bench SFs)
     par = df.sparkSession.sparkContext.defaultParallelism
-    # token gate BEFORE the projection: the hashed shingle expr pads
-    # token-less docs to ONE empty shingle (greatest(n-w+1,1)), which
-    # would report every pair of empty docs as jaccard 1.0 — the
-    # string path yields [] for them, so gate both paths identically
-    prepared = df.repartition(par, id_col).filter(F.size(toks) > 0).select(
+    prepared = df.repartition(par, id_col).select(
         F.col(id_col),
         F.concat_ws(" ", F.slice(toks, 1, prefix_tokens)).alias("blk"),
         sh.alias("sh"),
     ).filter(F.size("sh") > 0)
-    # both join sides scan `prepared`; the shingle-string construction is
-    # interpreted higher-order functions (the price of SQL-oracle-exact
-    # string semantics), so computing it twice doubles the query.
+    # both join sides scan `prepared`, so computing the shingle strings
+    # twice would double the query.
     # localCheckpoint instead of persist: same reuse, but the blocks are
     # GC-cleaned with the DataFrame instead of pinned in the CacheManager
     # for the rest of the session (persist here leaked per invocation)
@@ -182,10 +167,10 @@ def simhash_py(text: str, w: int = 2) -> int:
 
 def simhash_arrow(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", w: int = 2) -> DataFrame:
-    """Arrow-native SimHash: reuses the flat tokenizer / token-hash /
-    rolling-gram kernels from the signature stage, then accumulates the
-    64 bit-votes for ALL docs in a batch with one ``np.add.at`` — no
-    per-doc Python, no string w-grams, no per-gram hash calls.
+    """Arrow-native SimHash: reuses the signature stage's text front
+    end (``batch_token_hashes``) and rolling combine, then accumulates
+    the 64 bit-votes for ALL docs in a batch with segment reductions —
+    no per-doc Python, no string w-grams, no per-gram hash calls.
 
     Semantics: per doc, the DISTINCT w-gram hashes vote ±1 on each of
     64 bits; sign of the vote total forms the signature bit (standard
@@ -197,64 +182,29 @@ def simhash_arrow(df: DataFrame, id_col: str = "doc_id",
     import pyarrow as pa
 
     from bloom_filters_spark.operators.arrow_sig import (
-        _flat_tokenize,
-        _token_hashes,
-        _ascii_lower,
-        _string_array_parts,
+        _rolling_combine,
+        batch_token_hashes,
+        distinct_per_doc,
+        splitmix64,
     )
-    from bloom_filters_spark.operators.shingles import ROLL_PRIME
 
-    P = np.uint64(ROLL_PRIME)
     shifts = np.arange(64, dtype=np.uint64)
     pows2 = (np.uint64(1) << shifts)
 
     def compute(batches):
         for batch in batches:
             ids = batch.column(0).to_numpy(zero_copy_only=False)
-            offsets, data, nulls = _string_array_parts(batch.column(1))
-            base = offsets[0]
-            d = _ascii_lower(data[base: offsets[-1]].copy())
-            doc_offsets = offsets - base
-            ts, tl, td = _flat_tokenize(d, doc_offsets)
-            if nulls is not None and len(td):
-                keep_tok = ~nulls[td]
-                ts, tl, td = ts[keep_tok], tl[keep_tok], td[keep_tok]
             n_docs = len(ids)
-            th = _token_hashes(d, ts, tl)
+            th, td = batch_token_hashes(batch.column(1))
             # rolling w-gram combine (docs shorter than w yield one gram)
-            n_tok = np.bincount(td, minlength=n_docs).astype(np.int64)
-            first = np.concatenate(([0], np.cumsum(n_tok)[:-1]))
-            pos = np.arange(len(td), dtype=np.int64) - first[td]
-            eff_w = np.minimum(n_tok, w)
-            gmask = pos <= (n_tok - eff_w)[td]
-            gstart = np.flatnonzero(gmask)
-            gdoc = td[gstart]
-            gw = eff_w[gdoc]
-            acc = np.zeros(len(gstart), dtype=np.uint64)
-            for j in range(int(gw.max()) if len(gw) else 0):
-                alive = gw > j
-                acc[alive] = acc[alive] * P + th[gstart[alive] + j]
-            # finalize: Horner/multiplicative hashes have weakly-mixed
-            # low bits; SimHash consumes every bit as an independent
-            # vote, so run a splitmix64-style avalanche first (without
-            # it, correlated low bits produced ~10x spurious pairs)
-            acc ^= acc >> np.uint64(30)
-            acc *= np.uint64(0xBF58476D1CE4E5B9)
-            acc ^= acc >> np.uint64(27)
-            acc *= np.uint64(0x94D049BB133111EB)
-            acc ^= acc >> np.uint64(31)
-            # per-doc DISTINCT grams: sort by (doc, hash), drop run-dups
-            if len(acc):
-                order = np.lexsort((acc, gdoc))
-                gd, ga = gdoc[order], acc[order]
-                keep = np.ones(len(ga), dtype=bool)
-                keep[1:] = (gd[1:] != gd[:-1]) | (ga[1:] != ga[:-1])
-                gd, ga = gd[keep], ga[keep]
-            else:
-                gd, ga = gdoc, acc
+            acc, gdoc, _ = _rolling_combine(th, td, n_docs, w)
+            # SimHash consumes every bit as an independent vote, so the
+            # grams are avalanched first (without it, correlated low
+            # bits produced ~10x spurious pairs)
+            gd, ga = distinct_per_doc(gdoc, splitmix64(acc))
             votes = np.zeros((n_docs, 64), dtype=np.int64)
             if len(ga):
-                # gd is sorted (lexsort above): per-doc bit-vote totals
+                # gd is sorted (distinct_per_doc): per-doc bit-vote totals
                 # as 64 CONTIGUOUS 1-D segment reductions — 20x faster
                 # than np.add.at's random scatter into (n_docs, 64), and
                 # far faster than axis-0 reduceat on the strided 2-D bit
@@ -282,11 +232,6 @@ def simhash_arrow(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def simhash_table(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", w: int = 2) -> DataFrame:
-    return simhash_arrow(df, id_col, text_col, w)
-
-
 def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """SimHash near-dup pairs via the 4-block pigeonhole trick: split the
@@ -298,7 +243,7 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
     Token-less docs (empty/whitespace/null text) are dropped first:
     they would all hash to signature 0 and report every mutual pair as
     a hamming-0 duplicate (and pile into one hot join group)."""
-    sims = simhash_table(
+    sims = simhash_arrow(
         df.filter(token_count_expr(F.col(text_col)) > 0), id_col, text_col
     )
     blocks = sims.select(

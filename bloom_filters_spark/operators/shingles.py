@@ -1,14 +1,21 @@
-"""Shingling: text → hashed w-shingle sets, entirely JVM-side.
+"""Shingling: text → w-word shingles.
 
 The reference's MinHash consumes *numbers*; mapping a document to a set
-of numbers is the caller's job (``/root/reference/README.md:345``,
-``src/sketch/min-hash.ts:83``).  We map text → w-word shingles →
-``pmod(xxhash64(shingle), c)`` ∈ [0, c) — all with built-in Spark SQL
-functions so the whole stage is whole-stage-codegen'd, no Python.
+of numbers is the caller's job (the reference's ``README.md:345``,
+``src/sketch/min-hash.ts:83``).  Shingling has exactly two
+implementations, and both tokenize the same way (ASCII whitespace,
+ASCII-only lowercase):
 
-``xxhash64`` (seed 42) is bit-reproducible in our Python kernel
-(``bloom_filters_spark.hashing.xxh64(b, 42)``), so oracles and
-driver-side parity checks can recompute shingle hashes exactly.
+* the production kernel, ``arrow_sig``: Arrow text buffers → hashed
+  w-shingles in [0, c) → MinHash signatures, with
+  ``arrow_sig.arrow_shingle_set_py`` as its bit-exact Python oracle;
+* the oracle path here, ``string_shingle_sets_udf``: the w-shingle
+  STRINGS, whose set sizes the DuckDB oracle queries replicate
+  bit-for-bit.
+
+``tokens_expr`` and ``shingle_strings_expr`` are the JVM expressions
+the string shingles are checked against; ``F.lower`` is Unicode, so
+they agree with the two implementations on ASCII text only.
 """
 
 from __future__ import annotations
@@ -22,10 +29,9 @@ from pyspark.sql import functions as F
 DEFAULT_MAX_VALUE = 2**31 - 1
 
 
-def tokens_expr(text: Column, lowercase: bool = True) -> Column:
-    """Whitespace tokens, empties removed."""
-    t = F.lower(text) if lowercase else text
-    return F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
+def tokens_expr(text: Column) -> Column:
+    """Lowercased whitespace tokens, empties removed."""
+    return F.filter(F.split(F.lower(text), r"\s+"), lambda x: x != F.lit(""))
 
 
 def shingle_strings_expr(toks: Column, w: int) -> Column:
@@ -38,30 +44,14 @@ def shingle_strings_expr(toks: Column, w: int) -> Column:
     return F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, w)))
 
 
-def shingles_expr(
-    text: Column,
-    w: int = 3,
-    max_value: int = DEFAULT_MAX_VALUE,
-    lowercase: bool = True,
-) -> Column:
-    """text → distinct array<long> of shingle hashes in [0, max_value).
-
-    MinHash is set-based (the reference folds a *set* of numbers), hence
-    ``array_distinct``.
-    """
-    strs = shingle_strings_expr(tokens_expr(text, lowercase), w)
-    hashed = F.transform(strs, lambda s: F.pmod(F.xxhash64(s), F.lit(max_value)))
-    return F.array_distinct(hashed)
-
-
 def string_shingle_sets_udf(w: int, strict: bool = False):
     """Arrow-batched pandas UDF: text → order-preserving-distinct w-gram
     STRING array, semantically identical to
     ``array_distinct(shingle_strings_expr(tokens_expr(text), w))`` but
     ~10x faster (the JVM higher-order slice/concat chain is interpreted
     per element).  Tokenization is ASCII whitespace + ASCII-only
-    lowercase — BYTE-IDENTICAL to the Arrow candidate kernels
-    (``_ascii_lower`` + ``_flat_tokenize``), so a pair the candidate
+    lowercase — BYTE-IDENTICAL to the Arrow kernels' text front end
+    (``arrow_sig.batch_token_hashes``), so a pair the candidate
     pass can produce is exactly a pair this verify tokenizer accepts
     (a Unicode ``str.lower()``/``\\s`` here would admit pairs the
     ASCII candidate hashing can never generate — a silent recall gap
@@ -113,43 +103,3 @@ def string_shingle_sets_udf(w: int, strict: bool = False):
 # 64-bit golden-ratio odd constant: the w-token rolling-hash multiplier
 # of the Arrow shingle combine (arrow_sig), dedup and substring
 ROLL_PRIME = 0x9E3779B97F4A7C15
-
-
-def shingle_hash_py(shingle: str, max_value: int = DEFAULT_MAX_VALUE) -> int:
-    """Python oracle for one shingle hash — bit-equal to the JVM column.
-
-    ``pmod(xxhash64(s), m)`` where xxhash64 is Spark's seed-42 XXH64 over
-    UTF-8 bytes, interpreted as SIGNED int64 (pmod of the signed value).
-    """
-    from bloom_filters_spark.hashing import xxh64
-
-    h = xxh64(shingle.encode("utf-8"), 42)
-    signed = h - (1 << 64) if h >= (1 << 63) else h
-    return signed % max_value
-
-
-def shingle_set_py(
-    text: str,
-    w: int = 3,
-    max_value: int = DEFAULT_MAX_VALUE,
-    lowercase: bool = True,
-) -> list[int]:
-    """Python oracle for the full shingles_expr column (order-preserving
-    distinct, like array_distinct)."""
-    import re
-
-    # match the JVM column EXACTLY: F.lower is Unicode (like Python
-    # str.lower()) but Java \s is ASCII-only — so split on the ASCII
-    # whitespace class (Python's \s would split NBSP/U+2028 where the
-    # JVM keeps them inside a token)
-    t = text.lower() if lowercase else text
-    toks = [x for x in re.split("[ \t\n\x0b\x0c\r]+", t) if x != ""]
-    n = len(toks)
-    n_shingles = max(n - w + 1, 1)
-    out, seen = [], set()
-    for i in range(n_shingles):
-        h = shingle_hash_py(" ".join(toks[i : i + w]), max_value)
-        if h not in seen:
-            seen.add(h)
-            out.append(h)
-    return out

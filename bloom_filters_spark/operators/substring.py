@@ -42,10 +42,9 @@ def gram_hash_rows(df: DataFrame, L: int = 8, id_col: str = "doc_id",
     import pyarrow as pa
 
     from bloom_filters_spark.operators.arrow_sig import (
-        _ascii_lower,
-        _flat_tokenize,
-        _string_array_parts,
-        _token_hashes,
+        batch_token_hashes,
+        distinct_per_doc,
+        splitmix64,
     )
 
     P = np.uint64(ROLL_PRIME)
@@ -53,40 +52,17 @@ def gram_hash_rows(df: DataFrame, L: int = 8, id_col: str = "doc_id",
     def compute(batches):
         for batch in batches:
             ids = batch.column(0).to_numpy(zero_copy_only=False)
-            offsets, data, nulls = _string_array_parts(batch.column(1))
-            base = offsets[0]
-            d = _ascii_lower(data[base: offsets[-1]].copy())
-            doc_offsets = offsets - base
-            ts, tl, td = _flat_tokenize(d, doc_offsets)
-            if nulls is not None and len(td):
-                keep_tok = ~nulls[td]
-                ts, tl, td = ts[keep_tok], tl[keep_tok], td[keep_tok]
-            n_docs = len(ids)
-            th = _token_hashes(d, ts, tl)
-            n_tok = np.bincount(td, minlength=n_docs).astype(np.int64)
+            th, td = batch_token_hashes(batch.column(1))
+            n_tok = np.bincount(td, minlength=len(ids)).astype(np.int64)
             first = np.concatenate(([0], np.cumsum(n_tok)[:-1]))
             pos = np.arange(len(td), dtype=np.int64) - first[td]
             gmask = pos <= (n_tok[td] - L)  # strict: n<L docs emit nothing
             gstart = np.flatnonzero(gmask)
             gdoc = td[gstart]
             acc = np.zeros(len(gstart), dtype=np.uint64)
-            with np.errstate(over="ignore"):
-                for j in range(L):
-                    acc = acc * P + th[gstart + j]
-                # splitmix64 finalizer: Horner low bits are weakly mixed
-                acc ^= acc >> np.uint64(30)
-                acc *= np.uint64(0xBF58476D1CE4E5B9)
-                acc ^= acc >> np.uint64(27)
-                acc *= np.uint64(0x94D049BB133111EB)
-                acc ^= acc >> np.uint64(31)
-            if len(acc):
-                order = np.lexsort((acc, gdoc))
-                gd, ga = gdoc[order], acc[order]
-                keep = np.ones(len(ga), dtype=bool)
-                keep[1:] = (gd[1:] != gd[:-1]) | (ga[1:] != ga[:-1])
-                gd, ga = gd[keep], ga[keep]
-            else:
-                gd, ga = gdoc, acc
+            for j in range(L):
+                acc = acc * P + th[gstart + j]
+            gd, ga = distinct_per_doc(gdoc, splitmix64(acc))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids[gd]), pa.array(ga.view(np.int64))],
                 names=[id_col, "gram_hash"],

@@ -40,6 +40,10 @@ from bloom_filters_spark.operators.pairs import (
 from bloom_filters_spark.operators.shingles import DEFAULT_MAX_VALUE
 from bloom_filters_spark.sketches.minhash import MinHashFactory
 
+# exact_prededup="auto" collapses only when the HLL-estimated exact-dup
+# rate exceeds this fraction
+PREDEDUP_MIN_RATE = 0.05
+
 
 @dataclass
 class NearDupConfig:
@@ -62,7 +66,7 @@ class NearDupConfig:
     # HLL-gated exact pre-dedup: estimate distinct text fingerprints
     # with native HLL++ (approx_count_distinct — one map-side-combined
     # scan); when the estimated exact-duplicate rate exceeds
-    # prededup_min_rate, collapse byte-identical (normalized) texts to
+    # PREDEDUP_MIN_RATE, collapse byte-identical (normalized) texts to
     # one representative before MinHash/LSH and re-expand afterwards.
     # Web corpora are commonly 30-50% exact dups — collapsing first
     # saves that fraction of signature compute and shrinks hot bands.
@@ -74,7 +78,6 @@ class NearDupConfig:
     # identical either way.)  "auto" | "on" | "off"; default off,
     # pages_near_dup opts into "auto".
     exact_prededup: str = "off"
-    prededup_min_rate: float = 0.05
     # candidate-pair exchange strategy (operators/pairs.py):
     # "grouped" — one shuffle straight to collect_list (fastest when the
     # band exchange fits executor memory comfortably);
@@ -184,7 +187,7 @@ def collapse_exact_dups(df: DataFrame, cfg: NearDupConfig,
             F.approx_count_distinct("_fp").alias("d"),
         ).first()
         n, d = row["n"], row["d"]
-        if n == 0 or d >= (1.0 - cfg.prededup_min_rate) * n:
+        if n == 0 or d >= (1.0 - PREDEDUP_MIN_RATE) * n:
             return df, None
     rep = fps.filter(F.col("_fp").isNotNull()).groupBy("_fp").agg(
         F.min(id_col).alias("_rep")

@@ -153,6 +153,8 @@ def run_incremental_near_dup(
     # compact_epochs; an object-store deployment swaps in its client.)
     import json as _json
 
+    from bloom_filters_spark.checkpoint import publish_json
+
     cfg_fields = {
         "shingle_size": cfg.shingle_size,
         "num_hashes": cfg.num_hashes,
@@ -217,8 +219,7 @@ def run_incremental_near_dup(
                 "or point at a fresh store_dir"
             )
     else:
-        with open(sidecar, "w") as fh:
-            _json.dump(cfg_fields, fh)
+        publish_json(sidecar, cfg_fields)
 
     def _epoch_dir(base: str, epoch_id: int) -> str:
         return os.path.join(base, f"epoch={int(epoch_id)}")
@@ -286,7 +287,8 @@ def compact_epochs(spark, store_base: str, below_epoch: int) -> int:
     underscore-prefixed paths are invisible to readers:
 
     1. write the merged rows to ``_compacting`` and then a
-       ``_compact_manifest.json`` marker — readers still see the
+       ``_compact_manifest.json`` marker (tmp + fsync + rename, so a
+       torn marker is never published) — readers still see the
        original epoch directories;
     2. overwrite ``epoch=<below_epoch-1>`` from ``_compacting``, delete
        the older epoch directories, then the marker and the temp dir.
@@ -302,6 +304,8 @@ def compact_epochs(spark, store_base: str, below_epoch: int) -> int:
     import os
     import re
     import shutil
+
+    from bloom_filters_spark.checkpoint import publish_json
 
     if below_epoch < 1:
         raise ValueError(f"below_epoch must be >= 1, got {below_epoch}")
@@ -329,8 +333,7 @@ def compact_epochs(spark, store_base: str, below_epoch: int) -> int:
             .drop("epoch")
         )
         merged.write.mode("overwrite").parquet(tmp)
-        with open(manifest, "w") as fh:
-            json.dump({"below_epoch": int(below_epoch)}, fh)
+        publish_json(manifest, {"below_epoch": int(below_epoch)})
 
     target = os.path.join(store_base, f"epoch={int(below_epoch) - 1}")
     spark.read.parquet(tmp).write.mode("overwrite").parquet(target)

@@ -30,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from dataclasses import asdict
 
 
 def main():
@@ -174,8 +175,7 @@ def main():
         **counts,
         **({"curation": curation} if curation else {}),
         "wall_sec": round(time.time() - t0, 2),
-        "config": {k: getattr(args, k) for k in
-                   ("threshold", "num_hashes", "bands", "shingle_size")},
+        "config": asdict(cfg),
     }
     line = json.dumps(metrics)
     print(line)

@@ -10,6 +10,7 @@ deterministic shingle→int map.
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -23,6 +24,7 @@ from bloom_filters_spark.operators.arrow_sig import (
     arrow_shingle_multiset_py,
     arrow_shingle_set_py,
     arrow_tokens_py,
+    batch_token_hashes,
     mod_mersenne31,
     token_hash_py,
 )
@@ -88,6 +90,36 @@ def test_token_hashes_match_oracle():
     th = _token_hashes(d, ts, tl)
     for s, n, h in zip(ts, tl, th):
         assert token_hash_py(bytes(d[s: s + n])) == int(h)
+
+
+def test_batch_token_hashes_sliced_array():
+    """The text front end every Arrow kernel shares, on sliced arrays
+    (offset != 0) of both string widths: a null, an empty string,
+    whitespace only and non-ASCII text give the oracle's token hashes,
+    and a null row whose offsets span bytes gives none."""
+
+    def want(t):
+        return [] if t is None else [
+            token_hash_py(tok) for tok in arrow_tokens_py(t)]
+
+    texts = ["cut head", None, "", " \t\n ", "Ünïcode TËXT straße ÅB",
+             "Plain ASCII words", "cut tail"]
+    for typ in (pa.string(), pa.large_string()):
+        arr = pa.array(texts, type=typ).slice(1, 5)
+        assert arr.offset == 1
+        th, td = batch_token_hashes(arr)
+        for i, t in enumerate(texts[1:6]):
+            assert th[td == i].tolist() == want(t), (typ, t)
+
+    data = b"Head doc" + b"hidden TEXT" + b"Last one"
+    offsets = np.array([0, 8, 19, 27], dtype=np.int32)
+    validity = pa.array([True, False, True]).buffers()[1]
+    arr = pa.StringArray.from_buffers(
+        3, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data), validity,
+        null_count=1).slice(1)
+    th, td = batch_token_hashes(arr)
+    assert td.tolist() == [1, 1]
+    assert th.tolist() == want("Last one")
 
 
 def test_shingle_hashes_match_oracle():

@@ -6,8 +6,11 @@ import json
 import os
 import subprocess
 import sys
+from dataclasses import asdict
 
 import pytest
+
+from bloom_filters_spark.pipeline import NearDupConfig
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOCS = "/root/testdata/sf0.001/documents.parquet"
@@ -97,6 +100,8 @@ def test_near_dup_job_with_curation(tmp_path):
     assert 0 < cur["after_sample"] < 500
     assert m["rows"] == cur["after_sample"]
     assert m["clusters"] <= m["rows"]
+    # the metrics name the config that ran, job defaults included
+    assert m["config"] == asdict(NearDupConfig(exact_prededup="auto"))
 
 
 def test_near_dup_job_against(spark, tmp_path):
@@ -140,6 +145,8 @@ def test_near_dup_job_checkpoint_with_pruning_and_prededup(spark, tmp_path):
                  "--checkpoint-root", str(tmp_path / "ckpt"),
                  "--checkpoint-buckets", "4")
     assert m["rows"] == 500
+    assert m["config"] == asdict(NearDupConfig(boilerplate_max_df=0.5,
+                                               exact_prededup="on"))
     assert os.path.exists(tmp_path / "ckpt" / "signatures" / "_manifest.json")
 
     def clusters(path):

@@ -219,7 +219,7 @@ def test_simhash_arrow_matches_python_oracle(spark):
     """The production mapInArrow SimHash kernel must be bit-equal to the
     scalar first-principles oracle (simhash_py) on messy inputs —
     empty, whitespace-only, single-token, unicode, long-token docs."""
-    from bloom_filters_spark.operators.dedup import simhash_py, simhash_table
+    from bloom_filters_spark.operators.dedup import simhash_py, simhash_arrow
 
     texts = [
         "The quick brown Fox jumps over the lazy dog",
@@ -235,7 +235,7 @@ def test_simhash_arrow_matches_python_oracle(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = {r["doc_id"]: r["simhash"] for r in simhash_table(df).collect()}
+    got = {r["doc_id"]: r["simhash"] for r in simhash_arrow(df).collect()}
     for i, t in enumerate(texts):
         assert got[i] == simhash_py(t), (i, t[:40])
 
@@ -247,7 +247,7 @@ def test_simhash_dup_pairs_match_bruteforce_hamming(spark):
 
     from bloom_filters_spark.operators.dedup import (
         simhash_dup_pairs,
-        simhash_table,
+        simhash_arrow,
     )
 
     rng = np.random.default_rng(5)
@@ -263,7 +263,7 @@ def test_simhash_dup_pairs_match_bruteforce_hamming(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     sims = {r["doc_id"]: r["simhash"] & 0xFFFFFFFFFFFFFFFF
-            for r in simhash_table(df).collect()}
+            for r in simhash_arrow(df).collect()}
     want = {
         (a, b)
         for a, b in itertools.combinations(sorted(sims), 2)

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
-from bloom_filters_spark.operators.shingles import shingle_set_py, shingles_expr
 from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -58,28 +57,6 @@ def union_find_clusters(ids, pairs):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {i: find(i) for i in ids}
-
-
-# ---------------------------------------------------------------------------
-# unit: JVM expressions match python oracles
-# ---------------------------------------------------------------------------
-
-def test_shingles_jvm_matches_python(spark):
-    texts = [
-        "The quick  brown Fox jumps över the lazy dog",
-        "one two",
-        "single",
-        "  leading and trailing  ",
-        "repeat repeat repeat repeat repeat",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "id long, text string")
-    got = {
-        r["id"]: r["s"]
-        for r in df.select("id", shingles_expr(F.col("text"), 3).alias("s")).collect()
-    }
-    for i, t in enumerate(texts):
-        assert got[i] == shingle_set_py(t, 3), f"text {i!r}"
 
 
 # ---------------------------------------------------------------------------

@@ -180,6 +180,83 @@ def test_incremental_near_dup_refuses_boilerplate_pruning(spark, tmp_path):
     assert not spark.streams.active
 
 
+def _torn_json_dump(obj, fp, **kw):
+    """json.dump that dies part-way through its write."""
+    fp.write(json.dumps(obj, **kw)[:7])
+    fp.flush()
+    raise OSError("simulated crash mid-write")
+
+
+def test_store_config_torn_write_then_restart(spark, tmp_path, monkeypatch):
+    """A crash while the store's config sidecar is written leaves no
+    torn sidecar: the restart creates it and runs, and the published
+    sidecar still refuses a changed config."""
+    import numpy as np
+
+    from bloom_filters_spark.pipeline import NearDupConfig
+    from bloom_filters_spark.streaming.dedup import run_incremental_near_dup
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    pdf = generate_pages_pdf(np.arange(20), seed=3)
+    spark.createDataFrame(pdf, PAGES_SCHEMA).write.parquet(src + "/b1")
+    static = spark.read.parquet(src + "/*")
+    stream = (
+        spark.readStream.schema(static.schema)
+        .parquet(src + "/*")
+        .select("doc_id", "text")
+    )
+    store = str(tmp_path / "store")
+    cfg = NearDupConfig(threshold=0.8)
+    monkeypatch.setattr(json, "dump", _torn_json_dump)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_incremental_near_dup(spark, stream, cfg, store,
+                                 checkpoint_dir=str(tmp_path / "ckpt"))
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(store, "_store_config.json"))
+
+    q = run_incremental_near_dup(spark, stream, cfg, store,
+                                 checkpoint_dir=str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    q.stop()
+    assert spark.read.parquet(store + "/signatures").count() == 20
+    with open(os.path.join(store, "_store_config.json")) as fh:
+        assert json.load(fh)["num_hashes"] == cfg.num_hashes
+    with pytest.raises(ValueError, match="different config"):
+        run_incremental_near_dup(
+            spark, stream, NearDupConfig(threshold=0.8, num_hashes=64,
+                                         bands=16),
+            store, checkpoint_dir=str(tmp_path / "ckpt2"),
+        )
+
+
+def test_compact_epochs_torn_marker_then_rerun(spark, tmp_path, monkeypatch):
+    """A crash while compact_epochs writes its marker leaves no torn
+    marker: the store reads as before, and the re-run compacts."""
+    from bloom_filters_spark.streaming.dedup import compact_epochs
+
+    base = str(tmp_path / "bands")
+    rows = [(i, i * 7, i % 4) for i in range(40)]
+    spark.createDataFrame(rows, "doc_id long, v long, epoch int") \
+        .write.partitionBy("epoch").parquet(base)
+
+    def content():
+        return sorted(map(tuple, spark.read.parquet(base).collect()))
+
+    before = content()
+    monkeypatch.setattr(json, "dump", _torn_json_dump)
+    with pytest.raises(OSError, match="simulated crash"):
+        compact_epochs(spark, base, 3)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(base, "_compact_manifest.json"))
+    assert content() == before
+
+    assert compact_epochs(spark, base, 3) == 3  # epochs 0-2 → epoch=2
+    assert content() == sorted((d, v, max(e, 2)) for d, v, e in before)
+    assert {n for n in os.listdir(base) if n.startswith("epoch=")} \
+        == {"epoch=2", "epoch=3"}
+
+
 def test_incremental_near_dup_within_batch_pairs(spark, tmp_path):
     """Two near-dups arriving in the SAME micro-batch must be paired —
     the new bands self-join, not only the new×old store join."""

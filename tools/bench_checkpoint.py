@@ -15,9 +15,9 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+from bench_scaling import CORPUS, ROOT, ensure_corpus
 
-from bench_scaling import CORPUS, ensure_corpus  # noqa: E402
+sys.path.insert(0, ROOT)
 
 
 def main():
@@ -166,7 +166,7 @@ What IS evidenced instead:
   paths make (`overwrite` + `partitionBy`), which Iceberg's Spark
   writer maps to snapshot-replace commits.
 """
-    with open("/root/repo/BENCH/CHECKPOINT.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "CHECKPOINT.md"), "w") as f:
         f.write(md)
     print("wrote BENCH/CHECKPOINT.md")
     spark.stop()

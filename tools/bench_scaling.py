@@ -32,12 +32,17 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the per-level subprocesses and their Spark Python workers import the
+# package from this checkout
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+
 N_DOCS_DEFAULT = 200_000
 CORPUS = "/tmp/spark_graft_scaling_corpus"
 
 RUN_TEMPLATE = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 from bloom_filters_spark.session import get_spark
 from bloom_filters_spark.pipeline import NearDupConfig, near_dup_pipeline
 
@@ -78,8 +83,6 @@ def ensure_corpus(n_docs: int):
     if os.path.exists(marker):
         return
     code = f"""
-import sys
-sys.path.insert(0, "/root/repo")
 from bloom_filters_spark.session import get_spark
 from bloom_filters_spark.sources.pages import pages_table
 spark = get_spark("gen", cores=32)
@@ -121,8 +124,8 @@ def main():
         "scaling_efficiency": round(efficiency, 3),
     }
     print(json.dumps(summary, indent=2))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open(f"/root/repo/BENCH/scaling_{lo}_{hi}.json", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", f"scaling_{lo}_{hi}.json"), "w") as f:
         json.dump(summary, f, indent=2)
 
 

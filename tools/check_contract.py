@@ -8,13 +8,18 @@ Usage: python tools/check_contract.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers Spark starts import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

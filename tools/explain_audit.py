@@ -13,11 +13,16 @@ Writes BENCH/PLANS.md.  Usage: python tools/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers Spark starts import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 CHECKS = {
     # query -> (must_contain regexes, must_not_contain regexes)
@@ -239,7 +244,7 @@ def main():
         )
     spark.stop()
 
-    with open("/root/repo/BENCH/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "PLANS.md"), "w") as f:
         f.write(
             "# Physical-plan audit\n\n"
             "`.explain(\"formatted\")` for headline queries with automated\n"
