@@ -71,7 +71,6 @@ from bloom_filters_spark.pipeline import (
     expand_exact_dups,
     hot_shingle_set,
     lsh_bands,
-    resolve_pair_mode,
     signatures,
     verify_candidates,
 )
@@ -163,24 +162,20 @@ class CheckpointedNearDup:
     def _write(self, df: DataFrame, path: str, partition_by: str | None = None):
         w = df.write.mode("overwrite")
         if partition_by:
-            w = w.partitionBy(partition_by)
-        if self.table_format == "parquet":
-            w.parquet(path)
-        else:
-            w.format(self.table_format).save(path)
+            # replace only the partitions this write holds, so completed
+            # buckets stay; a per-write option, so no other writer in the
+            # session sees it
+            w = w.partitionBy(partition_by).option(
+                "partitionOverwriteMode", "dynamic")
+        w.format(self.table_format).save(path)
 
     def _read(self, path: str) -> DataFrame:
-        if self.table_format == "parquet":
-            return self.spark.read.parquet(path)
         return self.spark.read.format(self.table_format).load(path)
 
     # -- stage 1: bucketed signatures -------------------------------------
-    def _sig_dir(self) -> str:
-        return os.path.join(self.ckpt.root, "signatures")
-
     def signatures_stage(self, df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text") -> DataFrame:
-        sig_dir = self._sig_dir()
+        sig_dir = os.path.join(self.ckpt.root, "signatures")
         man = read_manifest(sig_dir)
         # bucket assignment is pmod(hash, n_buckets), so a manifest
         # written under a different n_buckets describes DIFFERENT
@@ -225,11 +220,6 @@ class CheckpointedNearDup:
             sigs = signatures(
                 todo, self.cfg, id_col, text_col, hot_shingles=hot
             ).withColumn("bucket", bucket)
-            overwrite_key = "spark.sql.sources.partitionOverwriteMode"
-            try:
-                prev_mode = self.spark.conf.get(overwrite_key)
-            except Exception:
-                prev_mode = None
             # per-bucket lineage counted on the write itself, after the
             # repartition: the observation runs in the result stage, so
             # a retried map stage cannot count a row twice
@@ -239,14 +229,7 @@ class CheckpointedNearDup:
                 *(F.count_if(F.col("bucket") == b).alias(str(b))
                   for b in missing),
             )
-            self.spark.conf.set(overwrite_key, "dynamic")
-            try:
-                self._write(counted, sig_dir, partition_by="bucket")
-            finally:
-                if prev_mode is None:
-                    self.spark.conf.unset(overwrite_key)
-                else:
-                    self.spark.conf.set(overwrite_key, prev_mode)
+            self._write(counted, sig_dir, partition_by="bucket")
             wall_ms = int((time.time() - t0) * 1000)
             rows = obs.get
             for b in missing:
@@ -277,18 +260,6 @@ class CheckpointedNearDup:
         return self._read(sig_dir).drop("bucket")
 
     # -- stage 2: candidate + verified pairs --------------------------------
-    def _pair_mode(self, sigs: DataFrame) -> str:
-        """``cfg.pair_mode``, with "auto" resolved from the signatures
-        manifest's row counts (no Spark job)."""
-
-        def n_docs() -> int:
-            man = read_manifest(self._sig_dir())
-            if man is None or man.get("fingerprint") != self.fingerprint:
-                return sigs.count()
-            return sum(b["rows"] for b in man["buckets"].values())
-
-        return resolve_pair_mode(self.cfg, n_docs)
-
     def pairs_stage(self, sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         pair_dir = os.path.join(self.ckpt.root, "pairs")
         man = read_manifest(pair_dir)
@@ -299,7 +270,7 @@ class CheckpointedNearDup:
             _, _, pairs = verify_candidates(
                 candidate_pairs(
                     lsh_bands(sigs, self.cfg, id_col), self.cfg.max_band_group,
-                    id_col, mode=self._pair_mode(sigs),
+                    id_col, mode=self.cfg.pair_mode,
                 ),
                 sigs, self.cfg, id_col,
             )

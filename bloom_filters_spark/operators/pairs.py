@@ -57,10 +57,10 @@ def candidate_pairs(bands: DataFrame, max_band_group: int = 64,
             .filter(F.col("grp_n") >= 2)
             .select(*BAND_KEY)
         )
-        # no forced broadcast: this mode is auto-selected exactly at
-        # corpus scales where duplicated hashes are NOT rare (30-50%
-        # web dup rates -> O(10^7+) rows); AQE broadcasts when the set
-        # is actually small and shuffles when it isn't
+        # no forced broadcast: this mode is meant for corpus scales
+        # where duplicated hashes are NOT rare (30-50% web dup rates ->
+        # O(10^7+) rows); AQE broadcasts when the set is actually small
+        # and shuffles when it isn't
         slim = slim.join(dup_hashes, BAND_KEY)
 
     grouped = (

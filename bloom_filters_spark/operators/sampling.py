@@ -138,14 +138,13 @@ def hash_split(
     return df.withColumn(split_col, expr)
 
 
-# auto-presample switch (mirrors pipeline.py pair_mode="auto"): engage
-# the hash-prefix precut once SOME stratum would make the rank window
-# sort more than this many rows in a single task — below it, one task's
-# in-memory sort is cheaper than the precut's extra aggregate + driver
-# histogram.  1.3 retains ~30% headroom over the quota, making the
-# per-stratum shortfall (binomial under-draw) a <1e-9 event at any
-# quota >= ~200 while still cutting a mega-stratum's sort input by
-# quota/N * 1.3.
+# auto-presample switch: engage the hash-prefix precut once SOME
+# stratum would make the rank window sort more than this many rows in a
+# single task — below it, one task's in-memory sort is cheaper than the
+# precut's extra aggregate + driver histogram.  1.3 retains ~30%
+# headroom over the quota, making the per-stratum shortfall (binomial
+# under-draw) a <1e-9 event at any quota >= ~200 while still cutting a
+# mega-stratum's sort input by quota/N * 1.3.
 PRESAMPLE_AUTO_THRESHOLD = 2_000_000
 PRESAMPLE_AUTO_MARGIN = 1.3
 

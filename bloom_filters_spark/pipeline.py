@@ -16,12 +16,11 @@ Verification semantics: ``verify="estimate"`` applies the reference's
 (``/root/reference/src/sketch/min-hash.ts:117-132``) — which is the
 parity target for dup-pair recall.  ``verify="exact"`` uses exact
 Jaccard over shingle sets (the reference's own test oracle,
-``tests/min-hash.test.ts:8-11``).  ``"both"`` returns the two columns.
+``tests/min-hash.test.ts:8-11``).
 """
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
@@ -53,7 +52,7 @@ class NearDupConfig:
     max_value: int = DEFAULT_MAX_VALUE
     seed: int = DEFAULT_SEED         # MinHash param RNG seed
     threshold: float = 0.8           # Jaccard accept threshold
-    verify: str = "estimate"         # estimate | exact | both
+    verify: str = "estimate"         # estimate | exact
     max_band_group: int = 64         # all-pairs cap per LSH band group
     # CMS frequent-shingle (boilerplate) pruning: shingles appearing in
     # more than this fraction of documents are dropped before MinHash —
@@ -79,21 +78,22 @@ class NearDupConfig:
     # pages_near_dup opts into "auto".
     exact_prededup: str = "off"
     # candidate-pair exchange strategy (operators/pairs.py):
-    # "grouped" — one shuffle straight to collect_list (fastest when the
-    # band exchange fits executor memory comfortably);
-    # "count_join" — pre-count band hashes and collect_list only the
-    # duplicated ones (caps per-key buffer state; the band table is
-    # consumed twice);
-    # "auto" — grouped below pair_mode_threshold input rows, count_join
-    # above (collect_list buffer state is the memory risk at corpus
-    # scale, and the second band pass amortizes once the exchange is
-    # large enough to dominate).
-    pair_mode: str = "auto"
-    pair_mode_threshold: int = 2_000_000
+    # "grouped" — one shuffle straight to collect_list (faster at both
+    # measured core counts, BENCH/SCALING.md round 2);
+    # "count_join" — opt-in: pre-count band hashes and collect_list
+    # only the duplicated ones (caps per-key buffer state; the band
+    # table is consumed twice)
+    pair_mode: str = "grouped"
 
     def __post_init__(self):
         if self.num_hashes % self.bands != 0:
             raise ValueError("num_hashes must be divisible by bands")
+        if self.verify not in ("estimate", "exact"):
+            raise ValueError(
+                f"verify must be 'estimate' or 'exact', not {self.verify!r}")
+        if self.pair_mode not in ("grouped", "count_join"):
+            raise ValueError("pair_mode must be 'grouped' or 'count_join', "
+                             f"not {self.pair_mode!r}")
 
     @property
     def rows_per_band(self) -> int:
@@ -120,7 +120,7 @@ def signatures(df: DataFrame, cfg: NearDupConfig, id_col: str = "doc_id",
         df, cfg.factory(),
         shingle_size=cfg.shingle_size, max_value=cfg.max_value,
         id_col=id_col, text_col=text_col,
-        need_shingles=cfg.verify in ("exact", "both"),
+        need_shingles=cfg.verify == "exact",
         hot_shingles=hot_shingles,
     )
 
@@ -130,14 +130,6 @@ def lsh_bands(sigs: DataFrame, cfg: NearDupConfig, id_col: str = "doc_id") -> Da
     from bloom_filters_spark.operators.arrow_sig import bands_arrow
 
     return bands_arrow(sigs, cfg.bands, cfg.rows_per_band, id_col)
-
-
-def resolve_pair_mode(cfg: NearDupConfig, n_docs) -> str:
-    """``cfg.pair_mode`` with "auto" resolved against the corpus size;
-    ``n_docs`` is a callable, only called for "auto"."""
-    if cfg.pair_mode != "auto":
-        return cfg.pair_mode
-    return "count_join" if n_docs() > cfg.pair_mode_threshold else "grouped"
 
 
 def hot_shingle_set(df: DataFrame, cfg: NearDupConfig, n_docs,
@@ -263,8 +255,8 @@ def verified_pairs(
     id_col: str = "doc_id",
     sigs_restricted: bool = False,
 ) -> DataFrame:
-    """Candidate pairs → pairs with jaccard column(s), filtered at
-    cfg.threshold on the decision column.
+    """Candidate pairs → ``(id1, id2, jaccard_est)`` (estimate) or
+    ``(id1, id2, jaccard)`` (exact), filtered at cfg.threshold.
 
     Join strategy: the signature table is first semi-joined down to
     the docs participating in a candidate pair, then joined to the
@@ -281,7 +273,7 @@ def verified_pairs(
     reduced table — still strictly less data than joining the full
     signature table, and its shuffle of the side is reused the same way.
     """
-    need_shingles = cfg.verify in ("exact", "both")
+    need_shingles = cfg.verify == "exact"
     if sigs_restricted:
         # caller already semi-joined sigs down to pair participants
         # (verify_candidates does) — skip the redundant distinct +
@@ -314,26 +306,13 @@ def verified_pairs(
 
     joined = endpoint(endpoint(pairs, 1), 2)
 
-    out_cols = [F.col("id1"), F.col("id2")]
-    est = estimated_jaccard_expr(F.col("sig1"), F.col("sig2"), cfg.num_hashes)
-    if cfg.verify == "estimate":
-        joined = joined.withColumn("jaccard_est", est)
-        decision = F.col("jaccard_est")
-        out_cols.append(F.col("jaccard_est"))
-    elif cfg.verify == "exact":
-        joined = joined.withColumn(
-            "jaccard", exact_jaccard_expr(F.col("sh1"), F.col("sh2"))
-        )
-        decision = F.col("jaccard")
-        out_cols.append(F.col("jaccard"))
-    else:  # both: decide on the exact value, report both
-        joined = joined.withColumn("jaccard_est", est).withColumn(
-            "jaccard", exact_jaccard_expr(F.col("sh1"), F.col("sh2"))
-        )
-        decision = F.col("jaccard")
-        out_cols += [F.col("jaccard"), F.col("jaccard_est")]
-
-    return joined.filter(decision >= F.lit(cfg.threshold)).select(*out_cols)
+    if cfg.verify == "exact":
+        name, value = "jaccard", exact_jaccard_expr(F.col("sh1"), F.col("sh2"))
+    else:
+        name, value = "jaccard_est", estimated_jaccard_expr(
+            F.col("sig1"), F.col("sig2"), cfg.num_hashes)
+    return joined.withColumn(name, value).filter(
+        F.col(name) >= F.lit(cfg.threshold)).select("id1", "id2", name)
 
 
 def _default_url_hash(col, round_: int):
@@ -534,13 +513,6 @@ def near_dup_pipeline(
     # an exchange to it
     n_in = _exchange_free_partitions(df)
 
-    # one memoized corpus count shared by the pair-mode probe and hot-
-    # shingle detection: cheap (footer stats) on a raw parquet scan, but
-    # a full plan execution once df is a derived frame (canonical-url
-    # collapse, prededup) — never pay it twice.  Late-bound `vertices`
-    # on purpose: both consumers run after it is bound below, so they
-    # count the deduplicated frame, without the spreading shuffle.
-    _count = functools.cache(lambda: vertices.count())
     df, doc_rep = collapse_exact_dups(df, cfg, id_col, text_col)
     vertices = df.select(id_col)
     # a small batch is often one file with one row group, so one scan
@@ -556,10 +528,12 @@ def near_dup_pipeline(
     # checkpoint, not a cache, for the reason verify_candidates gives:
     # AQE reuses no broadcast exchange over a cached relation.  Banding
     # and verify read the same rows, so they are pruned with the same
-    # hot-shingle set by construction.
+    # hot-shingle set by construction.  The hot-shingle detection counts
+    # `vertices`: the deduplicated frame, without the spreading shuffle.
     all_sigs = signatures(
         df, cfg, id_col, text_col,
-        hot_shingles=hot_shingle_set(df, cfg, _count, id_col, text_col),
+        hot_shingles=hot_shingle_set(df, cfg, vertices.count, id_col,
+                                     text_col),
     ).localCheckpoint(eager=False)
     bands = lsh_bands(all_sigs, cfg, id_col)
     # the (tiny) verified edge set is cached so the label-propagation
@@ -567,8 +541,7 @@ def near_dup_pipeline(
     # same pass that fills the cache.  At cluster scale this boundary is
     # the pairs checkpoint table (checkpoint.py).
     candidates, sigs, pairs = verify_candidates(
-        candidate_pairs(bands, cfg.max_band_group, id_col,
-                        mode=resolve_pair_mode(cfg, _count)),
+        candidate_pairs(bands, cfg.max_band_group, id_col, mode=cfg.pair_mode),
         all_sigs, cfg, id_col,
     )
     pairs = pairs.persist()
@@ -644,7 +617,7 @@ def near_dup_against(
     the incremental pair stage.  Each side is signed once (one hot-
     shingle set, detected on the corpus), held by a local checkpoint,
     banded from the stored signatures, and verified against those same
-    rows (estimate / exact / both per ``cfg.verify``).  Ids must be
+    rows (estimate or exact per ``cfg.verify``).  Ids must be
     disjoint across the two tables (they address one namespace, as in
     a rolling crawl)."""
     cfg = cfg or NearDupConfig()

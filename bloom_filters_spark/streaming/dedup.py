@@ -113,9 +113,9 @@ def run_incremental_near_dup(
     micro-batch are paired too, not just across batches.  They are
     verified by the batch pipeline's step (``pipeline.verify_candidates``)
     against the new and stored signatures, so the pair columns follow
-    ``cfg.verify``: ``jaccard_est`` (estimate), ``jaccard`` (exact) or
-    both.  The exact modes need shingles in the signature store, so the
-    store pins ``verify`` along with the signature and band parameters.
+    ``cfg.verify``: ``jaccard_est`` (estimate) or ``jaccard`` (exact).
+    Exact mode needs shingles in the signature store, so the store pins
+    ``verify`` along with the signature and band parameters.
 
     Idempotency: every store write lands in an ``epoch=<id>``
     subdirectory with mode=overwrite, and the old-side reads filter to
@@ -165,17 +165,18 @@ def run_incremental_near_dup(
         # 64-bit hashes, or before the width was recorded, would be
         # silently unjoinable, so the check below refuses it
         "band_hash_bits": 32,
-        # "exact" and "both" verify against stored shingles, which an
-        # "estimate" store does not hold
+        # "exact" verifies against stored shingles, which an
+        # "estimate" store does not hold; a store written before verify
+        # was recorded is refused too
         "verify": cfg.verify,
     }
 
-    def _read_prior_epochs(base: str, epoch_id: int | None = None):
+    def _read_prior_epochs(base: str, epoch_id: int):
         """All rows from epochs strictly before ``epoch_id``
-        (replay-safe; every row without one), or None if the store does
-        not exist yet.  Only path-not-found maps to None — any other
-        read failure must raise, or a transient store error would
-        silently drop every cross-epoch candidate for the batch."""
+        (replay-safe), or None if the store does not exist yet.  Only
+        path-not-found maps to None — any other read failure must raise,
+        or a transient store error would silently drop every cross-epoch
+        candidate for the batch."""
         from pyspark.errors import AnalysisException
 
         try:
@@ -185,8 +186,6 @@ def run_incremental_near_dup(
             if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
                 return None
             raise
-        if epoch_id is None:
-            return df
         return df.where(F.col("epoch") < F.lit(int(epoch_id))).drop("epoch")
 
     if cfg.boilerplate_max_df is not None:
@@ -198,17 +197,6 @@ def run_incremental_near_dup(
     if os.path.exists(sidecar):
         with open(sidecar) as fh:
             prior = _json.load(fh)
-        if "verify" not in prior:
-            # a sidecar written before verify was pinned: the store
-            # holds shingles iff it was created with "exact" or "both"
-            # (nothing stored tells those two apart)
-            stored = _read_prior_epochs(sig_store)
-            held = (cfg.verify != "estimate" if stored is None
-                    else "shingles" in stored.columns)
-            prior["verify"] = (
-                cfg.verify if held == (cfg.verify != "estimate")
-                else "exact" if held else "estimate"
-            )
         diff = {k: (prior.get(k), v) for k, v in cfg_fields.items()
                 if prior.get(k) != v}
         if diff:

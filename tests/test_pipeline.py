@@ -119,6 +119,43 @@ def test_pipeline_exact_verify_mode(spark, documents_texts):
         assert true_j >= cfg.threshold
 
 
+@pytest.mark.parametrize("field,value", [("pair_mode", "auto"),
+                                         ("verify", "both")])
+def test_config_refuses_unknown_modes(field, value):
+    """A mode the engine does not run fails loudly, instead of silently
+    running another path."""
+    with pytest.raises(ValueError, match=field):
+        NearDupConfig(**{field: value})
+
+
+def test_default_pipeline_runs_one_count(spark, monkeypatch):
+    """A default-config call runs one ``DataFrame.count``: the
+    candidates' count in ``verify_candidates``, which also materializes
+    their checkpoint.  No corpus count picks the pair exchange."""
+    from bloom_filters_spark import pipeline
+
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text")
+    counted, real_count = [], type(df).count
+
+    def counting(self):
+        counted.append(self)
+        return real_count(self)
+
+    real_verify, in_verify = pipeline.verify_candidates, []
+
+    def recording(*args, **kwargs):
+        before = len(counted)
+        out = real_verify(*args, **kwargs)
+        in_verify.append(len(counted) - before)
+        return out
+
+    monkeypatch.setattr(type(df), "count", counting)
+    monkeypatch.setattr(pipeline, "verify_candidates", recording)
+    pipeline.near_dup_pipeline(df)
+    assert (len(counted), in_verify) == (1, [1])
+
+
 def test_pages_near_dup_url_keyed(spark):
     """input_hint surface: url-keyed pages → (url, cluster_url); planted
     exact copies (odd id = copy of odd-1 at mutation 0.0) must share a

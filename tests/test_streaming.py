@@ -568,7 +568,8 @@ def test_incremental_near_dup_star_links_hot_band(spark, tmp_path):
 def test_incremental_near_dup_exact_verify(spark, tmp_path):
     """verify="exact" decides on exact shingle Jaccard, within a batch
     and against the stored shingles of earlier epochs; a store created
-    in estimate mode refuses an exact-mode restart."""
+    in estimate mode refuses an exact-mode restart, and a store whose
+    sidecar does not record verify refuses any restart."""
     import numpy as np
 
     from bloom_filters_spark.operators.arrow_sig import arrow_shingle_set_py
@@ -604,21 +605,13 @@ def test_incremental_near_dup_exact_verify(spark, tmp_path):
     with pytest.raises(ValueError, match="different config"):
         _run_stream(spark, src, est_store, str(tmp_path / "est_ckpt2"), cfg)
 
-    # sidecars written before verify was pinned: the stored shingles
-    # tell an exact/both store from an estimate one
-    import json
-
-    for st in (store, est_store):
-        path = os.path.join(st, "_store_config.json")
-        with open(path) as fh:
-            side = json.load(fh)
-        del side["verify"]
-        with open(path, "w") as fh:
-            json.dump(side, fh)
-    _run_stream(spark, src, store, str(tmp_path / "ckpt2"),
-                NearDupConfig(threshold=0.7, verify="both"))
+    # a sidecar written before verify was pinned cannot say whether the
+    # store holds shingles: it is refused, even under its own mode
+    path = os.path.join(store, "_store_config.json")
+    with open(path) as fh:
+        side = json.load(fh)
+    del side["verify"]
+    with open(path, "w") as fh:
+        json.dump(side, fh)
     with pytest.raises(ValueError, match="different config"):
-        _run_stream(spark, src, store, str(tmp_path / "ckpt3"),
-                    NearDupConfig(threshold=0.7))
-    with pytest.raises(ValueError, match="different config"):
-        _run_stream(spark, src, est_store, str(tmp_path / "est_ckpt3"), cfg)
+        _run_stream(spark, src, store, str(tmp_path / "ckpt2"), cfg)
